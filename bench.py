@@ -3,8 +3,8 @@
 
 Output contract (r5 structural fix for the 2 KB tail-capture window):
 the final stdout line is a BYTE-BOUNDED JSON object — metric/"value"
-(cold total)/unit/warm_total/sf/n_queries plus the top slowest warm
-queries under "queries", trimmed until the line fits
+(cold total)/unit/warm_total/sf/n_queries plus the top slowest queries
+under "queries" with their WARM times, trimmed until the line fits
 ``STDOUT_BYTE_BUDGET`` (BENCH_r03 was lost to an oversized line; r4's
 full-map line grew with every added query). The full record (cold AND
 warm per-query maps, 3-decimal) is written to ``BENCH_local.json`` next
@@ -12,8 +12,8 @@ to this file; that file is what ``python scripts/bench_diff.py`` should
 read for regression hunting.
 
 Every query runs at least TWICE: the first (cold) run includes plan +
-codegen compile — that's what "queries"/"value" report, keeping
-round-over-round totals comparable — and the warm run isolates
+codegen compile — that's what "value" totals, keeping round-over-round
+totals comparable — and the warm run isolates
 execution time (cold is typically 3-5× warm on sub-second queries;
 memory-noted). Queries whose first warm run lands under 4 s get TWO
 extra warm runs and report the MEDIAN of 3 — timings under ~2.5 s showed

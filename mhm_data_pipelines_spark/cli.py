@@ -244,7 +244,10 @@ def main(argv: Sequence[str] | None = None, spark: SparkSession | None = None) -
         print(f"compacted {args.root} -> {args.out}")
     elif cmd == "overview":
         from mhm_data_pipelines_spark.operators.overview import overview_stats
-        from mhm_data_pipelines_spark.sources.lake import read_lake_unified
+        from mhm_data_pipelines_spark.sources.lake import (
+            _partition_columns,
+            read_lake_unified,
+        )
 
         df = read_lake_unified(
             spark,
@@ -257,14 +260,11 @@ def main(argv: Sequence[str] | None = None, spark: SparkSession | None = None) -
             coalesce_event_time,
         )
 
-        group = {
-            "raw": ["site", "participant_id", "metric"],
-            "merged": ["site", "participant_id", "metric"],
-            "flat": ["participant_id", "metric"],
-        }[args.layout]
         _show(
             overview_stats(
-                df, ts=coalesce_event_time(df.columns), group_cols=group
+                df,
+                ts=coalesce_event_time(df.columns),
+                group_cols=_partition_columns(args.layout),
             ),
             args.limit,
         )

@@ -52,13 +52,6 @@ def distinct_days(ts: Column | str, exact: bool = True, rsd: float = 0.01) -> Co
     return F.approx_count_distinct(d, rsd)
 
 
-def date_range_exprs(ts: Column | str) -> list[Column]:
-    """Earliest/latest observation per group (process-overview.py:117-119,
-    main.py:67-74)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return [F.min(c).alias("start_ts"), F.max(c).alias("end_ts")]
-
-
 def normal_cdf(z: Column | str) -> Column:
     """Standard normal CDF Φ(z) as a pure Column expression — the
     Zelen & Severo rational approximation (Abramowitz & Stegun

@@ -28,16 +28,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
-def word_tokens_bpe_ish(text: Column | str) -> Column:
-    """BPE-ish sub-word-friendly tokenization: split on non-alphanumerics,
-    keeping digit runs and lowercased word pieces (regex analogue of a
-    byte-pair pretokenizer's word-splitting stage)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(
-        F.split(F.lower(c), r"[^a-z0-9]+"), lambda t: t != ""
-    )
-
-
 def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
     toks = tokens(text)
     stops = F.array(*[F.lit(s) for s in stopwords])
@@ -49,16 +39,6 @@ def punct_ratio(text: Column | str) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
     return F.when(F.length(c) > 0, n_punct / F.length(c)).otherwise(F.lit(0.0))
-
-
-def mean_token_length(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def quality_score(text: Column | str) -> Column:

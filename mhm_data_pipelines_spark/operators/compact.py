@@ -11,7 +11,10 @@ description, ``/root/reference/README.md:64-66``; filename-month key
 
 Spark design: ONE job — read every matching file, derive the dimension
 columns from paths (sources.lake), write
-``PARTITIONED BY (site, participant_id, metric)`` parquet. Grouping is
+``PARTITIONED BY (site, participant_id, metric)`` parquet. The partition
+columns are the source layout's dimensions in ``sources.lake.LAYOUTS``
+minus ``top_level`` (a flat lake has no ``site``); this module defines
+no positions or partition lists of its own. Grouping is
 the write partitioning (no driver loop); "merge" is the multi-file read
 itself. The output is the *compacted lake*: real partition columns means
 every downstream include/exclude (P4) becomes partition pruning, and the
@@ -26,15 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mhm_data_pipelines_spark.sources.lake import read_lake_unified
-
-#: Partition layout of the compacted lake, per source-lake layout (the
-#: flat S3-key layout has no site segment — summary.py:125-128).
-COMPACT_PARTITIONS = {
-    "raw": ["site", "participant_id", "metric"],
-    "merged": ["site", "participant_id", "metric"],
-    "flat": ["participant_id", "metric"],
-}
+from mhm_data_pipelines_spark.sources.lake import (
+    _partition_columns,
+    read_lake_unified,
+)
 
 
 def compact_lake(
@@ -58,7 +56,7 @@ def compact_lake(
     df = read_lake_unified(
         spark, raw_root, layout=layout, include=include, exclude=exclude
     )
-    partitions = list(COMPACT_PARTITIONS[layout])
+    partitions = _partition_columns(layout)
     if monthly:
         df = df.withColumn(
             "batch_month", F.date_format("file_timestamp", "yyyy-MM")

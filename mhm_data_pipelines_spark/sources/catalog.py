@@ -13,6 +13,11 @@ small aggregate query (see ``operators.catalog_queries``), the pickle
 cache becomes a parquet checkpoint, and at 100 TB the listing itself is
 distributed (binaryFile/FileIndex listing, or a boto3 inventory read) and
 the catalog is just another partitioned table.
+
+The catalog is also the engine's one lake lister: ``read_lake_unified``
+takes its metric names from it and ``stage_objects`` its file list. Path
+positions come from ``sources.lake.LAYOUTS`` through ``path_dimensions``;
+nothing here defines its own.
 """
 
 from __future__ import annotations
@@ -20,10 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mhm_data_pipelines_spark.functions.timeutils import (
-    filename_shard_index,
-)
-from mhm_data_pipelines_spark.sources.lake import _path_parts
+from mhm_data_pipelines_spark.sources.lake import _root_depth, path_dimensions
 
 
 def build_catalog(
@@ -36,7 +38,9 @@ def build_catalog(
     """List every object under ``root`` → catalog DataFrame.
 
     Columns (FIXTURES.md §6): ``path, user_id, measurement, filename,
-    date, time, shard_index, is_schema, size``.
+    date, time, shard_index, is_schema, size``. ``user_id`` is the
+    participant and ``measurement`` the metric, at the positions
+    ``sources.lake.LAYOUTS`` gives for ``layout``.
 
     Uses the ``binaryFile`` source purely as a distributed *lister*
     (``pathGlobFilter`` none, content column dropped immediately — Spark
@@ -50,21 +54,21 @@ def build_catalog(
         except Exception:
             pass  # cache miss → list
 
+    root = root.rstrip("/")
     listing = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
-        .load(root.rstrip("/"))
+        .load(root)
         .select("path", "length", "modificationTime")
     )
-    root_depth = len([s for s in root.rstrip("/").split("://")[-1].split("/") if s])
-    parts = _path_parts(F.col("path"))
-    filename = F.element_at(parts, -1)
+    dims = path_dimensions(_root_depth(root), layout=layout, path=F.col("path"))
+    filename = dims["filename"]
     # Filename grammar YYYYMMDD_HHMM[_i] (summary.py:24-47): date + HHMM
     # time + optional shard; unparseable → NULLs, row kept (main.py:38-41).
     catalog = listing.select(
         F.col("path"),
-        F.element_at(parts, root_depth + 1).alias("user_id"),
-        F.element_at(parts, root_depth + 2).alias("measurement"),
+        dims["participant_id"].alias("user_id"),
+        dims["metric"].alias("measurement"),
         filename.alias("filename"),
         F.try_to_date(
             F.nullif(F.regexp_extract(filename, r"^(\d{8})_\d{4}", 1), F.lit("")),
@@ -73,7 +77,7 @@ def build_catalog(
         F.nullif(
             F.regexp_extract(filename, r"^\d{8}_(\d{4})", 1), F.lit("")
         ).alias("time"),
-        filename_shard_index(filename).alias("shard_index"),
+        dims["shard_index"].alias("shard_index"),
         filename.endswith(".json").alias("is_schema"),
         F.col("length").alias("size"),
         F.col("modificationTime").alias("modification_time"),

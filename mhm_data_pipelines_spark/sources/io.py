@@ -62,22 +62,6 @@ def write_table(
     writer.format(fmt).save(path)
 
 
-def write_per_group_and_combined(
-    df: DataFrame,
-    out_dir: str,
-    group_col: str = "site",
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Per-site fan-out + combined ``all_sites`` output (S11,
-    process-overview.py:196-249): one partition directory per group plus
-    an unpartitioned union — two writes of the same plan; Spark reuses the
-    shuffle output via the cached plan if persisted by the caller."""
-    write_table(df, f"{out_dir}/per_{group_col}", fmt=fmt, mode=mode,
-                partition_by=[group_col])
-    write_table(df, f"{out_dir}/all_{group_col}s", fmt=fmt, mode=mode)
-
-
 def read_jsonl(
     spark,
     path: str,

@@ -1,4 +1,4 @@
-"""Lake reader: glob scan + path-encoded dimension extraction.
+"""Lake reader: the path contract, glob scan and dimension extraction.
 
 The reference's primary "table" is a directory hierarchy
 
@@ -8,7 +8,14 @@ with three dimensions in the *path* and the batch timestamp in the
 *filename* (``mhm-data-pipelines/collect_data_metadata.py:17-63``; merged
 layout ``<root>/<SITE>/<PID>/<METRIC>/<METRIC>.csv.gz`` at
 ``extract_patient_summary.py:158-169``). Scripts re-walk the tree with
-``os.walk`` per run (S1) and parse each path in Python (S2).
+``os.walk`` per run (S1) and parse each path in Python (S2), and each
+script re-derives the positions itself.
+
+Here ``LAYOUTS`` is the only place those positions are defined. The
+dimension columns (``path_dimensions``, and through it the catalog and
+the streaming source), the per-metric glob depth of
+``read_lake_unified`` and the compacted lake's partition columns
+(``operators.compact``, the CLI ``overview``) all derive from it.
 
 Spark-native design:
 
@@ -38,6 +45,40 @@ from mhm_data_pipelines_spark.functions.timeutils import (
     filename_timestamp,
 )
 
+#: The lake path contract: each layout's dimension directories, in order,
+#: after the lake root; the file name follows the last one.
+#:
+#: * raw    — collect_data_metadata.py:21
+#: * merged — extract_patient_summary.py:158-169
+#: * flat   — data_collection.py:86-92, S3 key shape summary.py:125-128
+LAYOUTS = {
+    "raw": ("top_level", "site", "participant_id", "metric"),
+    "merged": ("site", "participant_id", "metric"),
+    "flat": ("participant_id", "metric"),
+}
+
+
+def _layout(layout: str) -> tuple[str, ...]:
+    try:
+        return LAYOUTS[layout]
+    except KeyError:
+        raise ValueError(f"unknown lake layout: {layout!r}") from None
+
+
+def _partition_columns(layout: str) -> list[str]:
+    """The compacted lake's partition columns: the layout's dimensions
+    without ``top_level``, which names the export, not the data (the flat
+    S3-key layout has no site segment — summary.py:125-128)."""
+    return [d for d in _layout(layout) if d != "top_level"]
+
+
+def _root_depth(root: str) -> int:
+    """Path segments of the lake root itself, after any URI scheme —
+    dimensions are positional *after* the root (the reference computes
+    ``os.path.relpath(file_path, input_dir)`` first,
+    collect_data_metadata.py:24-25)."""
+    return len([s for s in root.split("://")[-1].split("/") if s])
+
 
 def _path_parts(path: Column) -> Column:
     # Normalized relative path segments; strips any URI scheme prefix
@@ -54,41 +95,16 @@ def path_dimensions(
     """Column expressions deriving the lake dimensions from the file path.
 
     ``lake_root_depth`` is the number of path segments of the lake root
-    itself (so dimensions are positional *after* the root — the reference
-    computes ``os.path.relpath(file_path, input_dir)`` first,
-    collect_data_metadata.py:24-25).
-
-    layout='raw'    → root/<top_level>/<site>/<participant_id>/<metric>/...
-                      (collect_data_metadata.py:21)
-    layout='merged' → root/<site>/<participant_id>/<metric>/file
-                      (extract_patient_summary.py:158-169)
-    layout='flat'   → root/<participant_id>/<metric>/file
-                      (data_collection.py:86-92, S3 key shape summary.py:125-128)
+    itself; the dimensions of ``LAYOUTS[layout]`` follow it in order, then
+    ``filename`` and the batch ``file_timestamp``/``shard_index`` parsed
+    from it. ``path`` defaults to ``input_file_name()``.
     """
-    p = F.input_file_name() if path is None else path
-    parts = _path_parts(p)
-    d = lake_root_depth
+    parts = _path_parts(F.input_file_name() if path is None else path)
+    dims = {
+        name: F.element_at(parts, lake_root_depth + i)
+        for i, name in enumerate(_layout(layout), start=1)
+    }
     filename = F.element_at(parts, -1)
-    if layout == "raw":
-        dims = {
-            "top_level": F.element_at(parts, d + 1),
-            "site": F.element_at(parts, d + 2),
-            "participant_id": F.element_at(parts, d + 3),
-            "metric": F.element_at(parts, d + 4),
-        }
-    elif layout == "merged":
-        dims = {
-            "site": F.element_at(parts, d + 1),
-            "participant_id": F.element_at(parts, d + 2),
-            "metric": F.element_at(parts, d + 3),
-        }
-    elif layout == "flat":
-        dims = {
-            "participant_id": F.element_at(parts, d + 1),
-            "metric": F.element_at(parts, d + 2),
-        }
-    else:
-        raise ValueError(f"unknown lake layout: {layout!r}")
     dims["filename"] = filename
     dims["file_timestamp"] = filename_timestamp(filename)
     dims["shard_index"] = filename_shard_index(filename)
@@ -130,6 +146,57 @@ def include_exclude_predicate(
     return pred
 
 
+def _scan(
+    spark: SparkSession,
+    path: str,
+    root: str,
+    layout: str,
+    include: list[str] | None,
+    exclude: list[str] | None,
+    include_substring: bool,
+    fmt: str = "csv",
+    schema: StructType | str | None = None,
+    glob: str | None = None,
+    infer: bool = False,
+    **options: str,
+) -> DataFrame:
+    """The one lake scan behind ``read_lake`` and ``read_lake_unified``:
+    a recursive read of ``path`` (the lake ``root`` or a glob under it)
+    that skips corrupt files, adds the ``layout``'s dimension columns and
+    keeps only files that pass the include/exclude filter.
+
+    A CSV read with neither ``schema`` nor ``infer`` is typeless: every
+    column is its raw text, cast to STRING explicitly. ``options`` are
+    extra reader options."""
+    reader = (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("ignoreCorruptFiles", "true")
+        .options(**options)
+    )
+    if fmt == "csv":
+        reader = reader.option("header", "true")
+        if infer:
+            reader = reader.option("inferSchema", "true")
+    if schema is not None:
+        reader = reader.schema(schema)
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    df = reader.format(fmt).load(path)
+    if fmt == "csv" and schema is None and not infer:
+        df = df.select(
+            *[F.col(f"`{c}`").cast("string").alias(c) for c in df.columns]
+        )
+    for name, expr in path_dimensions(_root_depth(root), layout=layout).items():
+        df = df.withColumn(name, expr)
+    if include or exclude:
+        df = df.filter(
+            include_exclude_predicate(
+                F.input_file_name(), include, exclude, substring=include_substring
+            )
+        )
+    return df
+
+
 def read_lake(
     spark: SparkSession,
     root: str,
@@ -157,47 +224,20 @@ def read_lake(
     each bad row for quarantine instead of silent nulls — the
     row-granular upgrade of the reference's file-granular skip.
     """
-    root = root.rstrip("/")
-    reader = (
-        spark.read.option("recursiveFileLookup", "true")
-        .option("ignoreCorruptFiles", "true")
-    )
-    if fmt == "csv":
-        reader = reader.option("header", "true")
-        if schema is None:
-            reader = reader.option("inferSchema", "true")
+    options = {}
     if corrupt_record_col:
         if schema is None:
             raise ValueError(
                 "corrupt_record_col requires an explicit schema "
                 "containing that string column"
             )
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", corrupt_record_col
-        )
-    if schema is not None:
-        reader = reader.schema(schema)
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.format(fmt).load(root)
-
-    root_depth = len([s for s in root.split("://")[-1].split("/") if s])
-    dims = path_dimensions(root_depth, layout=layout)
-    for name, expr in dims.items():
-        df = df.withColumn(name, expr)
-    if include or exclude:
-        df = df.filter(
-            include_exclude_predicate(
-                F.input_file_name(), include, exclude, substring=include_substring
-            )
-        )
-    return df
-
-
-_DIM_COLS = (
-    "top_level", "site", "participant_id", "metric",
-    "filename", "file_timestamp", "shard_index",
-)
+        options["mode"] = "PERMISSIVE"
+        options["columnNameOfCorruptRecord"] = corrupt_record_col
+    root = root.rstrip("/")
+    return _scan(
+        spark, root, root, layout, include, exclude, include_substring,
+        fmt=fmt, schema=schema, glob=glob, infer=schema is None, **options,
+    )
 
 
 def read_lake_unified(
@@ -215,17 +255,18 @@ def read_lake_unified(
 
     A single ``spark.read.csv`` over mixed-schema files misaligns columns
     (one inferred schema for all); the reference avoids this by reading
-    per metric (merge-data.py:54-100). Here: one cheap distributed listing
-    pass groups files by metric, then one read per metric — with its own
-    header / registry schema — drift-unioned via ``unionByName``.
+    per metric (merge-data.py:54-100). Here: the catalog listing
+    (``sources.catalog.build_catalog``) names the metrics, then one read
+    per metric — with its own header / registry schema — is drift-unioned
+    via ``unionByName``.
 
-    Without a registry schema, data columns are normalized to STRING: CSV
-    is typeless in the reference (``pd.read_csv`` inference per file) and
-    every downstream extraction try_casts explicitly, so this keeps
-    null-on-error semantics identical while making the union well-typed.
-    At 100 TB, pass ``schemas`` (per-metric StructType, seedable from the
-    reference's S3 JSON schema docs) to skip inference, and point this at
-    the compacted parquet lake instead of raw gzip CSVs.
+    Without a registry schema, data columns are STRING: CSV is typeless
+    in the reference (``pd.read_csv`` inference per file) and every
+    downstream extraction try_casts explicitly, so reading without
+    inference keeps null-on-error semantics identical while making the
+    union well-typed. At 100 TB, pass ``schemas`` (per-metric StructType,
+    seedable from the reference's S3 JSON schema docs) to skip inference,
+    and point this at the compacted parquet lake instead of raw gzip CSVs.
 
     Scale contract: nothing file-sized ever reaches the driver. The
     distributed listing is reduced to the DISTINCT METRIC NAMES (a lake
@@ -239,79 +280,50 @@ def read_lake_unified(
     import re
 
     from mhm_data_pipelines_spark.sources.catalog import build_catalog
+    from mhm_data_pipelines_spark.sources.io import union_with_drift
 
     root = root.rstrip("/")
-    listing = build_catalog(spark, root)
-    pred = None
+    listing = build_catalog(spark, root, layout=layout)
     if include or exclude:
-        pred = include_exclude_predicate(
-            F.col("path"), include, exclude, substring=include_substring
+        listing = listing.filter(
+            include_exclude_predicate(
+                F.col("path"), include, exclude, substring=include_substring
+            )
         )
-        listing = listing.filter(pred)
-    # metric = path segment layout-dependent; reuse path_dimensions on the
-    # listing so grouping matches read-time extraction. The filename glob
-    # is applied distributed (fnmatch → anchored regex) so metrics whose
-    # directories hold only non-matching files don't produce empty reads.
-    root_depth = len([s for s in root.split("://")[-1].split("/") if s])
-    dims = path_dimensions(root_depth, layout=layout, path=F.col("path"))
-    # fnmatch.translate anchors only the END ((?s:...)\Z); rlike is a
-    # substring search, so a glob like "data_*.csv" would also SUFFIX-
-    # match "mydata_x.csv" at listing time while the per-metric scan's
-    # pathGlobFilter full-matches — selecting a metric whose scan then
-    # matches zero files (schema-less empty CSV read fails). Prepend ^
-    # so listing-time and scan-time filename semantics agree.
-    fname_re = "^" + fnmatch.translate(glob)
+    # The filename glob is applied distributed (fnmatch → anchored regex)
+    # so metrics whose directories hold only non-matching files don't
+    # produce empty reads. fnmatch.translate anchors only the END
+    # ((?s:...)\Z); rlike is a substring search, so a glob like
+    # "data_*.csv" would also SUFFIX-match "mydata_x.csv" at listing time
+    # while the per-metric scan's pathGlobFilter full-matches — selecting
+    # a metric whose scan then matches zero files (schema-less empty CSV
+    # read fails). Prepend ^ so listing-time and scan-time filename
+    # semantics agree.
     metric_rows = (
-        listing.filter(
-            F.element_at(_path_parts(F.col("path")), -1).rlike(fname_re)
-        )
-        .select(dims["metric"].alias("metric"))
-        .filter(F.col("metric").isNotNull())
+        listing.filter(F.col("filename").rlike("^" + fnmatch.translate(glob)))
+        .select("measurement")
+        .filter(F.col("measurement").isNotNull())
         .distinct()
         .collect()  # metric names only: bounded, metadata-sized
     )
     # Metric name → one glob path selecting exactly its subtree.
-    metric_depth = {"raw": 3, "merged": 2, "flat": 1}[layout]
-    wild = "/".join(["*"] * metric_depth)
+    wild = "/".join(["*"] * _layout(layout).index("metric"))
 
     parts = []
-    for metric in sorted(r.metric for r in metric_rows):
+    for metric in sorted(r.measurement for r in metric_rows):
         if re.search(r"[*?\[\]{}\\]", metric):  # glob metachar ≠ literal dir
             raise ValueError(
                 f"metric directory name {metric!r} contains glob "
                 "metacharacters; read it via read_lake(glob=...) instead"
             )
-        reader = (
-            spark.read.option("header", "true")
-            .option("ignoreCorruptFiles", "true")
-            .option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", glob)
-        )
-        schema = (schemas or {}).get(metric)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.csv(f"{root}/{wild}/{metric}")
-        if schema is None:
-            # Typeless normalization: everything string, like raw CSV text.
-            df = df.select(
-                *[F.col(f"`{c}`").cast("string").alias(c) for c in df.columns]
-            )
-        mdims = path_dimensions(root_depth, layout=layout)
-        for name, expr in mdims.items():
-            df = df.withColumn(name, expr)
-        if pred is not None:
-            # Re-apply file-level include/exclude inside the scan: the
-            # glob selects the whole metric subtree, but the predicate
-            # may exclude specific sites/participants within it.
-            df = df.filter(
-                include_exclude_predicate(
-                    F.input_file_name(), include, exclude,
-                    substring=include_substring,
-                )
-            )
-        parts.append(df)
+        # The glob selects the whole metric subtree; the scan re-applies
+        # the file-level include/exclude, which may drop specific
+        # sites/participants within it.
+        parts.append(_scan(
+            spark, f"{root}/{wild}/{metric}", root, layout,
+            include, exclude, include_substring,
+            schema=(schemas or {}).get(metric), glob=glob,
+        ))
     if not parts:
         raise ValueError(f"read_lake_unified: no files matched under {root}")
-    from mhm_data_pipelines_spark.sources.io import union_with_drift
-
     return union_with_drift(parts)

@@ -33,6 +33,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mhm_data_pipelines_spark.sources.catalog import build_catalog
 from mhm_data_pipelines_spark.sources.lake import include_exclude_predicate
 
 #: Result schema: one row per listed object that passed the filters.
@@ -115,19 +116,17 @@ def stage_objects(
     * per-file errors are captured, not raised (:71-80) —
       ``action='error'`` + message.
 
-    Scale notes: the listing is a distributed ``binaryFile`` FileIndex
-    scan; copies are spread round-robin over ``num_tasks`` (default
-    ``defaultParallelism``) tasks via a hash repartition, so wall-clock
+    Scale notes: the listing is the catalog's (``build_catalog``), a
+    distributed ``binaryFile`` FileIndex scan; copies are spread
+    round-robin over ``num_tasks`` (default ``defaultParallelism``)
+    tasks via a hash repartition, so wall-clock
     scales with executors, not a driver thread pool. Very large single
     objects still copy on one task each — at 100 TB stage with more,
     smaller tasks rather than multipart-splitting one object."""
     src_root = src_root.rstrip("/")
     dest_dir = dest_dir.rstrip("/")
-    listing = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(src_root)
-        .select("path", F.col("length").alias("src_bytes"))
+    listing = build_catalog(spark, src_root).select(
+        "path", F.col("size").alias("src_bytes")
     )
     if include or exclude:
         listing = listing.filter(

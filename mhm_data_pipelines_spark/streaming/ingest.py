@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from mhm_data_pipelines_spark.sources.lake import path_dimensions
+from mhm_data_pipelines_spark.sources.lake import _root_depth, path_dimensions
 
 
 def stream_lake(
@@ -39,8 +39,9 @@ def stream_lake(
 ) -> DataFrame:
     """Streaming twin of sources.lake.read_lake: new files under the
     glob become micro-batch rows, with the same path-derived dimension
-    columns. Streaming file sources require an explicit schema (per
-    metric — stream one metric subtree per query, or the compacted
+    columns (positions from ``sources.lake.LAYOUTS``, the only place
+    they are defined). Streaming file sources require an explicit schema
+    (per metric — stream one metric subtree per query, or the compacted
     parquet lake for the unified stream)."""
     root = root.rstrip("/")
     reader = (
@@ -53,8 +54,7 @@ def stream_lake(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     df = reader.load(root)
-    root_depth = len([s for s in root.split("://")[-1].split("/") if s])
-    for name, expr in path_dimensions(root_depth, layout=layout).items():
+    for name, expr in path_dimensions(_root_depth(root), layout=layout).items():
         df = df.withColumn(name, expr)
     return df
 
