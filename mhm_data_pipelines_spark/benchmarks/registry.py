@@ -6396,7 +6396,7 @@ ORDER BY id_a, id_b
 def q_knn_graph(spark, sf_dir):
     """k-NN graph (top-5 cosine neighbors for EVERY vector) with
     EXHAUSTIVE probing — the full IVF-graph machinery (single-list
-    assignment, probe explode, co-partitioned list join, per-query
+    assignment, probe explode, cogrouped per-list scoring, per-query
     window) provably equal to brute force, so DuckDB's independent
     brute-force self-join is a full value oracle. Selective-probe
     recall is covered in tests/test_similarity.py."""
@@ -6407,7 +6407,7 @@ def q_knn_graph(spark, sf_dir):
         (r["label"], list(r["centroid"]))
         for r in label_centroids(df).collect()
     ]
-    out = knn_graph(df, cents, k=5, nprobe=len(cents), blas=True)
+    out = knn_graph(df, cents, k=5, nprobe=len(cents))
     return out.withColumn("cosine", F.round("cosine", 4)).orderBy(
         "qid", F.desc("cosine"), "nid"
     )

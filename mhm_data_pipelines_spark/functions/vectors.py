@@ -2,9 +2,11 @@
 columns: dot product, norms, cosine — all builtin higher-order functions
 (JVM-side), used by the similarity-search and embedding-dedup operators.
 
-At 100 TB these expressions run inside codegen with no Python transfer;
-the Pandas-UDF path exists in operators.similarity only for the batched
-matrix variant where BLAS beats per-row folds.
+At 100 TB these expressions run inside codegen with no Python transfer.
+The Pandas-UDF exceptions live in operators.similarity: ``knn_graph``
+scores each candidate list with one numpy matrix product (BLAS beats
+per-row folds there), and the product-quantization operators encode in
+Arrow batches.
 """
 
 from __future__ import annotations

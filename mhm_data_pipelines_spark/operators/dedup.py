@@ -17,7 +17,7 @@ design notes per operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.functions.partitioning import (
@@ -327,6 +327,15 @@ def _split_hot_buckets(
     return cold, star
 
 
+def _est_jaccard(a: str, b: str) -> Column:
+    """Estimated Jaccard of two MinHash signature columns: the share of
+    slots where they agree."""
+    return (
+        F.size(F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda eq: eq))
+        / F.size(a)
+    )
+
+
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -394,19 +403,12 @@ def minhash_near_duplicates(
     )
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        )
-        / F.size("sig_a")
-    )
     return (
         cands.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
+        .select(
+            "id_a", "id_b", _est_jaccard("sig_a", "sig_b").alias("est_jaccard")
+        )
         .filter(F.col("est_jaccard") >= threshold)
     )
 
@@ -494,19 +496,12 @@ def minhash_match_index(
         F.col(id_col).alias("id_index"),
         F.col("signature").alias("sig_b"),
     )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                lambda eq: eq,
-            )
-        )
-        / F.size("sig_a")
-    )
     return (
         cands.join(sa, "id_new")
         .join(sb, "id_index")
-        .select("id_new", "id_index", est.alias("est_jaccard"))
+        .select(
+            "id_new", "id_index", _est_jaccard("sig_a", "sig_b").alias("est_jaccard")
+        )
         .filter(F.col("est_jaccard") >= threshold)
     )
 

@@ -16,10 +16,26 @@ North-star extension (BASELINE.json). Scale design:
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.functions.vectors import cosine, dot, normalize
+
+
+def _topk_per(
+    scored: DataFrame, part_col: str, score_col: str, id_col: str, k: int
+) -> DataFrame:
+    """The ``k`` best rows of ``scored`` per ``part_col`` value: highest
+    ``score_col`` first, ties broken by ``id_col`` ascending. The one
+    per-query top-k of every search in this module."""
+    w = Window.partitionBy(part_col).orderBy(F.desc(score_col), F.col(id_col))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .drop("rank")
+    )
 
 
 def brute_force_topk(
@@ -60,88 +76,7 @@ def brute_force_topk_pairs(
         id_col,
         dot("qv", "cv").alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
-
-
-def brute_force_topk_pairs_blas(
-    corpus: DataFrame,
-    query_vecs: list[tuple[int, list[float]]],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Arrow-batched BLAS variant of :func:`brute_force_topk_pairs`:
-    queries ship as a literal matrix in the UDF closure (they are always
-    small); each ``mapInPandas`` batch computes one
-    ``corpus_batch @ queries.T`` matrix product — vectorized numpy
-    instead of per-row expression folds, which wins once |queries| × dim
-    is large enough to amortize Arrow transfer. Per-partition candidates
-    then reduce to a global top-k with one tiny window over
-    ``k × partitions × |queries|`` rows.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-
-    if not query_vecs:
-        raise ValueError("query_vecs must be non-empty")
-    qids = [q[0] for q in query_vecs]
-    # the inferred Spark type applies to EVERY query id — a mixed
-    # str/int list would silently coerce through the first element's
-    # type (ADVICE r6), so reject heterogeneous ids outright.
-    if len({type(q) is str for q in qids}) > 1:
-        raise ValueError(
-            "query ids must be homogeneously str or int, got mixed types"
-        )
-    qid_type = "string" if isinstance(qids[0], str) else "long"
-    qmat = np.array([q[1] for q in query_vecs], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qnorm[qnorm == 0] = math.inf  # zero queries match nothing
-    qmat = qmat / qnorm[:, None]
-
-    def run(batches):
-        for pdf in batches:
-            c = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cn = np.linalg.norm(c, axis=1)
-            cn[cn == 0] = math.inf
-            sims = (c / cn[:, None]) @ qmat.T  # |batch| × |queries|
-            out = []
-            ids = pdf[id_col].to_numpy()
-            for j, qid in enumerate(qids):
-                col = sims[:, j]
-                top = np.argsort(-col, kind="stable")[: min(k, len(col))]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qid,
-                            id_col: ids[top],
-                            "cosine": col[top],
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    # id types follow the inputs (ADVICE r5): corpus ids from the frame
-    # schema, query ids from the literal tuples — a string-keyed corpus
-    # must not be cast through long.
-    id_type = corpus.schema[id_col].dataType.simpleString()
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        run, schema=f"query_id {qid_type}, {id_col} {id_type}, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk_per(scored, query_id_col, "cosine", id_col, k)
 
 
 def lsh_bucket_ids(
@@ -180,6 +115,28 @@ def lsh_bucket_ids(
     return df.withColumn("lsh_bucket", F.expr(sql))
 
 
+def _lsh_sides(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    bits: int,
+    seed: int,
+    vec_col: str,
+    id_col: str,
+    query_id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """Corpus ``(id, lsh_bucket, cv)`` and query ``(query_id, lsh_bucket,
+    qv)`` frames with L2-normalized vectors — the shared setup of the
+    LSH searches."""
+    cb = lsh_bucket_ids(corpus, dim, bits, seed, vec_col).select(
+        id_col, "lsh_bucket", normalize(vec_col).alias("cv")
+    )
+    qb = lsh_bucket_ids(queries, dim, bits, seed, vec_col).select(
+        F.col(query_id_col), "lsh_bucket", normalize(vec_col).alias("qv")
+    )
+    return cb, qb
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -196,21 +153,13 @@ def lsh_topk(
     corpus vector once, and AQE handles bucket skew. Recall < 1 by
     construction; raise ``bits``→fewer collisions, or probe multiple
     seeds and union for higher recall."""
-    cb = lsh_bucket_ids(corpus, dim, bits, seed, vec_col).select(
-        id_col, "lsh_bucket", normalize(vec_col).alias("cv")
-    )
-    qb = lsh_bucket_ids(queries, dim, bits, seed, vec_col).select(
-        F.col(query_id_col), "lsh_bucket", normalize(vec_col).alias("qv")
+    cb, qb = _lsh_sides(
+        corpus, queries, dim, bits, seed, vec_col, id_col, query_id_col
     )
     scored = cb.join(qb, "lsh_bucket").select(
         query_id_col, id_col, dot("qv", "cv").alias("cosine")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk_per(scored, query_id_col, "cosine", id_col, k)
 
 
 def lsh_multiprobe_topk(
@@ -233,11 +182,8 @@ def lsh_multiprobe_topk(
     still moves once through the same equi-join as :func:`lsh_topk` —
     probe fan-out lands on the (always-small) query side, never the
     corpus."""
-    cb = lsh_bucket_ids(corpus, dim, bits, seed, vec_col).select(
-        id_col, "lsh_bucket", normalize(vec_col).alias("cv")
-    )
-    qb = lsh_bucket_ids(queries, dim, bits, seed, vec_col).select(
-        F.col(query_id_col), "lsh_bucket", normalize(vec_col).alias("qv")
+    cb, qb = _lsh_sides(
+        corpus, queries, dim, bits, seed, vec_col, id_col, query_id_col
     )
     probes = F.array(
         F.col("lsh_bucket"),
@@ -252,14 +198,7 @@ def lsh_multiprobe_topk(
     scored = cb.join(qp, "lsh_bucket").select(
         query_id_col, id_col, dot("qv", "cv").alias("cosine")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk_per(scored, query_id_col, "cosine", id_col, k)
 
 
 def _normalized_lit(vec: list[float]) -> list[float]:
@@ -273,10 +212,11 @@ def _centroid_sim_structs(
     centroids: list[tuple[int, list[float]]], v: Column | str
 ) -> list[Column]:
     """(similarity, list_id) structs for an L2-normalized vector column
-    against literal centroids — ``greatest(...)`` of these is the
-    zero-shuffle nearest-centroid assignment shared by :func:`ivf_topk`
-    and :func:`train_kmeans` (struct comparison is lexicographic, so
-    ties resolve deterministically by list_id).
+    against literal centroids — their ``greatest`` is the zero-shuffle
+    nearest-centroid assignment (:func:`_nearest_list`,
+    :func:`kmeans_assign`) and their descending sort the probe order
+    (:func:`_probe_lists`); struct comparison is lexicographic, so ties
+    resolve deterministically by list_id.
 
     Each centroid's literal array is built as ONE SQL-text ``F.expr``
     instead of ``F.array(*[F.lit(x) ...])``: a k×dim quantizer renders
@@ -317,6 +257,32 @@ def _centroid_sim_structs(
     return out
 
 
+def _nearest_list(
+    centroids: list[tuple[int, list[float]]], v: Column | str
+) -> Column:
+    """Id of the centroid nearest to the normalized vector ``v``: the
+    ``greatest`` of the (similarity, list_id) structs, so ties go to the
+    larger list id."""
+    return F.greatest(*_centroid_sim_structs(centroids, v))["list_id"]
+
+
+def _probe_lists(
+    centroids: list[tuple[int, list[float]]], v: Column | str, nprobe: int
+) -> Column:
+    """Ids of the ``nprobe`` centroids nearest to the normalized vector
+    ``v``, ordered by (similarity, list_id) descending."""
+    return F.transform(
+        F.slice(
+            F.sort_array(
+                F.array(*_centroid_sim_structs(centroids, v)), asc=False
+            ),
+            1,
+            nprobe,
+        ),
+        lambda s: s["list_id"],
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -345,36 +311,19 @@ def ivf_topk(
     (= exact when nprobe covers all lists).
     """
     c = corpus.select(F.col(id_col), normalize(vec_col).alias("cv"))
-    c = c.withColumn(
-        "list_id",
-        F.greatest(*_centroid_sim_structs(centroids, "cv"))["list_id"],
-    )
+    c = c.withColumn("list_id", _nearest_list(centroids, "cv"))
 
     q = queries.select(F.col(query_id_col), normalize(vec_col).alias("qv"))
-    probes = F.transform(
-        F.slice(
-            F.sort_array(
-                F.array(*_centroid_sim_structs(centroids, "qv")),
-                asc=False,
-            ),
-            1,
-            nprobe,
-        ),
-        lambda s: s["list_id"],
-    )
     q = q.select(
-        query_id_col, "qv", F.explode(probes).alias("list_id")
+        query_id_col,
+        "qv",
+        F.explode(_probe_lists(centroids, "qv", nprobe)).alias("list_id"),
     )
 
     scored = c.join(F.broadcast(q), "list_id").select(
         query_id_col, id_col, dot("qv", "cv").alias("cosine")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk_per(scored, query_id_col, "cosine", id_col, k)
 
 
 def train_kmeans(
@@ -467,12 +416,7 @@ def _lloyd_loop(
         cents = [_normalized_lit(list(r["v"])) for r in init]
     for _ in range(max_iter):
         centroids = list(enumerate(cents))
-        assigned = base.withColumn(
-            "list_id",
-            F.greatest(*_centroid_sim_structs(centroids, "v"))[
-                "list_id"
-            ],
-        )
+        assigned = base.withColumn("list_id", _nearest_list(centroids, "v"))
         rows = (
             assigned.select(
                 "list_id", F.posexplode("v").alias("pos", "val")
@@ -799,14 +743,7 @@ def pq_adc_topk(
     scored = enc.crossJoin(F.broadcast(lut)).select(
         query_id_col, id_col, score.alias("adc_score")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("adc_score"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk_per(scored, query_id_col, "adc_score", id_col, k)
 
 
 def train_pq_codebooks(
@@ -1098,14 +1035,7 @@ def _adc_topk(
     scored = index.join(F.broadcast(probes), "list_id").select(
         query_id_col, id_col, score.alias("adc_score")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("adc_score"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk_per(scored, query_id_col, "adc_score", id_col, k)
 
 
 def ivf_pq_topk(
@@ -1245,7 +1175,7 @@ def knn_graph(
     nprobe: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    blas: bool = False,
+    blas: bool | None = None,
 ) -> DataFrame:
     """k-nearest-neighbor GRAPH: top-k cosine neighbors for EVERY
     vector (the all-queries twin of :func:`ivf_topk`) — the substrate
@@ -1257,144 +1187,121 @@ def knn_graph(
     broadcasts: data vectors assign to their single nearest list
     (zero-shuffle literal-quantizer projection, see
     :func:`_centroid_sim_structs`), query probes explode to their
-    ``nprobe`` nearest lists, and the candidate join is a
-    CO-PARTITIONED equi-join on ``list_id`` — both sides shuffle once
-    on the list key, pair fan-out is bounded by list sizes (quantizer
-    balance), never |corpus|². Per-query top-k is a window over the
-    candidate set partitioned by the query id.
+    ``nprobe`` nearest lists, and data and probes cogroup on
+    ``list_id`` — both sides shuffle once on the list key, pair fan-out
+    is bounded by list sizes (quantizer balance), never |corpus|².
+
+    Each cogroup is one Arrow stage that computes a single numpy
+    ``probes @ data.T`` matrix product with a per-list partial top-k,
+    so only ``|queries| × nprobe × k`` candidate rows (not the full
+    pair fan-out) reach the final per-query window. Each cogroup holds
+    one list in memory: balance the quantizer (or sub-bucket hot lists)
+    so a list fits an executor.
 
     Each (query, data) pair arises at most once — the data side lives
     in exactly one list — so no distinct is needed. ``nprobe =
     len(centroids)`` makes the graph EXACT (every list probed);
     smaller ``nprobe`` trades recall for a proportionally smaller
-    join, same as IVF search. Self-edges are excluded.
+    join, same as IVF search. Self-edges are excluded. Vectors that are
+    zero, NULL, or hold a NULL or NaN element match nothing: they get
+    no edges and are nobody's neighbor.
 
-    ``blas=True`` replaces the row-join + expression-fold scoring with
-    one cogrouped Arrow stage per list: data and probe frames cogroup
-    on ``list_id`` and each group computes a single numpy
-    ``probes @ data.T`` matrix product with a per-list partial top-k,
-    so only ``|queries| × nprobe × k`` candidate rows (not the full
-    pair fan-out) reach the final window. Same shuffle shape, ~25×
-    less work per candidate at dim=64 (interpreted higher-order folds
-    vs BLAS); float sums may differ in the last ULP from the
-    expression path — round before hash-comparing across engines.
-    Each cogroup holds one list in memory: balance the quantizer (or
-    sub-bucket hot lists) so a list fits an executor.
+    ``blas`` is deprecated and ignored: the cogrouped scorer above is
+    the only scoring path.
     """
-    # Zero-norm (and NULL) vectors normalize to NULL (the NULL-cosine
-    # contract: no direction → cosine undefined → matches nothing).
-    # Drop them HERE: downstream they would produce NULL-cosine
-    # pseudo-edges on the expression path and crash the BLAS cogroup's
-    # np.stack with a shape mismatch (None among the arrays) — found
-    # by the sf1 degenerate-row probe fixtures. The predicate is
-    # exists(x ≠ 0), which short-circuits at the first nonzero element
-    # — filtering on normalize(...).isNotNull() instead re-ran the
+    import numpy as np
+    import pandas as pd
+
+    if blas is not None:
+        warnings.warn(
+            "knn_graph(blas=...) is ignored: the cogrouped scorer is the "
+            "only scoring path",
+            DeprecationWarning,
+            stacklevel=2,
+        )
+    # Zero-norm, NULL and NULL-element vectors normalize to NULL (the
+    # NULL-cosine contract: no direction → cosine undefined → matches
+    # nothing). Drop them HERE: the cogroup's np.stack cannot stack a
+    # NULL (shape mismatch) — found by the sf1 degenerate-row probe
+    # fixtures. exists(x ≠ 0) short-circuits at the first nonzero
+    # element, and array_compact keeps every element only when none is
+    # NULL — filtering on normalize(...).isNotNull() instead re-ran the
     # full O(d) norm fold per row and cost ~1.4× on the whole graph.
+    # NaN elements pass the filter; the scorer discards NaN cosines.
+    v = F.col(vec_col)
     base = df.filter(
-        F.exists(F.col(vec_col), lambda x: x != F.lit(0.0))
+        F.exists(v, lambda x: x != F.lit(0.0))
+        & (F.size(F.array_compact(v)) == F.size(v))
     ).select(F.col(id_col), normalize(vec_col).alias("v"))
-    data = base.withColumn(
-        "list_id",
-        F.greatest(*_centroid_sim_structs(centroids, "v"))["list_id"],
-    )
-    probes = F.transform(
-        F.slice(
-            F.sort_array(
-                F.array(*_centroid_sim_structs(centroids, "v")),
-                asc=False,
-            ),
-            1,
-            nprobe,
-        ),
-        lambda s: s["list_id"],
-    )
+    data = base.withColumn("list_id", _nearest_list(centroids, "v"))
     q = base.select(
         F.col(id_col).alias("qid"),
         F.col("v").alias("qv"),
-        F.explode(probes).alias("list_id"),
+        F.explode(_probe_lists(centroids, "v", nprobe)).alias("list_id"),
     )
-    if blas:
-        import numpy as np
-        import pandas as pd
 
-        def score_list(left: "pd.DataFrame", right: "pd.DataFrame"):
-            if left.empty or right.empty:
-                # Empty object columns coerce to any declared Arrow
-                # type (the id dtype follows id_col, not a hardcode).
-                return pd.DataFrame({"qid": [], "nid": [], "cosine": []})
-            dmat = np.stack(left["v"].to_numpy()).astype(np.float64)
-            qmat = np.stack(right["qv"].to_numpy()).astype(np.float64)
-            sims = qmat @ dmat.T  # |probes| × |list|
-            dids = left[id_col].to_numpy()
-            qids = right["qid"].to_numpy()
-            # Self-mask in place (a query never neighbors itself).
-            sims[dids[None, :] == qids[:, None]] = -np.inf
-            nd = sims.shape[1]
-            # Vectorized preselect: argpartition the whole matrix to a
-            # small per-row candidate set, then tie-sort only that set
-            # with the window's (-sim, id) rule. The +8 slack usually
-            # absorbs equal-cosine ties at the k-th value; when a tie
-            # group extends BEYOND the preselected set (>8 duplicated
-            # vectors — plausible in a dedup-oriented corpus), the
-            # boundary check below widens that row to every candidate
-            # ≥ the boundary value, so the (cosine desc, id asc) order
-            # stays exactly the non-blas/window path's (ADVICE r4).
-            take = min(k + 8, nd)
-            pre = np.argpartition(-sims, take - 1, axis=1)[:, :take]
-            out_q, out_n, out_c = [], [], []
-            for row in range(sims.shape[0]):
-                cand = pre[row]
-                cand_sims = sims[row, cand]
-                keep = cand_sims > -np.inf
-                cand = cand[keep]
-                cand_sims = cand_sims[keep]
-                if cand.size == 0:
-                    continue
-                kk = min(k, cand.size)
-                # Boundary value = k-th largest of the preselect; if any
-                # non-preselected candidate also reaches it, the tie
-                # group crosses the preselect boundary — widen to every
-                # candidate ≥ bval (one O(n) scan, tie rows only).
-                bval = np.partition(cand_sims, -kk)[-kk]
-                row_sims = sims[row]
-                if np.count_nonzero(row_sims >= bval) > np.count_nonzero(
-                    cand_sims >= bval
-                ):
-                    cand = np.flatnonzero(row_sims >= bval)
-                    cand_sims = row_sims[cand]
-                order = np.lexsort((dids[cand], -cand_sims))[:kk]
-                out_q.extend([qids[row]] * kk)
-                out_n.extend(dids[cand[order]].tolist())
-                out_c.extend(cand_sims[order].tolist())
-            return pd.DataFrame(
-                {"qid": out_q, "nid": out_n, "cosine": out_c}
-            )
+    def score_list(left: "pd.DataFrame", right: "pd.DataFrame"):
+        if left.empty or right.empty:
+            # Empty object columns coerce to any declared Arrow
+            # type (the id dtype follows id_col, not a hardcode).
+            return pd.DataFrame({"qid": [], "nid": [], "cosine": []})
+        dmat = np.stack(left["v"].to_numpy()).astype(np.float64)
+        qmat = np.stack(right["qv"].to_numpy()).astype(np.float64)
+        sims = qmat @ dmat.T  # |probes| × |list|
+        dids = left[id_col].to_numpy()
+        qids = right["qid"].to_numpy()
+        # Self-mask in place (a query never neighbors itself).
+        sims[dids[None, :] == qids[:, None]] = -np.inf
+        nd = sims.shape[1]
+        # Vectorized preselect: argpartition the whole matrix to a
+        # small per-row candidate set, then tie-sort only that set
+        # with the window's (-sim, id) rule. The +8 slack usually
+        # absorbs equal-cosine ties at the k-th value; when a tie
+        # group extends BEYOND the preselected set (>8 duplicated
+        # vectors — plausible in a dedup-oriented corpus), the
+        # boundary check below widens that row to every candidate
+        # ≥ the boundary value, so the (cosine desc, id asc) order
+        # stays exactly the final window's.
+        take = min(k + 8, nd)
+        pre = np.argpartition(-sims, take - 1, axis=1)[:, :take]
+        out_q, out_n, out_c = [], [], []
+        for row in range(sims.shape[0]):
+            cand = pre[row]
+            cand_sims = sims[row, cand]
+            # Drops the self-mask and NaN cosines.
+            keep = cand_sims > -np.inf
+            cand = cand[keep]
+            cand_sims = cand_sims[keep]
+            if cand.size == 0:
+                continue
+            kk = min(k, cand.size)
+            # Boundary value = k-th largest of the preselect; if any
+            # non-preselected candidate also reaches it, the tie
+            # group crosses the preselect boundary — widen to every
+            # candidate ≥ bval (one O(n) scan, tie rows only).
+            bval = np.partition(cand_sims, -kk)[-kk]
+            row_sims = sims[row]
+            if np.count_nonzero(row_sims >= bval) > np.count_nonzero(
+                cand_sims >= bval
+            ):
+                cand = np.flatnonzero(row_sims >= bval)
+                cand_sims = row_sims[cand]
+            order = np.lexsort((dids[cand], -cand_sims))[:kk]
+            out_q.extend([qids[row]] * kk)
+            out_n.extend(dids[cand[order]].tolist())
+            out_c.extend(cand_sims[order].tolist())
+        return pd.DataFrame({"qid": out_q, "nid": out_n, "cosine": out_c})
 
-        id_type = df.schema[id_col].dataType.simpleString()
-        scored = (
-            data.groupBy("list_id")
-            .cogroup(q.groupBy("list_id"))
-            .applyInPandas(
-                score_list,
-                schema=f"qid {id_type}, nid {id_type}, cosine double",
-            )
+    id_type = df.schema[id_col].dataType.simpleString()
+    scored = (
+        data.groupBy("list_id")
+        .cogroup(q.groupBy("list_id"))
+        .applyInPandas(
+            score_list,
+            schema=f"qid {id_type}, nid {id_type}, cosine double",
         )
-    else:
-        scored = (
-            data.join(q, "list_id")
-            .filter(F.col(id_col) != F.col("qid"))
-            .select(
-                F.col("qid"),
-                F.col(id_col).alias("nid"),
-                dot("qv", "v").alias("cosine"),
-            )
-        )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.col("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
     )
+    return _topk_per(scored, "qid", "cosine", "nid", k)
 
 
 def embedding_outliers(
@@ -1490,8 +1397,9 @@ def hard_negatives(
     queries are small by contract); the label-mismatch condition is in
     the join, so same-label pairs are never scored. Per-query ranking
     is one window over the scored candidates. For query sets too large
-    to broadcast, compose :func:`knn_graph`'s cogrouped BLAS path and
-    anti-filter same-label edges afterwards instead.
+    to broadcast, run :func:`knn_graph` over queries and corpus
+    together (nothing broadcasts) and anti-filter same-label edges
+    afterwards instead.
     """
     q = queries.select(
         F.col(query_id_col),
@@ -1511,14 +1419,7 @@ def hard_negatives(
     )
     if min_cosine is not None:
         scored = scored.filter(F.col("cosine") >= F.lit(min_cosine))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    return _topk_per(scored, query_id_col, "cosine", id_col, k)
 
 
 def _round_half_up(x: float, q: int) -> float:
@@ -1710,7 +1611,6 @@ def mutual_nearest_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     nprobe: int | None = None,
-    blas: bool = True,
 ) -> DataFrame:
     """Mutual nearest-neighbor pairs: (a, b) with a < b where b is a's
     cosine top-1 AND a is b's — the reciprocal-best-match criterion
@@ -1747,7 +1647,6 @@ def mutual_nearest_pairs(
         nprobe=nprobe if nprobe is not None else min(8, len(centroids)),
         vec_col=vec_col,
         id_col=id_col,
-        blas=blas,
     )
     e = top1.select(
         F.least("qid", "nid").alias("id_a"),

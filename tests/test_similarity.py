@@ -247,24 +247,6 @@ def test_label_centroids(corpus, corpus_np):
     assert by_label[0] == pytest.approx(member0.tolist())
 
 
-def test_blas_topk_matches_expression_path(corpus, corpus_np):
-    from mhm_data_pipelines_spark.operators.similarity import (
-        brute_force_topk_pairs_blas,
-    )
-
-    qvecs = [(i, corpus_np[i].tolist()) for i in range(3)]
-    got = brute_force_topk_pairs_blas(corpus, qvecs, k=5).collect()
-    queries = corpus.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    want = brute_force_topk_pairs(corpus, queries, k=5).collect()
-    g = {(r.query_id, r.vec_id): r.cosine for r in got}
-    w = {(r.query_id, r.vec_id): r.cosine for r in want}
-    assert set(g) == set(w)
-    for key in w:
-        assert g[key] == pytest.approx(w[key])
-
-
 def _rand_books(m, ksub, dsub, seed=3):
     import random
 
@@ -482,44 +464,128 @@ def test_lsh_multiprobe_superset_and_recall(corpus, corpus_np):
         assert len(exact & mp10) >= len(exact & sp10)
 
 
-def test_knn_graph_exhaustive_matches_numpy(corpus, corpus_np):
-    """nprobe = all lists ⇒ exact kNN graph for every vector."""
-    from mhm_data_pipelines_spark.operators.similarity import knn_graph
+def _fold_unit(m):
+    """Row-normalize like ``functions.vectors.normalize``: left-fold
+    sum of squares, so list assignments see the engine's exact floats."""
+    m = np.asarray(m, dtype=np.float64)
+    sq = np.zeros(len(m))
+    for j in range(m.shape[1]):
+        sq = sq + m[:, j] * m[:, j]
+    return m / np.sqrt(sq)[:, None]
 
-    cents = [
-        (r.label, list(r.centroid)) for r in label_centroids(corpus).collect()
-    ]
-    k = 5
-    got = knn_graph(corpus, cents, k=k, nprobe=len(cents)).collect()
-    by_q = {}
-    for r in got:
-        assert r.qid != r.nid
-        by_q.setdefault(r.qid, []).append((r.cosine, r.nid))
-    norms = np.linalg.norm(corpus_np, axis=1)
-    unit = corpus_np / norms[:, None]
+
+def _numpy_knn(vecs, ids, k, cents=None, nprobe=None):
+    """Reference kNN graph ``{qid: [(nid, cosine), ...]}`` in (-cosine,
+    nid) order. With ``cents``, query i only sees the vectors assigned
+    to its ``nprobe`` nearest lists; lists rank by (similarity, list_id)
+    descending, as ``_centroid_sim_structs`` orders them, and a vector
+    is assigned to the first."""
+    unit = _fold_unit(vecs)
+    n = len(ids)
     sims = unit @ unit.T
-    np.fill_diagonal(sims, -np.inf)
-    for qid in range(N):
-        # Tie-deterministic: (-cosine, nid) ordering in both worlds.
-        want = sorted(
-            ((-sims[qid, j], j) for j in range(N) if j != qid)
-        )[:k]
-        want_ids = [j for _, j in want]
-        got_ids = [nid for _, nid in sorted(
-            by_q[qid], key=lambda t: (-t[0], t[1])
-        )]
-        assert got_ids == want_ids, f"qid {qid}"
-        assert len(by_q[qid]) == k
+    allowed = np.ones((n, n), dtype=bool)
+    if cents is not None:
+        lids = [lid for lid, _ in cents]
+        c = _fold_unit([vec for _, vec in cents])
+        csim = np.zeros((n, len(c)))
+        for j in range(unit.shape[1]):
+            csim = csim + unit[:, j, None] * c[None, :, j]
+        ranked = [
+            sorted(range(len(c)), key=lambda x: (csim[i, x], lids[x]),
+                   reverse=True)
+            for i in range(n)
+        ]
+        assigned = np.array([lids[r[0]] for r in ranked])
+        for i in range(n):
+            allowed[i] = np.isin(assigned, [lids[x] for x in ranked[i][:nprobe]])
+    graph = {}
+    for i in range(n):
+        cand = sorted(
+            (-sims[i, j], ids[j]) for j in range(n) if j != i and allowed[i, j]
+        )
+        graph[ids[i]] = [(nid, -neg) for neg, nid in cand[:k]]
+    return graph
 
 
-def test_knn_graph_selective_probe_subset(corpus):
-    """nprobe=1 candidates are a subset of the exhaustive graph's
-    candidate space and still exclude self-edges."""
+def _assert_graph(rows, want):
+    """``knn_graph`` rows equal the reference: same neighbors per query
+    in the same (-cosine, nid) order, and the same cosines."""
+    got = {}
+    for r in rows:
+        got.setdefault(r.qid, []).append((-r.cosine, r.nid))
+    got = {q: [(nid, -neg) for neg, nid in sorted(v)] for q, v in got.items()}
+    want = {q: v for q, v in want.items() if v}
+    assert {q: [n for n, _ in v] for q, v in got.items()} == {
+        q: [n for n, _ in v] for q, v in want.items()
+    }
+    for q, v in want.items():
+        assert [c for _, c in got[q]] == pytest.approx([c for _, c in v])
+
+
+def test_knn_graph_exhaustive_matches_numpy(corpus, corpus_np):
+    """nprobe = all lists ⇒ exact kNN graph for every vector: the
+    cogrouped BLAS scorer gives a numpy brute force's neighbors, in
+    (-cosine, nid) order, with its cosines and no self-edges."""
     from mhm_data_pipelines_spark.operators.similarity import knn_graph
 
     cents = [
         (r.label, list(r.centroid)) for r in label_centroids(corpus).collect()
     ]
+    got = knn_graph(corpus, cents, k=5, nprobe=len(cents)).collect()
+    assert len(got) == N * 5
+    _assert_graph(got, _numpy_knn(corpus_np, list(range(N)), 5))
+
+
+def test_knn_graph_blas_matches_expression_path(corpus):
+    """The cogrouped BLAS scorer gives the edges and cosines of an
+    expression-fold scoring of the same graph: every pair cosine-folded
+    with ``functions.vectors.dot`` over normalized vectors and ranked by
+    the per-query (cosine desc, id asc) window. The deprecated ``blas``
+    flag leaves the result unchanged."""
+    from pyspark.sql import Window
+
+    from mhm_data_pipelines_spark.functions.vectors import dot, normalize
+    from mhm_data_pipelines_spark.operators.similarity import knn_graph
+
+    cents = [
+        (r.label, list(r.centroid)) for r in label_centroids(corpus).collect()
+    ]
+    unit = corpus.select("vec_id", normalize("embedding").alias("u"))
+    q = unit.select(F.col("vec_id").alias("qid"), F.col("u").alias("qu"))
+    d = unit.select(F.col("vec_id").alias("nid"), F.col("u").alias("du"))
+    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
+    expr = (
+        q.crossJoin(d)
+        .where(F.col("qid") != F.col("nid"))
+        .select("qid", "nid", dot("qu", "du").alias("cosine"))
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= 5)
+        .collect()
+    )
+    blas = knn_graph(corpus, cents, k=5, nprobe=len(cents)).collect()
+    g = {(r.qid, r.nid): r.cosine for r in blas}
+    want = {(r.qid, r.nid): r.cosine for r in expr}
+    assert set(g) == set(want)
+    for key in want:
+        assert g[key] == pytest.approx(want[key])
+    with pytest.warns(DeprecationWarning):
+        flagged = knn_graph(
+            corpus, cents, k=5, nprobe=len(cents), blas=True
+        ).collect()
+    assert {(r.qid, r.nid): r.cosine for r in flagged} == g
+
+
+def test_knn_graph_selective_probe_subset(corpus, corpus_np):
+    """nprobe=1 candidates are a subset of the exhaustive graph's
+    candidate space and still exclude self-edges; the nprobe=1 and
+    nprobe=2 graphs over 4 lists equal a numpy reference that restricts
+    each query to the vectors of its probed lists."""
+    from mhm_data_pipelines_spark.operators.similarity import knn_graph
+
+    cents = [
+        (r.label, list(r.centroid)) for r in label_centroids(corpus).collect()
+    ]
+    assert len(cents) == 4
     got = knn_graph(corpus, cents, k=5, nprobe=1).collect()
     assert all(r.qid != r.nid for r in got)
     # Every query still gets up to k neighbors from its own list.
@@ -528,28 +594,17 @@ def test_knn_graph_selective_probe_subset(corpus):
         per_q[r.qid] = per_q.get(r.qid, 0) + 1
     assert all(c <= 5 for c in per_q.values())
     assert len(per_q) == N  # own list always probed -> nobody is empty
-
-
-def test_knn_graph_blas_matches_expression_path(corpus):
-    from mhm_data_pipelines_spark.operators.similarity import knn_graph
-
-    cents = [
-        (r.label, list(r.centroid)) for r in label_centroids(corpus).collect()
-    ]
-    expr = knn_graph(corpus, cents, k=5, nprobe=len(cents)).collect()
-    blas = knn_graph(
-        corpus, cents, k=5, nprobe=len(cents), blas=True
-    ).collect()
-    g = {(r.qid, r.nid): r.cosine for r in blas}
-    w = {(r.qid, r.nid): r.cosine for r in expr}
-    assert set(g) == set(w)
-    for key in w:
-        assert g[key] == pytest.approx(w[key])
+    ids = list(range(N))
+    _assert_graph(got, _numpy_knn(corpus_np, ids, 5, cents, nprobe=1))
+    got2 = knn_graph(corpus, cents, k=5, nprobe=2).collect()
+    _assert_graph(got2, _numpy_knn(corpus_np, ids, 5, cents, nprobe=2))
+    # Probing a second list changes some query's neighbors.
+    assert {(r.qid, r.nid) for r in got2} != {(r.qid, r.nid) for r in got}
 
 
 def test_knn_graph_blas_string_ids(spark):
-    """The blas path must honor the id column's type (it once
-    hardcoded long), matching the expression path's contract."""
+    """The scorer must honor the id column's type (it once hardcoded
+    long) and order string ids the way the window does."""
     from mhm_data_pipelines_spark.operators.similarity import knn_graph
 
     rows = [(f"doc-{i}", [float(i % 3), 1.0, float(i % 2)], i % 2)
@@ -560,12 +615,11 @@ def test_knn_graph_blas_string_ids(spark):
     cents = [
         (r.label, list(r.centroid)) for r in label_centroids(df).collect()
     ]
-    expr = knn_graph(df, cents, k=3, nprobe=len(cents)).collect()
-    blas = knn_graph(df, cents, k=3, nprobe=len(cents), blas=True).collect()
-    g = {(r.qid, r.nid) for r in blas}
-    w = {(r.qid, r.nid) for r in expr}
-    assert g == w
-    assert all(isinstance(r.qid, str) for r in blas)
+    got = knn_graph(df, cents, k=3, nprobe=len(cents)).collect()
+    assert all(isinstance(r.qid, str) for r in got)
+    _assert_graph(
+        got, _numpy_knn([v for _, v, _ in rows], [i for i, _, _ in rows], 3)
+    )
 
 
 def test_ivf_pq_index_persist_reload_search_parity(spark, corpus):
@@ -667,50 +721,38 @@ def test_ivf_pq_index_append_equals_rebuild(spark, corpus):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_knn_graph_zero_vectors_dropped_both_paths(spark):
-    """Zero-norm vectors normalize to NULL (cosine undefined) and must
-    be DROPPED from the graph, not crash the BLAS cogroup's np.stack
-    (shape mismatch on None) or emit NULL-cosine pseudo-edges on the
-    expression path — found by the sf1 degenerate-row probe (r7)."""
+def test_knn_graph_degenerate_vectors_dropped(spark):
+    """Vectors with no direction match nothing: zero-norm and
+    NULL-element vectors normalize to NULL and must be DROPPED from the
+    graph, not crash the cogroup's np.stack (shape mismatch on None) —
+    found by the sf1 degenerate-row probe (r7). A NaN element makes
+    every cosine NaN, which the scorer discards, so that vector is
+    dropped too."""
     from mhm_data_pipelines_spark.operators.similarity import (
         knn_graph,
         mutual_nearest_pairs,
     )
 
     rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0]),
-            (3, [0.0, 0.0]), (4, [0.0, 0.0])]  # 3, 4: zero-norm
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
+            (3, [0.0, 0.0]), (4, [0.0, 0.0]),  # zero-norm
+            (5, [1.0, None]),  # NULL element
+            (6, [float("nan"), 1.0])]  # NaN element
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
-    for blas in (False, True):
-        got = knn_graph(df, cents, k=2, nprobe=2, blas=blas).collect()
-        ids = {r.qid for r in got} | {r.nid for r in got}
-        assert 3 not in ids and 4 not in ids
-        assert all(r.cosine is not None for r in got)
+    got = knn_graph(df, cents, k=2, nprobe=2).collect()
+    assert {(r.qid, r.nid) for r in got} == {
+        (0, 1), (0, 2), (1, 0), (1, 2), (2, 1), (2, 0)
+    }
+    assert all(np.isfinite(r.cosine) for r in got)
     pairs = mutual_nearest_pairs(df, cents, nprobe=2).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1)}
-
-
-def test_blas_topk_query_guards(corpus):
-    """Empty query_vecs and heterogeneous query-id types must raise
-    explicit ValueErrors, not a bare IndexError / silent type coercion
-    through the first element (ADVICE r6)."""
-    from mhm_data_pipelines_spark.operators.similarity import (
-        brute_force_topk_pairs_blas,
-    )
-
-    with pytest.raises(ValueError, match="non-empty"):
-        brute_force_topk_pairs_blas(corpus, [], k=3)
-    with pytest.raises(ValueError, match="homogeneous"):
-        brute_force_topk_pairs_blas(
-            corpus, [(1, [1.0, 0.0]), ("q2", [0.0, 1.0])], k=3
-        )
 
 
 def test_knn_graph_blas_boundary_ties_beyond_slack(spark):
     """>8 candidates tying exactly AT the k-th cosine (duplicated
     vectors) must not let the argpartition preselect pick arbitrary
     ids — the boundary-tie widen keeps the (cosine desc, id asc)
-    order identical to the expression path (ADVICE r4)."""
+    order of a numpy brute force (ADVICE r4)."""
     from mhm_data_pipelines_spark.operators.similarity import knn_graph
 
     # ids 0-1: the "near" pair; ids 2-19: 18 identical vectors that all
@@ -720,10 +762,10 @@ def test_knn_graph_blas_boundary_ties_beyond_slack(spark):
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])]
-    expr = knn_graph(df, cents, k=3, nprobe=2).collect()
-    blas = knn_graph(df, cents, k=3, nprobe=2, blas=True).collect()
-    key = lambda r: (r.qid, r.nid)
-    assert sorted(map(key, blas)) == sorted(map(key, expr))
+    got = knn_graph(df, cents, k=3, nprobe=2).collect()
+    _assert_graph(
+        got, _numpy_knn([v for _, v in rows], [i for i, _ in rows], 3)
+    )
 
 
 # ----------------------------------------------------------------- MMR
@@ -844,21 +886,6 @@ def test_mmr_string_ids(spark):
         assert dict(out.dtypes)["doc_id"] == "string"
         got = [r["doc_id"] for r in out.orderBy("pick_order").collect()]
         assert got == ["b", "c"]
-
-
-def test_blas_topk_pairs_string_ids(spark):
-    from mhm_data_pipelines_spark.operators.similarity import (
-        brute_force_topk_pairs_blas,
-    )
-
-    rows = [("x", [1.0, 0.0]), ("y", [0.0, 1.0]), ("z", [0.9, 0.1])]
-    df = spark.createDataFrame(rows, "doc_id string, embedding array<double>")
-    out = brute_force_topk_pairs_blas(
-        df, [(7, [1.0, 0.0])], k=2, id_col="doc_id"
-    )
-    assert dict(out.dtypes)["doc_id"] == "string"
-    got = [r["doc_id"] for r in out.orderBy(F.desc("cosine")).collect()]
-    assert got == ["x", "z"]
 
 
 # ---------------------------------------------------------- mutual top-1
