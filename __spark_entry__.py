@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 All query definitions live in
 ``mhm_data_pipelines_spark/benchmarks/registry.py`` (one entry per
@@ -46,9 +46,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, in
-    GATE_PRIORITY order (the driver verifies the first 50 each round;
-    round 3 rotates the LLM-pipeline extension keys into that window)."""
+    """One entry per implemented operator from SURVEY.md §2. The first
+    50 are GATE_PRIORITY, the frozen set the driver verifies; the rest
+    follow in registry order."""
 
     def _wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,6 +61,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted for hash-based /
-    approximate ops → rows-only check)."""
+    """DuckDB-equivalent SQL for every query."""
     return dict(ORACLES)

@@ -4971,7 +4971,9 @@ def _ivfpq_topk_oracle_sql(
     oracle; the residual vector is materialized ONCE per corpus row as
     a list expression (element = e[j]/nrm − CASE on the assigned list)
     so the 128 per-(sub, code) distance branches stay small; the ADC
-    score is qc plus per-subspace pivot columns added left-to-right."""
+    score is qc plus per-subspace pivot columns added left-to-right.
+    b, sims and resd are each read more than once, so they are
+    MATERIALIZED rather than inlined and recomputed per reference."""
     import math
     import random
 
@@ -5028,10 +5030,10 @@ def _ivfpq_topk_oracle_sql(
     )
     score = "qc + " + " + ".join(f"s{i}" for i in range(m))
     return f"""
-WITH b AS (
+WITH b AS MATERIALIZED (
   SELECT vec_id, e, sqrt({sq}) AS nrm
   FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
-), sims AS (
+), sims AS MATERIALIZED (
   {sim_branches}
 ), asn AS (
   SELECT vec_id, list_id FROM sims WHERE vec_id >= 5
@@ -5042,7 +5044,7 @@ WITH b AS (
   FROM sims WHERE vec_id < 5
   QUALIFY row_number() OVER (
     PARTITION BY vec_id ORDER BY sim DESC, list_id DESC) <= {nprobe}
-), resd AS (
+), resd AS MATERIALIZED (
   SELECT b.vec_id, a.list_id, [{res_elems}] AS r
   FROM b JOIN asn a ON a.vec_id = b.vec_id
 ), encd AS (
@@ -16541,22 +16543,27 @@ def q_markov_chain(spark, sf_dir):
 
 
 def _markov_sql() -> str:
+    """DuckDB twin of q_markov_chain: 20 power-iteration steps. Every
+    step reads the transition table p, so p and the CTEs it is built
+    from are MATERIALIZED. The steps are too: inlined, the 20-join chain
+    becomes one join-ordering problem that takes DuckDB's optimizer
+    seconds to plan."""
     head = """
 WITH pairs AS (
   SELECT event_type AS s,
          lead(event_type) OVER (PARTITION BY user_id
                                 ORDER BY ts, event_id) AS d
   FROM events
-), agg AS (
+), agg AS MATERIALIZED (
   SELECT s, d, CAST(count(*) AS DOUBLE) AS w
   FROM pairs WHERE d IS NOT NULL GROUP BY 1, 2
-), tot AS (
+), tot AS MATERIALIZED (
   SELECT s, sum(w) AS t FROM agg GROUP BY s
-), states AS (
+), states AS MATERIALIZED (
   SELECT DISTINCT s AS state FROM (
     SELECT s FROM agg UNION ALL SELECT d FROM agg
   )
-), p AS (
+), p AS MATERIALIZED (
   SELECT agg.s, agg.d, agg.w / tot.t AS p
   FROM agg JOIN tot USING (s)
   UNION ALL
@@ -16570,7 +16577,7 @@ WITH pairs AS (
     steps = []
     for i in range(1, 21):
         steps.append(
-            f", pi{i} AS (\n"
+            f", pi{i} AS MATERIALIZED (\n"
             f"  SELECT p.d AS state,\n"
             f"         round(sum(pi{i - 1}.pi * p.p), 12) AS pi\n"
             f"  FROM pi{i - 1} JOIN p ON p.s = pi{i - 1}.state\n"
@@ -17687,29 +17694,15 @@ ORACLES: dict[str, str] = {
     "cliffs_effect": SQL_CLIFFS_EFFECT,
 }
 
-#: Driver-gate ordering. The external verify harness compares exactly the
-#: FIRST 50 entries of ``__spark_entry__.queries()`` against their DuckDB
-#: oracles each round. Rounds 1-2 verified the SURVEY §2 / TPC-H surface
-#: (green in CORRECTNESS_r01/r02 with unchanged definitions since), so
-#: round 3 rotates the 47 LLM-pipeline extension keys into the gate window,
-#: keeping three previously-green canaries (reference-core, TPC-H, window
-#: family). Keys not listed here follow in QUERIES definition order; the
-#: full set is still hash-checked every CI run by test_oracle_parity.py.
+#: Driver-gate ordering, frozen. The driver verifies exactly the first
+#: 50 entries of ``__spark_entry__.queries()`` against their DuckDB
+#: oracles, and these are those 50 keys in that order. The remaining
+#: keys follow in QUERIES definition order. Every key, in or out of
+#: this list, is oracle-checked by tests/test_oracle_parity.py.
 GATE_PRIORITY: list[str] = [
-    # -- canaries: long-green core keys kept PERMANENTLY in the window so
-    #    a regression in the rotated-out majority still has a tripwire.
-    #    Do not rotate these out.
     "tpch_q1",
     "overview_stats",
     "summary_assembly",
-    # -- round 10 rotation, exactly the r10 queue the round-9 window
-    #    documented (stalest-first after a green r9; the policy text of
-    #    earlier windows is in git history — r9: commit 1d1c929, r8:
-    #    37d6b9f). Composition:
-    #
-    # (a) the full r3-last-green cohort (25 keys — every key that would
-    #     breach the <=6-round staleness invariant after round 10;
-    #     tests/test_gate_ledger.py enforces this), alphabetical:
     "embedding_centroids",
     "embedding_neardup",
     "embedding_quantize",
@@ -17735,13 +17728,6 @@ GATE_PRIORITY: list[str] = [
     "users_intersect",
     "vocab_stats",
     "zorder_layout",
-    # (b) the stalest r4-last-green keys fill the remaining 22 slots
-    #     (variant_extract first per the documented r10 queue, then
-    #     alphabetical); the r4 tail (minhash_neardup ..
-    #     winnow_overlap, 24 keys) LEADS the r11 rotation — it reaches
-    #     the staleness floor only after round 11, so one more window
-    #     clears the tier, same two-window cadence the r9->r10 pair
-    #     used:
     "variant_extract",
     "ann_recall",
     "bm25_topk",
@@ -17764,14 +17750,7 @@ GATE_PRIORITY: list[str] = [
     "llm_dataset_build",
     "minhash_exact_pairs",
     "minhash_incremental",
-    # -- the 28 round-9 late-wave keys that previously led this list
-    #    hold committed two-scale greens (CORRECTNESS_multiscale_r09)
-    #    AND r9 driver rows, so their staleness clock starts at r9 —
-    #    no slot needed this round.
 ]
-# ^ 50 slots = the driver-verified window (the external harness
-# compares exactly the FIRST 50 entries of __spark_entry__.queries()
-# against their DuckDB oracles each round).
 
 
 def gate_ordered_queries() -> dict[str, QuerySpec]:
@@ -17915,11 +17894,7 @@ BENCH_QUERIES: list[str] = [
     "scd2_intervals",
     "subject_erasure",
     "ab_ztest",
-    # round-6 additions: close the perf-evidence gap (VERDICT r5 #2) —
-    # every registry key now has a BENCH entry, an sf1 probe (see
-    # scripts/scale_probe.py HEAVY), or a one-line rationale in
-    # PERF_EVIDENCE_EXCLUSIONS below; tests/test_perf_evidence.py
-    # asserts the three-way cover is total.
+    # round-6 additions
     "mutual_knn_selective",
     "doc_kn_lm",
     "doc_kn3_lm",
@@ -18013,7 +17988,7 @@ BENCH_QUERIES: list[str] = [
     "jaccard_linkpred",
     "ipw_lift",
     "rbo_rankers",
-    # round 9, late wave (multiscale-verified; lead the r10 window)
+    # round 9, late wave
     "logrank_survival",
     "kw_groups",
     "ca_trend",
@@ -18043,109 +18018,3 @@ BENCH_QUERIES: list[str] = [
     "wilson_rates",
     "cliffs_effect",
 ]
-
-
-#: One-line rationale for every registry key deliberately carrying
-#: NEITHER a bench entry nor an sf1 scale probe (VERDICT r5 #2: no
-#: silent perf-evidence gaps). tests/test_perf_evidence.py asserts
-#: BENCH ∪ PROBE ∪ this table covers the whole registry exactly.
-PERF_EVIDENCE_EXCLUSIONS: dict[str, str] = {
-    # TPC-H family twins: the benched 11-query subset exercises the
-    # same scan/join/agg machinery at identical scale; twins add wall
-    # time without new plan shapes.
-    "tpch_q4": "TPC-H twin of benched q1-q21 subset (semi-join agg)",
-    "tpch_q7": "TPC-H twin (2-nation join chain; q5/q8 benched)",
-    "tpch_q9": "TPC-H twin (part-like join fan; q8 benched)",
-    "tpch_q11": "TPC-H twin (scalar-threshold agg; q22 shape)",
-    "tpch_q12": "TPC-H twin (shipmode case-agg; q1 shape)",
-    "tpch_q14": "TPC-H twin (promo ratio; q6 shape)",
-    "tpch_q15": "TPC-H twin (max-revenue view; q2 scalar shape)",
-    "tpch_q16": "TPC-H twin (anti-join distinct agg; q21 shape)",
-    "tpch_q19": "TPC-H twin (disjunctive pushdown; q6 shape)",
-    "tpch_q20": "TPC-H twin (nested semi-joins; q21 benched)",
-    "tpch_q22": "TPC-H twin (anti-join + scalar avg; q21 benched)",
-    # Catalog/overview family twins of benched reps (overview_stats,
-    # feature_stats, monthly_activity, availability_pivot): sub-second
-    # single-agg shapes.
-    "daily_availability": "sub-second twin of benched monthly_activity",
-    "iso_week_activity": "sub-second twin of benched monthly_activity",
-    "date_ranges": "sub-second min/max agg; overview_stats benched",
-    "device_split": "sub-second filter-agg; overview_stats benched",
-    "distinct_measurements": "sub-second distinct agg; benched family",
-    "lineitem_unpivot": "stack/unpivot projection; feature_stats benched",
-    "missing_data": "dims-grid anti-join; availability_pivot benched",
-    "rollup_counts": "ROLLUP twin of benched summary_assembly",
-    "cube_counts": "CUBE twin of benched summary_assembly",
-    "grouping_sets": "GROUPING SETS twin of benched summary_assembly",
-    "users_except": "set-op twin; users_intersect same scan pair",
-    "users_intersect": "set-op twin of benched missing-data family",
-    "value_percentiles": "scalar percentile agg; value_histogram benched",
-    "top_terms_per_source": "per-group top-k window; doc_keywords benched",
-    "corpus_composition": "one hash agg; stratified_counts benched",
-    "source_mix": "one hash agg; stratified_counts benched",
-    "split_assignment": "hash-projection twin of benched grouped_folds",
-    "balanced_classes": "scalar-min downsample; stratified_counts benched",
-    # salted_agg_parity moved to the sf1 probe set in r7: the Zipf-
-    # skewed sf1 events make salting evidence measurable, not nominal.
-    # Correctness-certification queries: they CONTAIN a deliberate
-    # brute-force reference side, so a timing measures the reference,
-    # not a production plan (the certified production plans are
-    # benched: ivf_topk, lsh_topk, mutual_knn_selective, minhash_*).
-    "ann_recall": "cert query; brute-force reference side dominates",
-    "ivf_recall": "cert query; brute-force reference side dominates",
-    "multiprobe_recall": "cert query; brute-force side dominates",
-    "mutual_knn_recall": "cert query; exhaustive reference dominates",
-    "minhash_pr_curve": "cert query; exact pair-truth side is output-"
-    "bound on the pathologically self-similar synthetic corpus",
-    "prefix_jaccard": "output-bound at sf0.1 (~24% of doc pairs are "
-    "true >=80%-Jaccard matches); timing measures materialization",
-    "containment_pairs": "output-bound, same corpus pathology as "
-    "prefix_jaccard",
-    "unigram_jaccard_pairs": "bounded all-pairs demo; production path "
-    "is prefix_jaccard (gated) / minhash_neardup (probed)",
-    "golden_records": "composes the pathologically self-similar "
-    "corpus' exact-Jaccard pair set (see prefix_jaccard note) + the "
-    "CC loop; a timing measures fixture pathology, not the "
-    "entity-sized survivorship plan (gated at sf0.01)",
-    # Streaming drains: wall time is micro-batch trigger + checkpoint
-    # latency, not operator throughput; the stateful operators' cost
-    # model is covered by their batch twins (benched/probed).
-    "stateful_sessions_stream": "stream drain; batch twin benched",
-    "stream_dedup": "stream drain; dedup_exact_keep benched",
-    "stream_interval_join": "stream drain; interval join twin benched",
-    "stream_neardup": "stream drain; minhash_incremental benched",
-    "stream_sketch_rollup": "stream drain; hll_user_rollup benched",
-    "stream_manifest": "stream drain; content_manifest probed",
-    "stream_constraints": "stream drain; constraint_report benched",
-    "stream_topk": "stream drain; rank twin top_orders_per_customer "
-    "benched and heavy_hitters benched",
-    # Sink/build pipelines: dominated by file-write fan-out of the
-    # local filesystem, not by plan quality.
-    "heatmap_render": "renders+writes a PNG on build; pivot benched "
-    "via availability_pivot family",
-    "jsonl_roundtrip": "write+read roundtrip; IO-bound by design",
-    "staging_mirror": "distributed file copy; IO-bound by design",
-    "lake_e2e": "fixture-sink gate: timing measures the ~500-tiny-"
-    "gzip fan-out it deliberately synthesizes, not an operator "
-    "(compaction is the production answer it certifies)",
-    "llm_dataset_build": "composite of benched stages (dedup, quality, "
-    "pack)",
-    "corpus_prep": "composite of benched stages",
-    # (orc_roundtrip carries an sf1 probe — no exclusion needed.)
-    # Multimodal: decode is a deterministic STUB in this container
-    # (real codecs absent) — a timing would measure the fake.
-    "binary_metadata": "metadata projection over stub binaries",
-    "multimodal_features": "stub decode; timing measures the fake",
-    "frame_samples": "stub frame sampler; timing measures the fake",
-    # Iterative graph/CC drains (execute on build): scaling evidence
-    # comes from their building blocks' probes.
-    "neardup_clusters": "iterative CC drain; minhash_neardup probed",
-    "neardup_dedup_keep": "CC + keep-rule; minhash_neardup probed",
-    "neardup_pagerank": "pagerank over CC edges; event_pagerank probed",
-    "semantic_dedup": "iterative CC drain; knn_graph probed",
-    # Family twins with a probed/benched representative.
-    "minhash_exact_pairs": "exact-verify twin of probed minhash_neardup",
-    "simhash_groups": "twin of probed simhash_neardup",
-    "doc_fingerprints": "winnowing family; winnow_overlap probed",
-    "approx_sketch_bounds": "bound-verify twin of benched hll_user_rollup",
-}

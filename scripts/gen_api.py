@@ -132,8 +132,7 @@ def build() -> str:
         "_Query registry backing `__spark_entry__.py` and `bench.py`:_",
         "`registry.QUERIES` (key → query builder), `registry.ORACLES`",
         "(key → DuckDB twin SQL), `registry.GATE_PRIORITY` (the driver-",
-        "verified window). One key per operator family — see",
-        "`GATE_LEDGER.json` for the per-key coverage/evidence ledger.",
+        "verified window). One key per operator family.",
         "",
         f"_{n_mod} modules, {n_sym} public symbols._",
         "",

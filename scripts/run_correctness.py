@@ -1,6 +1,6 @@
 """Driver-style correctness gate, runnable standalone: every registry
 query side-by-side with its DuckDB oracle (value-hash compare via
-tests.oracle_utils), rows-only for the hash-based/approximate ops.
+tests.oracle_utils).
 
 Usage:
   python scripts/run_correctness.py [sf_dir] [--keys k1,k2,...]
@@ -28,7 +28,6 @@ sys.path.insert(0, os.path.join(ROOT, "tests"))
 from oracle_utils import check_query  # noqa: E402
 
 from mhm_data_pipelines_spark.benchmarks.registry import (  # noqa: E402
-    ORACLES,
     QUERIES,
     load_table_cache_clear,
     release_query_resources,
@@ -49,16 +48,9 @@ def run_scale(spark, sf: str, names: list[str]) -> tuple[dict, int]:
             "err": None,
         }
         try:
-            if name not in ORACLES:
-                n = QUERIES[name](spark, sf).count()
-                rec.update(rows_match=True, spark_rows=n)
-                print(f"ROWS  {name}: {n}")
-            else:
-                check_query(spark, sf, name)
-                rec.update(
-                    rows_match=True, schema_match=True, hash_match=True
-                )
-                print(f"OK    {name}")
+            check_query(spark, sf, name)
+            rec.update(rows_match=True, schema_match=True, hash_match=True)
+            print(f"OK    {name}")
         except Exception as e:  # noqa: BLE001
             fails += 1
             rec["err"] = str(e)[:300]
@@ -113,11 +105,7 @@ def main() -> int:
         results, fails = run_scale(spark, sf, names)
         total_fails += fails
         record[sf] = results
-        print(
-            f"summary [{sf}]: {len(names)} queries, "
-            f"{sum(1 for n in names if n in ORACLES)} oracle-checked, "
-            f"{fails} failures"
-        )
+        print(f"summary [{sf}]: {len(names)} queries, {fails} failures")
     if args.out:
         out = record if len(scales) > 1 else record[scales[0]]
         with open(args.out, "w") as f:

@@ -66,11 +66,7 @@ HEAVY = [
     # lineitem co-order graph (gen_sf1 offsets order/part keys so the
     # GRAPH scales, not just the edge weights).
     "label_communities",
-    # round-8: close the >2s-warm-but-unprobed gap (VERDICT r7 #2).
-    # HEAVY membership is now ENFORCED, not manual:
-    # tests/test_perf_evidence.py::test_expensive_bench_keys_are_probed
-    # asserts every key whose committed warm bench exceeds 2 s sits in
-    # this list with a committed sf0.1+sf1 probe.
+    # round-8: keys over 2 s warm in the sf0.1 bench.
     "fs_linkage", "ivm_rollup", "embedding_neardup", "ivf_topk",
     "image_phash_neardup", "lsh_topk",
     # round-8 second batch: the new graph keys over the urgent-order

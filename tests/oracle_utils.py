@@ -1,6 +1,6 @@
 """Driver-mimic comparison: run a Spark query and its DuckDB oracle on the
 same parquet tables and compare row-count + schema + order-insensitive
-values (the CORRECTNESS_r{N}.json gate, TESTDATA.md)."""
+values (TESTDATA.md)."""
 
 from __future__ import annotations
 

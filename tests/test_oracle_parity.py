@@ -1,13 +1,7 @@
-"""Every declared query hash-matches its DuckDB oracle (the t2 gate),
-parametrized over the full registry, at sf0.001 for speed. The driver
-runs the same comparison at sf0.01.
-
-Tiering (r10, VERDICT r9 #3 — the suite outgrew the driver's test
-budget): the FULL 312-key sweep is the `slow` tier (run with
-`pytest -m slow`, and per round via scripts/run_correctness.py whose
-CORRECTNESS_full_r*.json artifacts are committed); the DEFAULT tier
-hash-checks the driver's entire 50-key gate window, so the surface the
-driver actually gates on is verified on every default run."""
+"""Every declared query hash-matches its DuckDB oracle, parametrized over
+the full registry, at sf0.001 for speed. The driver runs the same
+comparison at sf0.01 on the first 50 keys of
+``__spark_entry__.queries()``."""
 
 from __future__ import annotations
 
@@ -22,39 +16,16 @@ from tests.oracle_utils import check_query
 from tests.conftest import SF_DIR
 
 
-@pytest.mark.parametrize(
-    "name", [k for k in GATE_PRIORITY if k in ORACLES]
-)
-def test_oracle_parity_gate_window(spark, name):
-    """Default tier: the 50 keys the driver verifies this round."""
-    check_query(spark, SF_DIR, name)
-
-
-@pytest.mark.slow
-@pytest.mark.parametrize(
-    "name", sorted(set(ORACLES) - set(GATE_PRIORITY))
-)
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, name):
-    """Slow tier: every remaining registry key (the gate-window keys
-    already ran in the default tier)."""
     check_query(spark, SF_DIR, name)
-
-
-@pytest.mark.slow
-@pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
-def test_rows_only_queries_run(spark, name):
-    df = QUERIES[name](spark, SF_DIR)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
 
 
 def test_gate_window_covers_extension_surface():
     """The driver verifies exactly the first 50 entries of
-    __spark_entry__.queries(); assert the round-3 rotation holds: all
-    GATE_PRIORITY keys exist, lead the ordering, have oracles, and the
-    full registry is still exposed."""
+    __spark_entry__.queries(): they are GATE_PRIORITY in order, each has
+    an oracle, and the full registry is still exposed."""
     import __spark_entry__ as entry_mod
-    from mhm_data_pipelines_spark.benchmarks.registry import GATE_PRIORITY
 
     q = entry_mod.queries()
     keys = list(q)
@@ -64,72 +35,3 @@ def test_gate_window_covers_extension_surface():
     oracles = entry_mod.oracle_sql()
     missing = [k for k in GATE_PRIORITY if k not in oracles]
     assert not missing, f"gate-window keys lacking oracle SQL: {missing}"
-
-
-def test_never_driver_verified_keys_are_gate_windowed():
-    """The no-never-verified invariant (VERDICT r5 #1, closed in r6):
-    any registry key with no green row in ANY committed
-    CORRECTNESS_r*.json must sit inside the current 50-slot gate
-    window, or it ends the round never driver-verified. This is the
-    tripwire that caught ivm_rollup/image_phash_neardup slipping in
-    after the round's rotation commit.
-
-    Refinement (round 8): the r8 window is fully committed to the
-    staleness-clearing rotation (VERDICT r7 #1) — every slot is a
-    canary, the r2-stale block, or one of the round's first three new
-    keys — so keys added AFTER that rotation cannot be windowed
-    without re-stranding an r2-stale key. For those, a committed
-    CORRECTNESS_multiscale_r*.json green row at EVERY scale it records
-    (same checker as the driver gate — scripts/run_correctness.py —
-    at sf0.01 AND sf0.001, value-hash against DuckDB) is accepted as
-    the round's verification evidence; such keys must then lead the
-    next round's rotation (the GATE_PRIORITY comment records the
-    queue). CI additionally hash-checks every key each run via
-    test_oracle_parity above, so no key is ever release-gated on the
-    window alone."""
-    import glob
-    import json
-    import os
-
-    from mhm_data_pipelines_spark.benchmarks.registry import (
-        GATE_PRIORITY,
-        QUERIES,
-    )
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-    def _green_keys(rec: dict) -> set[str]:
-        return {
-            k
-            for k, v in rec.items()
-            if v.get("hash_match")
-            or (v.get("rows_match") and not v.get("err"))
-        }
-
-    green: set[str] = set()
-    for f in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        with open(f) as fh:
-            rec = json.load(fh)
-        green |= _green_keys(rec)
-    assert green, "no committed CORRECTNESS files found"
-
-    multiscale_green: set[str] = set()
-    for f in sorted(
-        glob.glob(os.path.join(root, "CORRECTNESS_multiscale_r*.json"))
-    ):
-        with open(f) as fh:
-            per_scale = json.load(fh)
-        sets = [_green_keys(rec) for rec in per_scale.values()]
-        # a single-scale record is NOT multiscale evidence — the
-        # contract is green at BOTH sf0.01 and sf0.001
-        if len(sets) >= 2:
-            multiscale_green |= set.intersection(*sets)
-
-    never = set(QUERIES) - green
-    window = set(GATE_PRIORITY[:50])
-    stranded = sorted(never - window - multiscale_green)
-    assert not stranded, (
-        f"{len(stranded)} never-driver-verified keys are outside the "
-        f"gate window AND lack a committed two-scale multiscale green: "
-        f"{stranded}"
-    )

@@ -1,7 +1,5 @@
-"""Perf-evidence closure (VERDICT r5 #2): every registry key must carry
-a BENCH entry, an sf1 scale probe, or a one-line documented exclusion
-— and the three sets must not silently overlap in the exclusion table
-(an excluded key that IS benched means the rationale is stale)."""
+"""scripts/scale_probe.py's own lists agree with the registry and with
+the committed SCALE_PROBE.json it writes."""
 
 from __future__ import annotations
 
@@ -10,7 +8,6 @@ import os
 
 from mhm_data_pipelines_spark.benchmarks.registry import (
     BENCH_QUERIES,
-    PERF_EVIDENCE_EXCLUSIONS,
     QUERIES,
 )
 
@@ -28,30 +25,12 @@ def _probe_mod():
     return mod
 
 
-def _probe_heavy() -> set[str]:
-    return set(_probe_mod().HEAVY)
+def _repo_json(name: str):
+    import json
 
-
-def test_every_query_has_perf_evidence_or_rationale():
-    covered = (
-        set(BENCH_QUERIES) | _probe_heavy() | set(PERF_EVIDENCE_EXCLUSIONS)
-    )
-    missing = sorted(set(QUERIES) - covered)
-    assert not missing, (
-        f"{len(missing)} registry keys have neither a bench entry, an "
-        f"sf1 probe, nor a documented exclusion: {missing}"
-    )
-
-
-def test_exclusions_are_not_stale():
-    evid = set(BENCH_QUERIES) | _probe_heavy()
-    stale = sorted(set(PERF_EVIDENCE_EXCLUSIONS) & evid)
-    assert not stale, (
-        f"excluded keys that now have bench/probe evidence — delete the "
-        f"stale rationale: {stale}"
-    )
-    unknown = sorted(set(PERF_EVIDENCE_EXCLUSIONS) - set(QUERIES))
-    assert not unknown, f"exclusions for non-existent keys: {unknown}"
+    path = os.path.join(os.path.dirname(_SP), "..", name)
+    with open(path) as f:
+        return json.load(f)
 
 
 def test_bench_and_gate_keys_exist():
@@ -64,14 +43,10 @@ def test_heavy_keys_have_committed_probe_results():
     SCALE_PROBE.json must actually hold an sf0.1 AND sf1 result for
     every HEAVY key (VERDICT r6 #1: two r6 keys sat in HEAVY for a
     round with no committed probe, invisible to CI)."""
-    import json
-
-    sp_path = os.path.join(os.path.dirname(_SP), "..", "SCALE_PROBE.json")
-    with open(sp_path) as f:
-        probed = json.load(f)
+    probed = _repo_json("SCALE_PROBE.json")
     missing = sorted(
         k
-        for k in _probe_heavy()
+        for k in _probe_mod().HEAVY
         if k not in probed
         or "sf0.1" not in probed[k]
         or "sf1" not in probed[k]
@@ -80,40 +55,6 @@ def test_heavy_keys_have_committed_probe_results():
         f"HEAVY keys with no committed sf0.1+sf1 probe result in "
         f"SCALE_PROBE.json — re-run scripts/scale_probe.py and commit: "
         f"{missing}"
-    )
-
-
-#: test_expensive_bench_keys_are_probed threshold: a key this slow in
-#: the committed warm bench at sf0.1 is a top-cost query — its scale
-#: story needs committed sf1 evidence, not a manual decision to add it
-#: to HEAVY (VERDICT r7 #2: fs_linkage/ivm_rollup sat >2s for a round
-#: with no probe because HEAVY membership was manual).
-AUTO_HEAVY_WARM_SEC = 2.0
-
-
-def _repo_json(name: str):
-    import json
-
-    path = os.path.join(os.path.dirname(_SP), "..", name)
-    with open(path) as f:
-        return json.load(f)
-
-
-def test_expensive_bench_keys_are_probed():
-    """HEAVY auto-classification: every key whose committed warm bench
-    exceeds AUTO_HEAVY_WARM_SEC must be in scale_probe.HEAVY (and thus,
-    via test_heavy_keys_have_committed_probe_results, carry a committed
-    sf0.1+sf1 probe)."""
-    warm = _repo_json("BENCH_local.json").get("queries_warm") or {}
-    heavy = _probe_heavy()
-    missing = sorted(
-        k for k, sec in warm.items()
-        if sec > AUTO_HEAVY_WARM_SEC and k not in heavy
-    )
-    assert not missing, (
-        f"keys with committed warm bench > {AUTO_HEAVY_WARM_SEC}s but no "
-        f"sf1 scale probe — add to scripts/scale_probe.py HEAVY and "
-        f"re-probe: {missing}"
     )
 
 
@@ -143,39 +84,3 @@ def test_superlinear_probes_are_annotated():
         f"CERTIFIED_COST annotations for keys no longer over 10x — "
         f"delete the stale rationale: {stale}"
     )
-
-
-def test_gate_ledger_is_fresh():
-    """GATE_LEDGER.json (VERDICT r7 #4) must exist and agree with the
-    live registry: same key set, window membership matching
-    GATE_PRIORITY, and perf-evidence classification matching the
-    bench/probe/exclusion sets. Regenerate with
-    ``python scripts/gate_ledger.py --json`` after registry changes."""
-    from mhm_data_pipelines_spark.benchmarks.registry import (
-        GATE_PRIORITY,
-        ORACLES,
-    )
-
-    ledger = _repo_json("GATE_LEDGER.json")
-    keys = ledger["keys"]
-    assert set(keys) == set(QUERIES), (
-        "GATE_LEDGER.json key set differs from the registry — "
-        "regenerate: python scripts/gate_ledger.py --json"
-    )
-    window = set(GATE_PRIORITY)
-    heavy = _probe_heavy()
-    for k, rec in keys.items():
-        assert rec["windowed_r_next"] == (k in window), f"{k}: window stale"
-        want_kinds = []
-        if k in set(BENCH_QUERIES):
-            want_kinds.append("bench")
-        if k in heavy:
-            want_kinds.append("probe")
-        if k in PERF_EVIDENCE_EXCLUSIONS:
-            want_kinds.append("exclusion")
-        assert rec["perf_evidence"] == want_kinds, (
-            f"{k}: perf_evidence stale ({rec['perf_evidence']} vs "
-            f"{want_kinds}) — regenerate the ledger"
-        )
-        want_oracle = "full-value" if ORACLES.get(k) else "rows-only"
-        assert rec["oracle"] == want_oracle, f"{k}: oracle kind stale"
