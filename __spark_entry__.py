@@ -48,7 +48,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2. The first
     50 are GATE_PRIORITY, the frozen set the driver verifies; the rest
-    follow in registry order."""
+    follow in the registry's ``query()`` declaration order."""
 
     def _wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,7 +22,8 @@ extra warm runs and report the MEDIAN of 3 — timings under ~2.5 s showed
 single-run swings up to ~4 s on this host (untouched criterion-set
 queries flapped past 2× on single warm runs; the median run makes the
 judged ratios reflect the code, not the noise floor — measurement-policy
-change, old threshold numbers remain in BENCH_r08.json). The
+change; the round-8 numbers taken under the old threshold are in git
+history). The
 "queries_warm" map is what regression hunting should read:
 ``python scripts/bench_diff.py BENCH_rA.json BENCH_rB.json`` names
 per-query movers. Each run fully materializes via count() — nothing but

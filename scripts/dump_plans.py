@@ -1,9 +1,10 @@
 """Dump full ``.explain("formatted")`` physical plans for named registry
-queries to per-query text files — the before/after plan evidence for
-optimization rounds (``plans/r09/<key>_before.txt`` etc.).
+queries to per-query text files — before/after plan evidence for an
+optimization (``<out>/<key>_before.txt`` etc.; keep such dumps out of
+the tree).
 
 Usage:
-  python scripts/dump_plans.py --out plans/r09 --suffix _before \
+  python scripts/dump_plans.py --out /tmp/plans --suffix _before \
       [--sf-dir /root/testdata/sf0.1] key1 key2 ...
 
 Building a query may run bounded driver-side jobs (iterative operators

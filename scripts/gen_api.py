@@ -131,8 +131,10 @@ def build() -> str:
         "",
         "_Query registry backing `__spark_entry__.py` and `bench.py`:_",
         "`registry.QUERIES` (key → query builder), `registry.ORACLES`",
-        "(key → DuckDB twin SQL), `registry.GATE_PRIORITY` (the driver-",
-        "verified window). One key per operator family.",
+        "(key → DuckDB twin SQL), `registry.BENCH_QUERIES` (keys timed",
+        "by `bench.py`), all three filled by one",
+        "`registry.query(q_<key>, oracle, bench=...)` line per key;",
+        "`registry.GATE_PRIORITY` is the driver-verified window.",
         "",
         f"_{n_mod} modules, {n_sym} public symbols._",
         "",

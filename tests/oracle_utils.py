@@ -16,7 +16,11 @@ TABLES = (
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    # One thread: parallel aggregation merges float partial sums in a
+    # varying order, so an oracle that rounds an average at 6dp can land
+    # on either side of a rounding boundary from run to run
+    # (seasonal_anomalies did in about one run in eight).
+    con = duckdb.connect(config={"threads": 1})
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
@@ -65,9 +69,18 @@ def compare_frames(got: pd.DataFrame, want: pd.DataFrame) -> None:
 
 
 def check_query(spark, sf_dir: str, name: str) -> None:
-    from mhm_data_pipelines_spark.benchmarks.registry import ORACLES, QUERIES
+    from mhm_data_pipelines_spark.benchmarks.registry import (
+        ORACLES,
+        QUERIES,
+        release_query_resources,
+    )
 
-    got = QUERIES[name](spark, sf_dir).toPandas()
+    try:
+        got = QUERIES[name](spark, sf_dir).toPandas()
+    finally:
+        # Frames, scratch dirs and tables the builder registered are
+        # only read by the now-materialized result.
+        release_query_resources()
     con = duck_connection(sf_dir)
     want = con.sql(ORACLES[name]).df()
     compare_frames(got, want)

@@ -8,9 +8,11 @@ from __future__ import annotations
 import pytest
 
 from mhm_data_pipelines_spark.benchmarks.registry import (
+    BENCH_QUERIES,
     GATE_PRIORITY,
     ORACLES,
     QUERIES,
+    query,
 )
 from tests.oracle_utils import check_query
 from tests.conftest import SF_DIR
@@ -35,3 +37,12 @@ def test_gate_window_covers_extension_surface():
     oracles = entry_mod.oracle_sql()
     missing = [k for k in GATE_PRIORITY if k not in oracles]
     assert not missing, f"gate-window keys lacking oracle SQL: {missing}"
+
+
+def test_query_rejects_duplicate_key():
+    """Declaring an already registered key raises before it touches any
+    of the three tables ``query()`` fills."""
+    before = (dict(QUERIES), dict(ORACLES), list(BENCH_QUERIES))
+    with pytest.raises(ValueError, match="overview_stats"):
+        query(QUERIES["overview_stats"], "SELECT 1", bench=True)
+    assert (QUERIES, ORACLES, BENCH_QUERIES) == before

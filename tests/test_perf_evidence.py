@@ -1,15 +1,10 @@
-"""scripts/scale_probe.py's own lists agree with the registry and with
-the committed SCALE_PROBE.json it writes."""
+"""scripts/scale_probe.py's own lists agree with the committed
+SCALE_PROBE.json it writes."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
-
-from mhm_data_pipelines_spark.benchmarks.registry import (
-    BENCH_QUERIES,
-    QUERIES,
-)
 
 _SP = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -31,11 +26,6 @@ def _repo_json(name: str):
     path = os.path.join(os.path.dirname(_SP), "..", name)
     with open(path) as f:
         return json.load(f)
-
-
-def test_bench_and_gate_keys_exist():
-    unknown = sorted(set(BENCH_QUERIES) - set(QUERIES))
-    assert not unknown, f"bench entries for non-existent keys: {unknown}"
 
 
 def test_heavy_keys_have_committed_probe_results():
