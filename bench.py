@@ -1,41 +1,51 @@
-"""Benchmark runner: times the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark runner: measures the bench keys at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output contract (r5 structural fix for the 2 KB tail-capture window):
-the final stdout line is a BYTE-BOUNDED JSON object — metric/"value"
-(cold total)/unit/warm_total/sf/n_queries plus the top slowest queries
-under "queries" with their WARM times, trimmed until the line fits
-``STDOUT_BYTE_BUDGET`` (BENCH_r03 was lost to an oversized line; r4's
-full-map line grew with every added query). The full record (cold AND
-warm per-query maps, 3-decimal) is written to ``BENCH_local.json`` next
-to this file; that file is what ``python scripts/bench_diff.py`` should
-read for regression hunting.
+:func:`measure` records one key:
 
-Every query runs at least TWICE: the first (cold) run includes plan +
-codegen compile — that's what "value" totals, keeping round-over-round
-totals comparable — and the warm run isolates
-execution time (cold is typically 3-5× warm on sub-second queries;
-memory-noted). Queries whose first warm run lands under 4 s get TWO
-extra warm runs and report the MEDIAN of 3 — timings under ~2.5 s showed
-1.7-2.4× run-to-run jitter that made round-over-round diffs unreadable
-(VERDICT r8 #3), and r9 widened the band to 4 s after measuring ±30-50%
-single-run swings up to ~4 s on this host (untouched criterion-set
-queries flapped past 2× on single warm runs; the median run makes the
-judged ratios reflect the code, not the noise floor — measurement-policy
-change; the round-8 numbers taken under the old threshold are in git
-history). The
-"queries_warm" map is what regression hunting should read:
-``python scripts/bench_diff.py BENCH_rA.json BENCH_rB.json`` names
-per-query movers. Each run fully materializes via count() — nothing but
-the count reaches the driver.
+- ``queries`` (cold): a fresh build plus ``count()``, plan and codegen
+  compile included. "value" totals these, which keeps totals
+  comparable from run to run.
+- ``queries_warm``: the key rebuilt and counted again. When the first
+  warm run is under 4 s, two more follow and the median of the three
+  is kept: single runs under ~4 s swung ±30-50% on unchanged code.
+- ``counters``: jobs, stages, tasks, shuffle write bytes and spill
+  bytes of the cold run. They are read in-process from Spark's status
+  store (``perfbench.probe.SparkCounters``) under one job group per
+  key, plus the job group of every stream the key starts. Walls on a
+  shared host swing 2-11×; counters reproduce exactly, so they are the
+  regression signal.
+- ``stream_batches`` (streaming keys only): one row per micro-batch of
+  the cold run, from a ``StreamingQueryListener``: batch id, input
+  rows, addBatch and offset-commit ms, and state rows.
+
+Each run fully materializes via ``count()``; nothing but the count
+reaches the driver. The final stdout line is a byte-bounded JSON
+object (totals plus the slowest warm keys, see
+:func:`build_stdout_record`); the full record goes to
+``BENCH_local.json`` next to this file, and
+``python scripts/bench_diff.py OLD.json NEW.json`` names the keys whose
+counters or walls moved.
+
+``SPARK_GRAFT_BENCH_KEYS`` (comma-separated keys) and
+``SPARK_GRAFT_BENCH_OUT`` (record file name) select a subset and its
+record. The two-scale check runs the same harness on the 10× data:
+
+    python scripts/gen_sf1.py && SPARK_GRAFT_SF_DIR=/tmp/mhm_sf1 \
+        SPARK_GRAFT_BENCH_KEYS=<keys> SPARK_GRAFT_BENCH_OUT=BENCH_sf1.json \
+        python bench.py
+    python scripts/bench_diff.py BENCH_local.json BENCH_sf1.json --threshold 12
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
 import time
+
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -45,6 +55,10 @@ from mhm_data_pipelines_spark.benchmarks.registry import (  # noqa: E402
     release_query_resources,
 )
 from mhm_data_pipelines_spark.session import get_spark  # noqa: E402
+from perfbench.probe import SparkCounters  # noqa: E402
+
+#: The per-key ``counters`` fields, as :meth:`SparkCounters.read` names them.
+COUNTER_FIELDS = ("jobs", "stages", "tasks", "shuffle_bytes", "spill_bytes")
 
 
 #: Hard byte budget for the final stdout JSON line. The external
@@ -138,6 +152,91 @@ def build_stdout_record(
     return line
 
 
+class StreamLedger(StreamingQueryListener):
+    """Streams started since :meth:`clear` and the micro-batch progress
+    of every stream, by run id. Spark reports a stream's start on the
+    thread that starts it, and its progress later on the listener bus.
+    A stream's micro-batch jobs run under its run id as job group, not
+    under the job group of the key that started it."""
+
+    def __init__(self) -> None:
+        self.runs: list[str] = []
+        self.batches: dict[str, list[dict]] = {}
+
+    def clear(self) -> None:
+        self.runs.clear()
+        self.batches.clear()
+
+    def onQueryStarted(self, event) -> None:
+        self.runs.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:
+        p = event.progress
+        self.batches.setdefault(str(p.runId), []).append({
+            "batch": p.batchId,
+            "input_rows": p.numInputRows,
+            "add_batch_ms": p.durationMs.get("addBatch"),
+            "commit_ms": p.durationMs.get("commitOffsets"),
+            "state_rows": sum(s.numRowsTotal for s in p.stateOperators),
+        })
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+
+def measure(
+    spark, sf_dir: str, name: str, counters: SparkCounters, ledger: StreamLedger
+) -> dict:
+    """Measure one bench key: cold and warm walls, row count, the cold
+    run's counters and, for streaming keys, its micro-batch ledger.
+    ``ledger`` must be registered with ``spark.streams.addListener``."""
+    group = f"bench:{name}"
+    ledger.clear()
+    counters.set_group(group)
+    t0 = time.perf_counter()
+    rows = QUERIES[name](spark, sf_dir).count()
+    cold = time.perf_counter() - t0
+    counters.set_group(None)
+    # read() drains the listener bus first, so every progress event of
+    # the cold run's streams has arrived once the key's group is read.
+    totals = counters.read(group)
+    runs = list(ledger.runs)
+    for run in runs:
+        for field, v in counters.read(run).items():
+            totals[field] += v
+    rec = {
+        "cold": round(cold, 3),
+        "rows": rows,
+        "counters": {f: int(totals[f]) for f in COUNTER_FIELDS},
+        "stream_batches": [b for r in runs for b in ledger.batches.get(r, [])],
+    }
+    # Warm runs rebuild the query, so caches and persists internal to
+    # the query function are re-created too; plan and codegen are now
+    # JIT-warm.
+    def warm_run() -> float:
+        t = time.perf_counter()
+        QUERIES[name](spark, sf_dir).count()
+        return time.perf_counter() - t
+
+    reps = [warm_run()]
+    if reps[0] < 4.0:
+        reps += [warm_run(), warm_run()]
+    rec["warm"] = round(sorted(reps)[len(reps) // 2], 3)
+    # Release builder-owned resources (persisted index frames, mkdtemp
+    # sink and stream scratch), drop the DataFrame references and run a
+    # JVM GC here, outside the timed regions: localCheckpoint blocks are
+    # freed by the ContextCleaner only once the Python refs die and a
+    # JVM GC runs, and blocks left over from one key slowed the next
+    # (identical keys drifted 7.7 s -> 16.4 s over one session).
+    release_query_resources()
+    gc.collect()
+    try:
+        spark._jvm.System.gc()
+    except Exception:
+        pass  # connect-mode: no JVM handle
+    return rec
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -193,59 +292,19 @@ def main() -> None:
         lambda it: it, schema=region.schema
     ).count()
 
-    cold: dict[str, float] = {}
-    warm: dict[str, float] = {}
+    counters = SparkCounters(spark)
+    ledger = StreamLedger()
+    spark.streams.addListener(ledger)
+    recs = {}
     for name in bench_keys:
-        t0 = time.perf_counter()
-        df = QUERIES[name](spark, sf_dir)
-        n = df.count()
-        cold[name] = round(time.perf_counter() - t0, 3)
-        # Fresh build so caches/persists internal to the query function
-        # are re-created too; plan + codegen are now JIT-warm.
-        t1 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).count()
-        first_warm = time.perf_counter() - t1
-        reps = [first_warm]
-        # Sub-second queries showed 1.7-2.4x run-to-run swings in the
-        # r8 round-over-round diff (VERDICT r8 #3) — scheduler jitter,
-        # not plan changes — and the band up to ~4 s still bounced
-        # ±30-50% on this host (minhash_neardup measured 1.6-3.7 s,
-        # untouched criterion queries flapped past 2× on single runs).
-        # Report the MEDIAN of 3 warm runs below 4 s so bench_diff
-        # ratios and the criterion's worst-query stat are readable;
-        # heavier queries are stable at one run and stay cheap.
-        if first_warm < 4.0:
-            for _ in range(2):
-                t = time.perf_counter()
-                QUERIES[name](spark, sf_dir).count()
-                reps.append(time.perf_counter() - t)
-        warm[name] = round(sorted(reps)[len(reps) // 2], 3)
-        # Deterministic, scoped release of builder-owned resources
-        # (persisted index frames, mkdtemp sink/stream scratch) — the
-        # r4 blanket clearCache() hid which queries leaked (ADVICE r4).
-        release_query_resources()
-        # Drop the per-query DataFrame references and trigger a JVM GC
-        # NOW, between queries: localCheckpoint blocks (iterative
-        # graph/stream queries) are only released by the ContextCleaner
-        # once the Python refs die and a JVM GC runs; without this,
-        # blocks from query k inflate queries k+1.. (measured:
-        # identical queries drift 7.7 s → 16.4 s over one session as
-        # checkpoint blocks accumulate). The GC runs OUTSIDE the timed
-        # regions — a periodic-timer GC (spark.cleaner.periodicGC) at
-        # short intervals fires MID-query and inflated the criterion
-        # set 40%, so cleanup happens at this safe point instead.
-        import gc
-
-        gc.collect()
-        try:
-            spark._jvm.System.gc()
-        except Exception:
-            pass  # connect-mode: no JVM handle; periodicGC covers it
+        recs[name] = rec = measure(spark, sf_dir, name, counters, ledger)
         print(
-            f"# {name}: cold {cold[name]:.3f}s / warm {warm[name]:.3f}s"
-            f" ({n} rows)",
+            f"# {name}: cold {rec['cold']:.3f}s / warm {rec['warm']:.3f}s"
+            f" ({rec['rows']} rows, {rec['counters']['jobs']} jobs)",
             file=sys.stderr,
         )
+    cold = {k: r["cold"] for k, r in recs.items()}
+    warm = {k: r["warm"] for k, r in recs.items()}
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # The frozen criterion baseline (BENCH_r02.json) was recorded at
@@ -262,8 +321,12 @@ def main() -> None:
         "sf": sf_val,
         "warm_policy": "median-of-3 when first warm run < 4 s",
         "criterion": crit,
+        "counters": {k: r["counters"] for k, r in recs.items()},
+        "stream_batches": {
+            k: r["stream_batches"] for k, r in recs.items() if r["stream_batches"]
+        },
     }
-    # Full record (cold + warm maps, 3-dec) for scripts/bench_diff.py.
+    # Full record for scripts/bench_diff.py.
     local_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), out_name
     )

@@ -179,6 +179,14 @@ import atexit
 atexit.register(release_query_resources)
 
 
+def _await_drain(q, key: str) -> None:
+    """Wait for an availableNow stream to drain. On timeout stop it and
+    raise, because its sink would hold a partial result."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"{key}: availableNow drain exceeded 300 s")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table. ``events.ts`` has shipped as both
     TIMESTAMP(NANOS) — which Spark reads as LongType nanos under the
@@ -1966,15 +1974,9 @@ def q_stateful_sessions_stream(spark, sf_dir):
 
     stream = _event_stream(spark, sf_dir)
     out = stateful_sessions(stream, gap_minutes=30.0, watermark="36500 days")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("_stateful_sessions_gate")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table("_stateful_sessions_gate").select(
+    return _drain_to_table(
+        out, "_stateful_sessions_gate", "stateful_sessions_stream"
+    ).select(
         "user_id",
         F.unix_micros("session_start").alias("start_us"),
         F.unix_micros("session_end").alias("end_us"),
@@ -2029,7 +2031,8 @@ def _event_stream(spark, sf_dir):
     return _normalize_ts(st)
 
 
-def _drain_to_table(out, name):
+def _drain_to_table(out, name, key):
+    """Drain ``out`` into the in-memory table ``name`` and return it."""
     q = (
         out.writeStream.format("memory")
         .queryName(name)
@@ -2037,7 +2040,7 @@ def _drain_to_table(out, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_drain(q, key)
     return out.sparkSession.table(name)
 
 
@@ -2064,6 +2067,7 @@ def q_stream_dedup(spark, sf_dir):
             "value",
         ),
         "_stream_dedup_gate",
+        "stream_dedup",
     )
     return got
 
@@ -2101,6 +2105,7 @@ def q_stream_interval_join(spark, sf_dir):
             F.unix_micros("r_ts").alias("r_ts_us"),
         ),
         "_stream_ijoin_gate",
+        "stream_interval_join",
     )
     return got
 
@@ -2824,7 +2829,18 @@ def q_dup_spans_recall(spark, sf_dir):
     matched-gram recall (capped gram matches are a strict subset of
     exact ones — precision is 1 by construction), span counts, and how
     many spans survive bitwise identical. One summary row; the
-    fan-out-bounding cap's cost is now a number, not a hope."""
+    fan-out-bounding cap's cost is now a number, not a hope.
+
+    Cost ceiling: the uncapped exact side's pair fan-out is quadratic
+    in the planted boilerplate gram DF by construction, and the 10×
+    data from scripts/gen_sf1.py plants 10× the boilerplate (11.2× wall
+    on 10× data in the sf0.1-to-sf1 probe record of commit 518122b).
+    That cost is the price of the ground truth, not a plan to
+    optimize; the production path it certifies (dup_spans /
+    span_dedup, max_gram_df=1000) stays near-linear. Run it at
+    sf<=0.1; at sf>=1 certify on a doc sample. Re-measure with the sf1 ``bench.py`` run and
+    ``scripts/bench_diff.py BENCH_local.json BENCH_sf1.json
+    --threshold 12``."""
     from mhm_data_pipelines_spark.operators.dedup import (
         duplicate_ngram_spans,
     )
@@ -5820,13 +5836,7 @@ def q_stream_neardup(spark, sf_dir):
         hash_family="md5",
     )
     q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_neardup: availableNow drain exceeded 300 s — "
-            "matches table would be partial; failing instead of "
-            "returning it"
-        )
+    _await_drain(q, "stream_neardup")
     return (
         spark.read.parquet(f"{root}/matches")
         .select(
@@ -7036,11 +7046,7 @@ def q_stream_sketch_rollup(spark, sf_dir):
         key="user_id",
     )
     q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_sketch_rollup: availableNow drain exceeded 300 s"
-        )
+    _await_drain(q, "stream_sketch_rollup")
     daily = read_sketch_table(spark, f"{root}/sketches", ("day",))
     weekly = rollup_sketches(daily, [iso_week_key("day").alias("iso_week")])
     est = estimate(weekly)
@@ -8635,11 +8641,7 @@ def q_stream_manifest(spark, sf_dir):
         n_buckets=64,
     )
     q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_manifest: availableNow drain exceeded 300 s"
-        )
+    _await_drain(q, "stream_manifest")
     return read_manifest_table(spark, f"{root}/manifest").orderBy("bucket")
 
 
@@ -10493,11 +10495,7 @@ def q_stream_dim_join(spark, sf_dir):
         checkpoint=f"{root}/ck",
     )
     q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_dim_join: availableNow drain exceeded 300 s"
-        )
+    _await_drain(q, "stream_dim_join")
     merged = read_enriched_table(
         spark, f"{root}/enriched", ["c_mktsegment"]
     )
@@ -12214,11 +12212,7 @@ def q_stream_constraints(spark, sf_dir):
         refs={"customer": dim},
     )
     q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_constraints: availableNow drain exceeded 300 s"
-        )
+    _await_drain(q, "stream_constraints")
     return read_validation_table(spark, f"{root}/report").orderBy("rule")
 
 
@@ -13328,11 +13322,7 @@ def q_stream_topk(spark, sf_dir):
         item_col="user_id",
     )
     q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError(
-            "stream_topk: availableNow drain exceeded 300 s"
-        )
+    _await_drain(q, "stream_topk")
     out = read_topk_table(
         spark, f"{root}/topk", ("event_type",), "user_id", k=5
     )
@@ -14195,17 +14185,7 @@ def q_stream_holt(spark, sf_dir):
 
     stream = _event_stream(spark, sf_dir)
     out = holt_stream(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("_stream_holt_gate")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_holt drain exceeded 300s")
-    snap = spark.table("_stream_holt_gate")
+    snap = _drain_to_table(out, "_stream_holt_gate", "stream_holt")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_points"))
     return (
         snap.withColumn("_rk", F.row_number().over(w))
@@ -15332,7 +15312,7 @@ def q_stream_cdc(spark, sf_dir):
         checkpoint_dir=f"{root}/ckpt",
         n_buckets=8,
     )
-    q.awaitTermination(300)
+    _await_drain(q, "stream_cdc")
     return read_cdc_snapshot(spark, f"{root}/snapshot").orderBy("k")
 
 
@@ -16455,17 +16435,7 @@ def q_stream_anomaly(spark, sf_dir):
 
     stream = _event_stream(spark, sf_dir)
     out = ewma_anomaly_stream(stream, alpha=0.25, threshold=3.0)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("_stream_anomaly_gate")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("stream_anomaly drain exceeded 300s")
-    snap = spark.table("_stream_anomaly_gate")
+    snap = _drain_to_table(out, "_stream_anomaly_gate", "stream_anomaly")
     w = Window.partitionBy("user_id").orderBy(F.desc("n_points"))
     return (
         snap.withColumn("_rk", F.row_number().over(w))

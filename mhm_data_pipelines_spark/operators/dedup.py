@@ -1075,11 +1075,12 @@ def embedding_near_duplicates(
     OUTPUT-BOUND at scale: emitting every qualifying pair costs what
     the pair count costs — on near-dup-rich corpora that is
     quadratic-in-cluster-size output even though the join itself is
-    blocked (scripts/scale_probe.py records 88x wall on 10x data with
-    ~14000x the TRUE pairs; wall tracks output, not compute). For
-    production dedup, aggregate instead of emitting: feed these pairs
-    into connected_components / *_dedup_keep paths, or cap per-block
-    fan-out upstream."""
+    blocked (88x wall on 10x data with ~14000x the TRUE pairs in the
+    sf0.1-to-sf1 probe record of commit 518122b; wall tracks output,
+    not compute; re-measure with the sf1 bench.py run and
+    scripts/bench_diff.py). For production dedup, aggregate instead of
+    emitting: feed these pairs into connected_components /
+    *_dedup_keep paths, or cap per-block fan-out upstream."""
     base = df.select(
         F.col(id_col),
         normalize(vec_col).alias("v"),

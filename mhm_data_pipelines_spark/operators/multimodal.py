@@ -413,10 +413,12 @@ def ahash_near_duplicates(
     OUTPUT-BOUND at scale: the banded Hamming join is bucket-capped,
     but emitting every qualifying pair costs what the pair count
     costs — near-dup-rich image corpora produce quadratic-in-cluster
-    output (scripts/scale_probe.py records 112x wall on 10x data with
-    ~100x the TRUE pairs; wall tracks output, not compute). At
-    production scale aggregate the pairs (connected components /
-    keep-one-per-cluster) instead of materializing them."""
+    output (112x wall on 10x data with ~100x the TRUE pairs in the
+    sf0.1-to-sf1 probe record of commit 518122b; wall tracks output,
+    not compute; re-measure with the sf1 bench.py run and
+    scripts/bench_diff.py). At production scale aggregate the pairs
+    (connected components / keep-one-per-cluster) instead of
+    materializing them."""
     from mhm_data_pipelines_spark.operators.dedup import (
         hamming_near_duplicates,
     )

@@ -1,16 +1,19 @@
-"""Round-over-round bench regression diff.
+"""Bench record diff: counters first, then walls.
 
-Usage: python scripts/bench_diff.py BENCH_rOLD.json BENCH_rNEW.json
+Usage: python scripts/bench_diff.py BENCH_OLD.json BENCH_NEW.json
        [--threshold 1.3] [--metric warm|cold]
-       python scripts/bench_diff.py BENCH_rNEW.json
+       python scripts/bench_diff.py BENCH_NEW.json
        (one file: compares against the FROZEN baseline — BENCH_r02.json,
         the per-query table written into BASELINE.md)
 
-Compares per-query times between two bench.py outputs and prints movers
-sorted by ratio. Prefers the warm map ("queries_warm") when both files
-have it — warm isolates execution from codegen-compile noise — else
-falls back to the cold map ("queries"). Exit code 1 when any query
-regresses past the threshold (so a driver/CI step can gate on it).
+Lists every key whose ``counters`` (jobs, stages, tasks, shuffle and
+spill bytes; see bench.py) differ between the two records — counters
+reproduce exactly, so any difference is a plan or data change. Then
+compares per-key walls and prints movers sorted by ratio, from the warm
+map ("queries_warm") when both files have it, else the cold map
+("queries"). Exit code 1 when any key's wall regresses past the
+threshold (so a CI step can gate on it); counter differences are
+reported, not gated.
 """
 
 from __future__ import annotations
@@ -21,18 +24,38 @@ import os
 import sys
 
 
-def load(path: str, metric: str) -> dict[str, float]:
+def read(path: str) -> dict:
     with open(path) as f:
         raw = f.read().strip()
     try:
-        doc = json.loads(raw)  # bench.py line or driver's pretty JSON
+        doc = json.loads(raw)  # a bench.py record or pretty-printed JSON
     except json.JSONDecodeError:
         doc = json.loads(raw.splitlines()[-1])  # JSON line after noise
     if "queries" not in doc and isinstance(doc.get("parsed"), dict):
         doc = doc["parsed"]  # driver-wrapped BENCH_r{N}.json
+    return doc
+
+
+def walls(doc: dict, metric: str) -> dict[str, float]:
     if metric == "warm":
         return doc.get("queries_warm") or doc["queries"]
     return doc["queries"]
+
+
+def counter_changes(old: dict, new: dict) -> list[str]:
+    """One line per key, present in both ``counters`` maps, whose
+    counters differ: ``key: field old -> new, ...``."""
+    lines = []
+    for key in sorted(set(old) & set(new)):
+        o, n = old[key], new[key]
+        moved = [
+            f"{f} {o.get(f)} -> {n.get(f)}"
+            for f in sorted(set(o) | set(n))
+            if o.get(f) != n.get(f)
+        ]
+        if moved:
+            lines.append(f"{key}: " + ", ".join(moved))
+    return lines
 
 
 #: The written baseline (BASELINE.md "Frozen per-query baseline"):
@@ -64,8 +87,18 @@ def main() -> int:
     else:
         ap.error("expected one or two BENCH files")
 
-    old = load(old_path, args.metric)
-    new = load(new_path, args.metric)
+    old_doc, new_doc = read(old_path), read(new_path)
+    old_c, new_c = old_doc.get("counters", {}), new_doc.get("counters", {})
+    changed = counter_changes(old_c, new_c)
+    print(
+        f"counters: {len(changed)} of {len(set(old_c) & set(new_c))} "
+        f"shared keys differ"
+    )
+    for line in changed:
+        print(f"  {line}")
+
+    old = walls(old_doc, args.metric)
+    new = walls(new_doc, args.metric)
 
     rows = []
     for name in sorted(set(old) & set(new)):

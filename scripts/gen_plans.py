@@ -1012,38 +1012,6 @@ def main() -> None:
             f"\n## {name}\n\n{note}\n\n```\n" + "\n".join(lines[:60]) + "\n```\n"
         )
 
-    probe = os.path.join(os.path.dirname(__file__), "..", "SCALE_PROBE.json")
-    if os.path.exists(probe):
-        import json
-
-        rec = json.load(open(probe))
-        out.append(
-            "\n## Scale probe (sf0.1 -> sf1, 10x data; "
-            "scripts/gen_sf1.py + scripts/scale_probe.py)\n\n"
-            "Warm wall-time per heavy query, one order of magnitude up. "
-            "A ratio <= ~10 on 10x data means the plan scales linearly "
-            "or better; >12 would flag a super-linear step "
-            "(hot-bucket caps / AQE not holding). Both scales "
-            "deliberately run at 32 shuffle partitions; a flagged query "
-            "is re-probed at 128 (the sp128 column) because a cluster "
-            "scales shuffle parallelism with the data - a ratio that "
-            "collapses at sp128 is partition starvation, not "
-            "super-linear work (observed once for minhash_neardup: "
-            "32.5s -> 14.1s, i.e. 5.5x on 10x data).\n\n"
-            "| query | sf0.1 s | sf1 s | ratio | sf1@sp128 | rows sf1 |\n"
-            "|---|---|---|---|---|---|"
-        )
-        for name, r in rec.items():
-            sp128 = (
-                f"{r['sf1_sp128']['sec']}s ({r['ratio_10x_data_sp128']}x)"
-                if "sf1_sp128" in r
-                else "-"
-            )
-            out.append(
-                f"| {name} | {r['sf0.1']['sec']} | {r['sf1']['sec']} "
-                f"| {r['ratio_10x_data']}x | {sp128} | {r['sf1']['rows']} |"
-            )
-
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(NOTES)} sections)")

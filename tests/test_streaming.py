@@ -370,3 +370,25 @@ def test_cdc_stream_single_key_bucket_fully_deleted(spark, tmp_path):
     )
     q.awaitTermination(180)
     assert read_cdc_snapshot(spark, snap).count() == 0
+
+
+def test_drain_timeout_stops_stream_and_names_key():
+    """A drain that outlives its timeout must not hand back a partial
+    sink: the stream is stopped and the error names the key."""
+    import pytest
+
+    from mhm_data_pipelines_spark.benchmarks.registry import _await_drain
+
+    class StuckQuery:
+        stopped = False
+
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            self.stopped = True
+
+    q = StuckQuery()
+    with pytest.raises(TimeoutError, match="stream_cdc"):
+        _await_drain(q, "stream_cdc")
+    assert q.stopped
