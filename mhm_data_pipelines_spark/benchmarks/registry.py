@@ -5482,9 +5482,10 @@ def q_lake_e2e(spark, sf_dir):
        driver loop. Timestamps ship as epoch-µs longs (exact CSV
        round-trip; day math happens after re-read).
     2. SCAN: ``compact_lake`` re-reads the raw lake through
-       ``read_lake_unified`` (S1 glob scan + S2 path dims + typeless
-       string normalization) and rewrites it as parquet PARTITIONED BY
-       (site, participant_id, metric) (S8 sink, A1 bucketing).
+       ``read_lake_unified`` (S1 glob scan + S2 path dims + an
+       all-STRING schema from each metric's header) and rewrites it as
+       parquet PARTITIONED BY (site, participant_id, metric) (S8 sink,
+       A1 bucketing).
     3. QUERY: the compacted lake is read back (``read_compacted``) and
        aggregated per (site, participant_id, metric): row count, A5
        distinct days, A4 first/last day, value sum — the overview

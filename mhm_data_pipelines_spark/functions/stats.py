@@ -41,14 +41,15 @@ def distinct_days(ts: Column | str, exact: bool = True, rsd: float = 0.01) -> Co
     ``day_set`` (process-overview.py:120-126, data_collection.py:48-62,
     extract_patient_summary.py:111,382-388).
 
-    ``exact=False`` switches to HyperLogLog (``approx_count_distinct``)
-    for the 100 TB path where an exact distinct forces a full shuffle of
-    the day column per group.
+    The exact count is the size of the group's set of days: a set holds
+    at most one entry per calendar day, so it stays small, and unlike
+    ``count_distinct`` it needs no second shuffle. ``exact=False``
+    switches to HyperLogLog (``approx_count_distinct``).
     """
     c = F.col(ts) if isinstance(ts, str) else ts
     d = F.to_date(c)
     if exact:
-        return F.count_distinct(d)
+        return F.size(F.collect_set(d)).cast("long")
     return F.approx_count_distinct(d, rsd)
 
 

@@ -9,14 +9,14 @@ incremental semantics (``:68-70``) with ``--update`` override
 description, ``/root/reference/README.md:64-66``; filename-month key
 ``:33-44``).
 
-Spark design: ONE job — read every matching file, derive the dimension
-columns from paths (sources.lake), write
-``PARTITIONED BY (site, participant_id, metric)`` parquet. The partition
-columns are the source layout's dimensions in ``sources.lake.LAYOUTS``
-minus ``top_level`` (a flat lake has no ``site``); this module defines
-no positions or partition lists of its own. Grouping is
-the write partitioning (no driver loop); "merge" is the multi-file read
-itself. The output is the *compacted lake*: real partition columns means
+Spark design: one pass — read every matching file, derive the dimension
+columns from paths (sources.lake), rebalance on the partition columns and
+write ``PARTITIONED BY (site, participant_id, metric)`` parquet, one file
+per partition. The partition columns are the source layout's dimensions
+in ``sources.lake.LAYOUTS`` minus ``top_level`` (a flat lake has no
+``site``); this module defines no positions or partition lists of its
+own. Grouping is the write partitioning (no driver loop); "merge" is the
+multi-file read itself. The output is the *compacted lake*: real partition columns means
 every downstream include/exclude (P4) becomes partition pruning, and the
 thousands-of-tiny-gzip problem (§4.2) disappears after one pass.
 
@@ -52,7 +52,11 @@ def compact_lake(
     merge-data.py:68-70); ``update=True`` → dynamic partition overwrite
     (only partitions present in this batch are rewritten — the per-group
     re-merge of ``--update``). ``monthly=True`` adds the filename-month
-    as a fourth partition column (W3 batch bucketing)."""
+    as a fourth partition column (W3 batch bucketing). Rows are
+    rebalanced on the partition columns before the write, so each
+    partition directory is written by one task and gets one file (more
+    only where AQE splits a skewed partition; small ones are coalesced
+    into shared tasks)."""
     df = read_lake_unified(
         spark, raw_root, layout=layout, include=include, exclude=exclude
     )
@@ -62,7 +66,7 @@ def compact_lake(
             "batch_month", F.date_format("file_timestamp", "yyyy-MM")
         )
         partitions.append("batch_month")
-    writer = df.write.format(fmt)
+    writer = df.hint("rebalance", *partitions).write.format(fmt)
     if fmt == "csv":
         writer = writer.option("header", "true").option("compression", "gzip")
     if update:

@@ -7,14 +7,18 @@ dict keyed ``(participant_id, time_key)`` holding running sets/lists/
 counters (``:217-235``), finalized into one nested JSON document per key
 (``:379-435``). Memory is O(all extracted values) on one machine.
 
-Spark shape: four aggregated DataFrames — feature stats, questionnaire
-counts, slider stats, histogram counts — each one hash-agg shuffle,
-assembled with full-outer joins on ``(participant_id, time_key)`` (J1).
-Absent families yield zero-count blocks, not missing keys
-(``total_entries: 0`` default at ``:228`` — SURVEY §7 watch-list #8), so
-counts are null-filled to 0 post-join. The document sink is
-``to_json(struct(...))`` partitioned by participant — fully distributed,
-no driver accumulation.
+Spark shape: feature rows take ONE aggregation pass per (participant,
+period, feature) that also keeps each feature's set of days and its site;
+one ``groupBy(participant_id, time_key)`` over those rows then builds the
+nested ``feature_statistics`` map together with the overall date range,
+day count and feature list, so each feature's rows are scanned once and
+need no join. The other families — questionnaire counts, slider stats,
+histogram counts — are one hash-agg shuffle each, assembled with
+full-outer joins on ``(participant_id, time_key)`` (J1). Absent families
+yield zero-count blocks, not missing keys (``total_entries: 0`` default
+at ``:228`` — SURVEY §7 watch-list #8), so counts are null-filled to 0
+post-join. The document sink is ``to_json(struct(...))`` partitioned by
+participant — fully distributed, no driver accumulation.
 """
 
 from __future__ import annotations
@@ -42,7 +46,9 @@ def feature_statistics(
     rows: DataFrame, resolution: str = "monthly"
 ) -> DataFrame:
     """Per (participant, period, feature): stats block + days_with_data
-    (extract_patient_summary.py:396-411). ``rows`` is the union of all
+    (extract_patient_summary.py:396-411), plus the feature's ``site`` and
+    its set of ``days``, from which ``patient_summary`` derives the
+    overall summary without a second pass. ``rows`` is the union of all
     FeatureSpec.rows outputs (columns participant_id, site, ts, value,
     feature, unit)."""
     return (
@@ -50,9 +56,11 @@ def feature_statistics(
         .groupBy("participant_id", "time_key", "feature")
         .agg(
             F.first("unit", ignorenulls=True).alias("unit"),
-            F.count_distinct(F.to_date("ts")).alias("days_with_data"),
+            F.first("site", ignorenulls=True).alias("site"),
+            F.collect_set(F.to_date("ts")).alias("days"),
             *stats_agg_exprs("value"),
         )
+        .withColumn("days_with_data", F.size("days").cast("long"))
     )
 
 
@@ -91,25 +99,6 @@ def histogram_counts(rows: DataFrame, resolution: str = "monthly") -> DataFrame:
     )
 
 
-def data_summary(
-    all_rows: DataFrame, resolution: str = "monthly"
-) -> DataFrame:
-    """Overall start/end/total_days_with_data/features_available per
-    (participant, period) across every feature (A14,
-    extract_patient_summary.py:380-394)."""
-    return (
-        _with_time_key(all_rows, resolution)
-        .groupBy(*_KEYS)
-        .agg(
-            F.first("site", ignorenulls=True).alias("site"),
-            F.min(F.to_date("ts")).alias("start_date"),
-            F.max(F.to_date("ts")).alias("end_date"),
-            F.count_distinct(F.to_date("ts")).alias("total_days_with_data"),
-            F.sort_array(F.collect_set("feature")).alias("features_available"),
-        )
-    )
-
-
 def patient_summary(
     lake: DataFrame,
     features: list[FeatureSpec],
@@ -123,7 +112,8 @@ def patient_summary(
     the JSON document shape of FIXTURES.md §7 /
     extract_patient_summary.py:218-235.
 
-    Each family is independently aggregated (partial+final, one shuffle
+    Feature rows are aggregated once and nested without a join; each
+    other family is independently aggregated (partial+final, one shuffle
     each) then full-outer joined on the two-column key. The join inputs
     are already aggregates — small relative to the raw lake — so at
     100 TB this is a cheap join between pre-shrunk tables; AQE picks
@@ -136,8 +126,15 @@ def patient_summary(
     if feat_rows is None:
         raise ValueError("patient_summary requires at least one FeatureSpec")
 
-    feats = feature_statistics(feat_rows, resolution)
-    feats_nested = feats.groupBy(*_KEYS).agg(
+    # Overall summary (A14, extract_patient_summary.py:380-394) and the
+    # nested per-feature blocks in one aggregation over the feature rows.
+    days = F.array_distinct(F.flatten(F.collect_list("days")))
+    out = feature_statistics(feat_rows, resolution).groupBy(*_KEYS).agg(
+        F.first("site", ignorenulls=True).alias("site"),
+        F.array_min(days).alias("start_date"),
+        F.array_max(days).alias("end_date"),
+        F.size(days).cast("long").alias("total_days_with_data"),
+        F.sort_array(F.collect_set("feature")).alias("features_available"),
         F.map_from_entries(
             F.collect_list(
                 F.struct(
@@ -154,10 +151,8 @@ def patient_summary(
                     ),
                 )
             )
-        ).alias("feature_statistics")
+        ).alias("feature_statistics"),
     )
-    overall = data_summary(feat_rows, resolution)
-    out = overall.join(feats_nested, _KEYS, "full_outer")
 
     if questionnaires:
         q_rows = None

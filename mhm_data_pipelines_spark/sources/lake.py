@@ -12,22 +12,27 @@ layout ``<root>/<SITE>/<PID>/<METRIC>/<METRIC>.csv.gz`` at
 script re-derives the positions itself.
 
 Here ``LAYOUTS`` is the only place those positions are defined. The
-dimension columns (``path_dimensions``, and through it the catalog and
-the streaming source), the per-metric glob depth of
-``read_lake_unified`` and the compacted lake's partition columns
-(``operators.compact``, the CLI ``overview``) all derive from it.
+dimension columns (of the lake scans, the catalog and the streaming
+source), the per-metric glob depth of ``read_lake_unified`` and the
+compacted lake's partition columns (``operators.compact``, the CLI
+``overview``) all derive from it.
 
 Spark-native design:
 
 * one declarative ``spark.read`` over a glob (``recursiveFileLookup``)
   replaces the walk — listing is distributed and cached by the FileIndex;
-* ``F.input_file_name()`` + regex/split expressions materialize
-  ``site, participant_id, metric, file_timestamp, shard_index`` as
-  ordinary columns, so include/exclude predicates (P4/P5) become Catalyst
-  filters — evaluated before any data-column work, and convertible to
-  real partition pruning once the compaction job (operators.compact)
-  rewrites the lake as a table ``PARTITIONED BY (site, participant_id,
-  metric)``.
+* the deterministic hidden column ``_metadata.file_path`` (not
+  ``input_file_name()``), percent-decoded and split into segments once
+  per row, feeds one projection that materializes ``site,
+  participant_id, metric, filename, file_timestamp, shard_index`` as
+  ordinary columns, and include/exclude predicates (P4/P5) on the same
+  path become Catalyst filters — evaluated before any data-column work,
+  and convertible to real partition pruning once the compaction job
+  (operators.compact) rewrites the lake as a table ``PARTITIONED BY
+  (site, participant_id, metric)``;
+* ``read_lake_unified`` takes each metric's header from one file the
+  catalog names, so its scans run with an explicit schema and Spark never
+  lists a metric's files a second time to infer one.
 
 Gzip CSVs are non-splittable: one task per file is correct at the
 reference's file sizes, and the compaction pass is the scale answer for
@@ -80,6 +85,16 @@ def _root_depth(root: str) -> int:
     return len([s for s in root.split("://")[-1].split("/") if s])
 
 
+def _file_path() -> Column:
+    """The scanned file's path, percent-decoded. ``_metadata.file_path``
+    (like ``input_file_name()``) is a URI, so a directory ``P#1`` reads
+    ``P%231``; ``+`` is escaped first because ``url_decode`` alone would
+    turn a literal ``+`` into a space."""
+    return F.url_decode(
+        F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
+    )
+
+
 def _path_parts(path: Column) -> Column:
     # Normalized relative path segments; strips any URI scheme prefix
     # (file:/, s3a://bucket) so positional parsing sees only the tree.
@@ -97,9 +112,14 @@ def path_dimensions(
     ``lake_root_depth`` is the number of path segments of the lake root
     itself; the dimensions of ``LAYOUTS[layout]`` follow it in order, then
     ``filename`` and the batch ``file_timestamp``/``shard_index`` parsed
-    from it. ``path`` defaults to ``input_file_name()``.
+    from it. ``path`` defaults to the scanned file's decoded
+    ``_metadata.file_path``.
     """
-    parts = _path_parts(F.input_file_name() if path is None else path)
+    parts = _path_parts(_file_path() if path is None else path)
+    return _dimensions(parts, lake_root_depth, layout)
+
+
+def _dimensions(parts: Column, lake_root_depth: int, layout: str) -> dict[str, Column]:
     dims = {
         name: F.element_at(parts, lake_root_depth + i)
         for i, name in enumerate(_layout(layout), start=1)
@@ -109,6 +129,17 @@ def path_dimensions(
     dims["file_timestamp"] = filename_timestamp(filename)
     dims["shard_index"] = filename_shard_index(filename)
     return dims
+
+
+def _with_dimensions(df: DataFrame, root: str, layout: str) -> DataFrame:
+    """``df`` (a file scan under the lake ``root``) plus the ``layout``'s
+    dimension columns. The decoded path is split once into a helper
+    column that every dimension reads; Catalyst keeps that projection
+    apart instead of inlining the split into each dimension."""
+    parts = "__path_parts"
+    df = df.withColumn(parts, _path_parts(_file_path()))
+    dims = _dimensions(F.col(parts), _root_depth(root), layout)
+    return df.withColumns(dims).drop(parts)
 
 
 def include_exclude_predicate(
@@ -157,17 +188,14 @@ def _scan(
     fmt: str = "csv",
     schema: StructType | str | None = None,
     glob: str | None = None,
-    infer: bool = False,
     **options: str,
 ) -> DataFrame:
     """The one lake scan behind ``read_lake`` and ``read_lake_unified``:
     a recursive read of ``path`` (the lake ``root`` or a glob under it)
-    that skips corrupt files, adds the ``layout``'s dimension columns and
-    keeps only files that pass the include/exclude filter.
-
-    A CSV read with neither ``schema`` nor ``infer`` is typeless: every
-    column is its raw text, cast to STRING explicitly. ``options`` are
-    extra reader options."""
+    that skips corrupt files, keeps only files that pass the
+    include/exclude filter and adds the ``layout``'s dimension columns in
+    one projection. A CSV read without ``schema`` infers one. ``options``
+    are extra reader options."""
     reader = (
         spark.read.option("recursiveFileLookup", "true")
         .option("ignoreCorruptFiles", "true")
@@ -175,26 +203,20 @@ def _scan(
     )
     if fmt == "csv":
         reader = reader.option("header", "true")
-        if infer:
+        if schema is None:
             reader = reader.option("inferSchema", "true")
     if schema is not None:
         reader = reader.schema(schema)
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     df = reader.format(fmt).load(path)
-    if fmt == "csv" and schema is None and not infer:
-        df = df.select(
-            *[F.col(f"`{c}`").cast("string").alias(c) for c in df.columns]
-        )
-    for name, expr in path_dimensions(_root_depth(root), layout=layout).items():
-        df = df.withColumn(name, expr)
     if include or exclude:
         df = df.filter(
             include_exclude_predicate(
-                F.input_file_name(), include, exclude, substring=include_substring
+                _file_path(), include, exclude, substring=include_substring
             )
         )
-    return df
+    return _with_dimensions(df, root, layout)
 
 
 def read_lake(
@@ -236,7 +258,7 @@ def read_lake(
     root = root.rstrip("/")
     return _scan(
         spark, root, root, layout, include, exclude, include_substring,
-        fmt=fmt, schema=schema, glob=glob, infer=schema is None, **options,
+        fmt=fmt, schema=schema, glob=glob, **options,
     )
 
 
@@ -264,17 +286,21 @@ def read_lake_unified(
     in the reference (``pd.read_csv`` inference per file) and every
     downstream extraction try_casts explicitly, so reading without
     inference keeps null-on-error semantics identical while making the
-    union well-typed. At 100 TB, pass ``schemas`` (per-metric StructType,
-    seedable from the reference's S3 JSON schema docs) to skip inference,
-    and point this at the compacted parquet lake instead of raw gzip CSVs.
+    union well-typed. A metric's columns are the header of its largest
+    file (ties: the greatest path), applied by position to every file of
+    the metric; a file with fewer columns reads NULL in the rest. At
+    100 TB, pass ``schemas`` (per-metric StructType, seedable from the
+    reference's S3 JSON schema docs) and point this at the compacted
+    parquet lake instead of raw gzip CSVs.
 
-    Scale contract: nothing file-sized ever reaches the driver. The
-    distributed listing is reduced to the DISTINCT METRIC NAMES (a lake
-    has dozens of metrics regardless of file count — metadata-sized),
-    and each metric becomes ONE glob-scoped declarative read
-    (``root/*/…/<metric>`` + ``pathGlobFilter``) whose file enumeration
-    stays inside Spark's FileIndex. Driver memory and job count scale
-    with metric count, never with files.
+    Scale contract: nothing file-sized reaches the driver. The one
+    distributed catalog job reduces the listing to one row per metric
+    (its name and its sample file: a lake has dozens of metrics
+    regardless of file count); each metric then costs one 1-task header
+    read of that file and ONE glob-scoped declarative read
+    (``root/*/…/<metric>`` + ``pathGlobFilter``) with an explicit schema,
+    whose file enumeration stays inside Spark's FileIndex. Driver memory
+    and job count scale with metric count, never with files.
     """
     import fnmatch
     import re
@@ -296,33 +322,41 @@ def read_lake_unified(
     # ((?s:...)\Z); rlike is a substring search, so a glob like
     # "data_*.csv" would also SUFFIX-match "mydata_x.csv" at listing time
     # while the per-metric scan's pathGlobFilter full-matches — selecting
-    # a metric whose scan then matches zero files (schema-less empty CSV
-    # read fails). Prepend ^ so listing-time and scan-time filename
-    # semantics agree.
+    # a metric whose scan then matches zero files. Prepend ^ so
+    # listing-time and scan-time filename semantics agree.
     metric_rows = (
         listing.filter(F.col("filename").rlike("^" + fnmatch.translate(glob)))
-        .select("measurement")
         .filter(F.col("measurement").isNotNull())
-        .distinct()
-        .collect()  # metric names only: bounded, metadata-sized
+        .groupBy("measurement")
+        .agg(F.max(F.struct("size", "path"))["path"].alias("sample"))
+        .collect()  # one row per metric: bounded, metadata-sized
     )
     # Metric name → one glob path selecting exactly its subtree.
     wild = "/".join(["*"] * _layout(layout).index("metric"))
+    glob_chars = r"[*?\[\]{}\\]"
 
     parts = []
-    for metric in sorted(r.measurement for r in metric_rows):
-        if re.search(r"[*?\[\]{}\\]", metric):  # glob metachar ≠ literal dir
+    for metric, sample in sorted(metric_rows):
+        if re.search(glob_chars, metric):  # glob metachar ≠ literal dir
             raise ValueError(
                 f"metric directory name {metric!r} contains glob "
                 "metacharacters; read it via read_lake(glob=...) instead"
+            )
+        schema = (schemas or {}).get(metric)
+        if schema is None:
+            # All-STRING columns named by the sample's header; the path
+            # is escaped because Spark reads a load path as a glob.
+            schema = (
+                spark.read.option("header", "true")
+                .csv(re.sub(f"({glob_chars})", r"\\\1", sample))
+                .schema
             )
         # The glob selects the whole metric subtree; the scan re-applies
         # the file-level include/exclude, which may drop specific
         # sites/participants within it.
         parts.append(_scan(
             spark, f"{root}/{wild}/{metric}", root, layout,
-            include, exclude, include_substring,
-            schema=(schemas or {}).get(metric), glob=glob,
+            include, exclude, include_substring, schema=schema, glob=glob,
         ))
     if not parts:
         raise ValueError(f"read_lake_unified: no files matched under {root}")

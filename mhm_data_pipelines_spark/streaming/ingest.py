@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
-from mhm_data_pipelines_spark.sources.lake import _root_depth, path_dimensions
+from mhm_data_pipelines_spark.sources.lake import _with_dimensions
 
 
 def stream_lake(
@@ -53,10 +53,7 @@ def stream_lake(
         reader = reader.option("header", "true")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.load(root)
-    for name, expr in path_dimensions(_root_depth(root), layout=layout).items():
-        df = df.withColumn(name, expr)
-    return df
+    return _with_dimensions(reader.load(root), root, layout)
 
 
 def windowed_counts(

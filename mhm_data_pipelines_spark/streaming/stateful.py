@@ -25,6 +25,7 @@ size for keys that go quiet.
 
 from __future__ import annotations
 
+import warnings
 from typing import Any, Iterator
 
 import numpy as np
@@ -39,6 +40,21 @@ _OUT_SCHEMA = (
 )
 #: (start_us, last_us, n, sum_value) of the one open session per key.
 _STATE_SCHEMA = "start bigint, last bigint, n bigint, sv double"
+
+
+def _quiet_state_concat() -> None:
+    """Silence, in the Python worker, the pandas ``FutureWarning`` that
+    ``applyInPandasWithState``'s own output serializer
+    (``pyspark/sql/pandas/serializers.py``) raises when it pads a batch
+    with empty rows: "The behavior of DataFrame concatenation with empty
+    or all-NA entries is deprecated". Only that message from that module
+    is filtered; repeating the call replaces the same filter."""
+    warnings.filterwarnings(
+        "ignore",
+        message="The behavior of DataFrame concatenation with empty or all-NA entries",
+        category=FutureWarning,
+        module=r"pyspark\.sql\.pandas\.serializers",
+    )
 
 
 def _emit_row(uid: int, start_us: int, end_us: int, n: int, sv: float):
@@ -79,6 +95,7 @@ def stateful_sessions(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        _quiet_state_concat()
         (uid,) = key_
         if state.hasTimedOut:
             start, last, n, sv = state.get
@@ -432,6 +449,7 @@ def holt_stream(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        _quiet_state_concat()
         (uid,) = key_
         chunks = list(pdfs)
         # Single-chunk groups (the overwhelmingly common case) skip the
@@ -544,6 +562,7 @@ def ewma_anomaly_stream(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        _quiet_state_concat()
         (uid,) = key_
         chunks = list(pdfs)
         # Single-chunk groups (the overwhelmingly common case) skip the

@@ -180,3 +180,33 @@ def test_schema_doc_to_structtype_roundtrip(spark, tmp_path):
     # Reference fallback: empty / unparseable docs are skipped, not fatal.
     assert parse_schema_doc("") is None
     assert parse_schema_doc('{"type": "object"}') is None
+
+
+def test_compact_writes_one_file_per_partition(spark, tmp_path):
+    """Groups whose files span several scan tasks still get exactly one
+    parquet file per partition directory."""
+    import gzip
+    import os
+
+    root = tmp_path / "spread"
+    for site in ("LON", "NYC"):
+        d = root / "top" / site / "P1" / "steps"
+        d.mkdir(parents=True)
+        for day in range(1, 9):
+            with gzip.open(d / f"202401{day:02d}_0900.csv.gz", "wt") as f:
+                f.write("ts,v\n" + "".join(f"{day * 100 + i},{i}\n" for i in range(20)))
+    raw = read_lake_unified(spark, str(root), layout="raw")
+    assert raw.rdd.getNumPartitions() > 2  # the groups span several tasks
+
+    out = str(tmp_path / "spread_compacted")
+    compact_lake(spark, str(root), out)
+    per_dir = {
+        os.path.relpath(d, out): sum(n.endswith(".parquet") for n in names)
+        for d, _, names in os.walk(out)
+        if any(n.endswith(".parquet") for n in names)
+    }
+    assert per_dir == {
+        os.path.join(f"site={s}", "participant_id=P1", "metric=steps"): 1
+        for s in ("LON", "NYC")
+    }
+    assert read_compacted(spark, out).count() == 2 * 8 * 20

@@ -228,3 +228,95 @@ def test_write_table_zstd_compression(spark, tmp_path):
     files = globmod.glob(f"{out}/*.parquet")
     assert files and all(".zstd." in f for f in files)
     assert spark.read.parquet(out).count() == 100
+
+
+def _write_gz(path, lines: list[str]) -> None:
+    import gzip
+
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with gzip.open(path, "wt") as f:
+        f.write("\n".join(lines) + "\n")
+
+
+def _run_counted(spark, group: str, action) -> tuple[int, int]:
+    """(jobs, tasks run) of ``action``, read from the status tracker
+    under the job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(s).numCompletedTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    )
+    return len(jobs), tasks
+
+
+def test_read_lake_unified_decodes_path_dimensions(spark, tmp_path):
+    """Directory and file names that a URI escapes (space, ``#``, ``%``),
+    a literal ``+`` and glob characters read back as written, and the
+    lake scan, the compacted partitions and the catalog agree on them."""
+    from mhm_data_pipelines_spark.operators.compact import compact_lake, read_compacted
+    from mhm_data_pipelines_spark.sources.lake import read_lake_unified
+
+    root = tmp_path / "enc"
+    # The larger file, whose header the metric's schema is read from.
+    _write_gz(root / "top" / "L ON" / "P#1" / "m x" / "a b+c[1].csv.gz",
+              ["ts,v", *[f"{i},{i}" for i in range(20)]])
+    _write_gz(root / "top" / "NYC" / "P%2" / "m x" / "20240101_0900.csv.gz", ["ts,v", "3,4"])
+    want = {("L ON", "P#1", "m x", "a b+c[1].csv.gz"), ("NYC", "P%2", "m x", "20240101_0900.csv.gz")}
+
+    df = read_lake_unified(spark, str(root), layout="raw")
+    got = {tuple(r) for r in df.select("site", "participant_id", "metric", "filename").collect()}
+    assert got == want
+
+    out = str(tmp_path / "enc_compacted")
+    compact_lake(spark, str(root), out, layout="raw")
+    parts = read_compacted(spark, out).select("site", "participant_id", "metric").collect()
+    assert {tuple(r) for r in parts} == {w[:3] for w in want}
+
+    cat = build_catalog(spark, str(root), layout="raw").collect()
+    assert {(r.user_id, r.measurement, r.filename) for r in cat} == {w[1:] for w in want}
+
+
+def test_read_lake_unified_takes_header_of_largest_file(spark, tmp_path):
+    """A metric whose files carry different headers reads under the
+    header of its largest file, whatever the path order; its columns
+    apply by position to every file of the metric."""
+    from mhm_data_pipelines_spark.sources.lake import read_lake_unified
+
+    root = tmp_path / "drift"
+    d = root / "top" / "LON" / "P1" / "hr"
+    _write_gz(d / "20240101_0900.csv.gz", ["ts,big,extra", *[f"{i},{i},x" for i in range(50)]])
+    _write_gz(d / "20240102_0900.csv.gz", ["ts,small", "1000,7"])
+    df = read_lake_unified(spark, str(root), layout="raw")
+    assert [c for c in df.columns if c in ("ts", "big", "extra", "small")] == ["ts", "big", "extra"]
+    small = df.filter(F.col("filename") == "20240102_0900.csv.gz").first()
+    assert (small.ts, small.big, small.extra) == ("1000", "7", None)
+
+
+def test_read_lake_unified_build_jobs_scale_with_metrics(spark, tmp_path):
+    """Building the scan lists the lake once (the catalog) and reads one
+    header per metric: at most 2 + n_metrics jobs, and fewer tasks than
+    files, however many files a metric holds."""
+    from mhm_data_pipelines_spark.sources.lake import read_lake_unified
+
+    root = tmp_path / "many"
+    metrics, files = ("hr", "steps"), 40
+    for m in metrics:
+        for i in range(files):
+            _write_gz(root / "top" / "LON" / "P1" / m / f"202401{i % 28 + 1:02d}_{i:04d}.csv.gz",
+                      ["ts,v", f"{i},{i}"])
+    jobs, tasks = _run_counted(
+        spark, "test-read-lake-unified-build",
+        lambda: read_lake_unified(spark, str(root), layout="raw"),
+    )
+    assert 1 <= jobs <= 2 + len(metrics)
+    assert tasks < len(metrics) * files

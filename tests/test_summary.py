@@ -114,3 +114,29 @@ def test_weekly_resolution(spark, lake_root):
     keys = {r.time_key for r in weekly.select("time_key").distinct().collect()}
     # Dec 28 2024 is ISO 2024-W52; Dec 30 is 2025-W01 (year boundary).
     assert "2024-W52" in keys and "2025-W01" in keys
+
+
+def test_feature_rows_scanned_once_without_join(spark, tmp_path):
+    """Features only: one scan per FeatureSpec and no join, and the
+    overall summary still spans every feature's days."""
+    rows = [
+        ("LON", "P1", "hr", f"{1735689600 + d * 86400 + h * 3600}", "60")
+        for d in range(3) for h in range(2)
+    ] + [("LON", "P1", "steps", f"{1735689600 + 5 * 86400}", "100")]
+    path = str(tmp_path / "compacted")
+    spark.createDataFrame(
+        rows, "site string, participant_id string, metric string, timestamp string, value string"
+    ).write.partitionBy("site", "participant_id", "metric").parquet(path)
+    specs = [FeatureSpec.parse(f"{m}:{m}:timestamp:value:u") for m in ("hr", "steps")]
+    out = patient_summary(spark.read.parquet(path), features=specs, resolution="monthly")
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == len(specs)
+    assert "Join" not in plan
+    (row,) = out.collect()
+    assert row.time_key == "2025-01" and row.site == "LON"
+    assert (str(row.start_date), str(row.end_date)) == ("2025-01-01", "2025-01-06")
+    assert row.total_days_with_data == 4
+    assert row.features_available == ["hr", "steps"]
+    assert row.feature_statistics["hr"].days_with_data == 3
+    assert row.feature_statistics["hr"].total_entries == 6
