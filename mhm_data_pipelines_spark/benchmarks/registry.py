@@ -6072,11 +6072,9 @@ def q_doc_kn3_lm(spark, sf_dir):
     explodes build the trigram/bigram aggregates; five marginals
     re-aggregate them; scoring joins all six back AQE-sized; only the
     1-row bigram-type total broadcasts (operators/lm.py
-    kn_trigram_doc_scores; the distribution sums to exactly 1 for
+    kn_doc_scores at order=3; the distribution sums to exactly 1 for
     every seen context — tested)."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        kn_trigram_doc_scores,
-    )
+    from mhm_data_pipelines_spark.operators.lm import kn_doc_scores
 
     df = _t(spark, sf_dir, "documents")
     tk = df.select(
@@ -6084,7 +6082,11 @@ def q_doc_kn3_lm(spark, sf_dir):
     )
     train = tk.filter(F.col("doc_id") % 2 == 0)
     score = tk.filter(F.col("doc_id") % 2 == 1)
-    return kn_trigram_doc_scores(score, train=train).orderBy("doc_id")
+    return (
+        kn_doc_scores(score, train=train, order=3)
+        .withColumnRenamed("n_ngrams", "n_trigrams")
+        .orderBy("doc_id")
+    )
 
 
 SQL_DOC_KN3_LM = f"""
@@ -6284,10 +6286,8 @@ def q_doc_sb_lm(spark, sf_dir):
     explode+agg passes over one tokenization build vocab-sized count
     tables; scoring joins them back AQE-sized (the bigram table twice:
     context + backoff); only the 1-row token total broadcasts
-    (operators/lm.py sb_trigram_doc_scores)."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        sb_trigram_doc_scores,
-    )
+    (operators/lm.py sb_doc_scores at order=3)."""
+    from mhm_data_pipelines_spark.operators.lm import sb_doc_scores
 
     df = _t(spark, sf_dir, "documents")
     tk = df.select(
@@ -6295,7 +6295,11 @@ def q_doc_sb_lm(spark, sf_dir):
     )
     train = tk.filter(F.col("doc_id") % 2 == 0)
     score = tk.filter(F.col("doc_id") % 2 == 1)
-    return sb_trigram_doc_scores(score, train=train).orderBy("doc_id")
+    return (
+        sb_doc_scores(score, train=train, order=3)
+        .withColumnRenamed("n_ngrams", "n_trigrams")
+        .orderBy("doc_id")
+    )
 
 
 SQL_DOC_SB_LM = f"""

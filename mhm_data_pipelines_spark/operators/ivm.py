@@ -31,8 +31,9 @@ disk. An increment:
    metadata, never rows);
 3. reads ONLY the touched bucket partitions of the standing table
    (partition pruning — untouched groups are never deserialized);
-4. merges and rewrites ONLY those partitions (dynamic partition
-   overwrite — untouched partition files are left byte-identical).
+4. merges and rewrites ONLY those partitions
+   (``sources.io._rewrite_partitions`` — untouched partition files are
+   left byte-identical).
 
 So a batch that touches 3 of 256 buckets costs 3 partition rewrites
 regardless of total group cardinality. Contract: **append-only**
@@ -52,6 +53,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from mhm_data_pipelines_spark.sources.io import _rewrite_partitions
 
 BUCKET_COL = "_ivm_bucket"
 _PARTIAL_COLS = ("n", "nn", "s1", "s2", "mn", "mx")
@@ -157,8 +160,7 @@ def init_rollup_table(
         .parquet(path)
     )
     # After the write: mode("overwrite") clears the directory first.
-    # Increments use dynamic partition overwrite, which replaces only
-    # matching bucket dirs, so the meta file survives them.
+    # Increments replace only bucket dirs, so the meta file survives.
     _write_meta(
         path,
         {
@@ -212,11 +214,8 @@ def apply_increment(
     merged = merge_partials(
         existing.unionByName(batch_partials), [*keys, BUCKET_COL], has_sketch
     )
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(BUCKET_COL)
-        .parquet(path)
+    _rewrite_partitions(
+        merged, path, BUCKET_COL, [f"{BUCKET_COL}={b}" for b in touched]
     )
     return touched
 

@@ -1,6 +1,6 @@
 """Smoothed n-gram language-model scoring: interpolated Kneser-Ney
-(bigram) and configurable-order Stupid Backoff (order=5 = the CCNet
-shape; the trigram scorer is the order=3 wrapper).
+(bigram, and configurable-order) and configurable-order Stupid Backoff
+(order=5 = the CCNet shape; trigram scoring is order=3).
 
 The CCNet pipeline (Wenzek et al. 2020) filters web text by perplexity
 under a smoothed 5-gram KenLM (Heafield 2011); the repo's earlier
@@ -312,137 +312,6 @@ def kn_doc_scores(
     )
 
 
-def kn_trigram_counts(train: DataFrame, tokens_col: str = "tk") -> dict:
-    """Interpolated-KN TRIGRAM count tables (Chen & Goodman 1999 §4.1.6
-    continuation-count formulation). Everything derives from TWO corpus
-    explodes (trigram and bigram type/count aggregates); all marginals
-    re-aggregate those vocabulary-sized tables, never the corpus:
-
-    * ``tri (w1,w2,w3,c123)`` — raw trigram counts;
-    * ``ctx12 (w1,w2,c12,n1r12)`` — ``c12 = Σ_w3 c123`` (the
-      re-aggregated context total that makes the model sum to exactly
-      1; the RAW bigram count would differ at document ends and break
-      the mass identity) and ``n1r12 = N1+(w1w2·)``;
-    * ``cont23 (w2,w3,n1l23)`` — continuation counts
-      ``N1+(·w2w3)`` (distinct predecessors of each trigram suffix);
-    * ``mid2 (w2,m2,n1r2)`` — ``m2 = N1+(·w2·)`` (the middle-level
-      denominator) and ``n1r2 = N1+(w2·)`` over trigram types;
-    * ``contw (w3,n1l)`` — ``N1+(·w3)`` over bigram types;
-    * ``total (_b)`` — distinct bigram types ``B`` (1 row).
-    """
-    tri = _ngrams(train, [], tokens_col, 3).groupBy("w1", "w2", "w3").agg(
-        F.count("*").alias("c123")
-    )
-    ctx12 = tri.groupBy("w1", "w2").agg(
-        F.sum("c123").cast("double").alias("c12"),
-        F.count("*").cast("double").alias("n1r12"),
-    )
-    cont23 = tri.groupBy("w2", "w3").agg(
-        F.count("*").cast("double").alias("n1l23")
-    )
-    mid2 = cont23.groupBy("w2").agg(
-        F.sum("n1l23").cast("double").alias("m2"),
-        F.count("*").cast("double").alias("n1r2"),
-    )
-    big = _ngrams(train, [], tokens_col, 2).groupBy("w1", "w2").agg(
-        F.count("*").alias("c12raw")
-    )
-    contw = big.groupBy(F.col("w2").alias("w3")).agg(
-        F.count("*").cast("double").alias("n1l")
-    )
-    total = big.agg(F.count("*").cast("double").alias("_b"))
-    return {
-        "tri": tri,
-        "ctx12": ctx12,
-        "cont23": cont23,
-        "mid2": mid2,
-        "contw": contw,
-        "total": total,
-    }
-
-
-def kn_trigram_doc_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tk",
-    train: DataFrame | None = None,
-    discount: float = 0.75,
-    quantize: int = 4,
-) -> DataFrame:
-    """Per-document interpolated Kneser-Ney TRIGRAM score — the full
-    Chen & Goodman recursion the bigram scorer approximates, one order
-    closer to CCNet's industrial 5-gram KenLM filter:
-
-        P(w3|w1w2) = max(c123−D,0)/c12 + D·N1+(w1w2·)/c12 · P(w3|w2)
-        P(w3|w2)   = max(N1+(·w2w3)−D,0)/N1+(·w2·)
-                     + D·N1+(w2·)/N1+(·w2·) · P_cont(w3)
-        P_cont(w3) = N1+(·w3)/B
-
-    — the MIDDLE level runs on continuation counts, not raw counts
-    (the defining KN property: a word seen often in one context only,
-    like "Francisco", gets low novel-context mass). For every seen
-    context each level sums to EXACTLY 1 over the vocabulary (the
-    ``c12 = Σ c123`` re-aggregation makes that an identity, tested).
-
-    Finite fallbacks, highest order first: unseen (w1,w2) context →
-    ``P(w3|w2)``; unseen middle ``w2`` → ``P_cont(w3)``; unseen
-    continuation ``w3`` → floor ``D/B`` (same contract as
-    :func:`kn_bigram_doc_scores`). Documents with < 3 tokens are
-    absent from the output.
-
-    Scale shape: two corpus explodes (trigram + bigram aggregates);
-    five marginal tables re-aggregate them; scoring joins all six back
-    AQE-sized onto the re-exploded docs; only the 1-row ``B`` total
-    broadcasts. No Python in the row loop.
-    """
-    if not 0.0 < discount < 1.0:
-        raise ValueError(f"discount must be in (0,1), got {discount}")
-    c = kn_trigram_counts(train if train is not None else docs, tokens_col)
-    stream = _ngrams(docs, [id_col], tokens_col, 3)
-    d = F.lit(float(discount))
-    pc = F.coalesce(F.col("n1l") / F.col("_b"), d / F.col("_b"))
-    pmid = F.when(
-        F.col("m2").isNotNull(),
-        F.greatest(
-            F.coalesce(F.col("n1l23"), F.lit(0.0)) - d, F.lit(0.0)
-        )
-        / F.col("m2")
-        + d * F.col("n1r2") / F.col("m2") * pc,
-    ).otherwise(pc)
-    p = F.when(
-        F.col("c12").isNotNull(),
-        F.greatest(
-            F.coalesce(F.col("c123"), F.lit(0)).cast("double") - d,
-            F.lit(0.0),
-        )
-        / F.col("c12")
-        + d * F.col("n1r12") / F.col("c12") * pmid,
-    ).otherwise(pmid)
-    scored = (
-        stream.join(c["tri"], ["w1", "w2", "w3"], "left")
-        .join(c["ctx12"], ["w1", "w2"], "left")
-        .join(c["cont23"], ["w2", "w3"], "left")
-        .join(c["mid2"], "w2", "left")
-        .join(c["contw"], "w3", "left")
-        .crossJoin(F.broadcast(c["total"]))  # 1-row scalar
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_trigrams"),
-            F.avg(F.log(p)).alias("_m"),
-        )
-    )
-    return scored.select(
-        id_col,
-        "n_trigrams",
-        F.round("_m", quantize).alias("avg_logp"),
-    ).select(
-        id_col,
-        "n_trigrams",
-        "avg_logp",
-        F.round(F.exp(-F.col("avg_logp")), quantize).alias("ppl"),
-    )
-
-
 def sb_doc_scores(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -572,26 +441,3 @@ def sb_doc_scores(
         "avg_logs",
         F.round(F.exp(-F.col("avg_logs")), quantize).alias("ppl"),
     )
-
-
-def sb_trigram_doc_scores(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tk",
-    train: DataFrame | None = None,
-    alpha: float = 0.4,
-    quantize: int = 4,
-) -> DataFrame:
-    """Trigram Stupid-Backoff — :func:`sb_doc_scores` at ``order=3``
-    with the historical ``n_trigrams`` output name. See there for the
-    model and scale shape (three count tables, bigram joined twice:
-    context (w1,w2) and backoff (w2,w3))."""
-    return sb_doc_scores(
-        docs,
-        id_col=id_col,
-        tokens_col=tokens_col,
-        train=train,
-        order=3,
-        alpha=alpha,
-        quantize=quantize,
-    ).withColumnRenamed("n_ngrams", "n_trigrams")

@@ -10,18 +10,19 @@ partition-scoped rewrite.
 
 Scale notes: resolution is ONE hash aggregate on the merge keys
 (``max_by`` of the whole row struct — no window sort, no join); the
-rewrite targets only partitions that received updates (dynamic
-partition overwrite), so a 10k-partition table with updates in 3
-partitions rewrites 3.
+rewrite targets only partitions that received updates (committed by
+``sources.io._rewrite_partitions``), so a 10k-partition table with
+updates in 3 partitions rewrites 3.
 """
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mhm_data_pipelines_spark.sources.io import _rewrite_partitions
 
 
 def latest_wins(
@@ -56,17 +57,6 @@ def merge_upsert(
     return latest_wins(
         base.unionByName(updates, allowMissingColumns=False), keys, version
     )
-
-
-def _require_jvm(spark) -> None:
-    from mhm_data_pipelines_spark.session import supports_jvm_access
-
-    if not supports_jvm_access(spark):
-        raise RuntimeError(
-            "partitioned rewrite needs Hadoop-FS atomic renames and "
-            "Spark's partition-path escaping (py4j) — genuinely "
-            "JVM-bound; run on a classic session."
-        )
 
 
 def _isin_with_null(col: str, values) -> F.Column:
@@ -108,7 +98,7 @@ def _partition_dir_names(spark, partition_col: str, rendered) -> list[str]:
     Spark's writer produces, using Spark's own escaping
     (``ExternalCatalogUtils``): special chars become ``%XX`` and
     NULL/empty becomes ``__HIVE_DEFAULT_PARTITION__``. Building names
-    with a raw f-string instead would publish a bogus unescaped dir and
+    with a raw f-string instead would retire a bogus unescaped dir and
     leave the real one alive."""
     utils = (
         spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -118,31 +108,12 @@ def _partition_dir_names(spark, partition_col: str, rendered) -> list[str]:
     ]
 
 
-def _ensure_partition_dirs(spark, tmp_path: str, dir_names) -> None:
-    """Create an explicit EMPTY dir under ``tmp_path`` for every expected
-    partition dir the merged write produced no output for (all rows of
-    that partition were deleted or moved away), so the swap still retires
-    the stale on-disk data instead of silently keeping it."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(tmp_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    present = {
-        s.getPath().getName()
-        for s in fs.listStatus(hpath(tmp_path))
-        if s.isDirectory()
-    }
-    for name in dir_names:
-        if name not in present:
-            fs.mkdirs(hpath(f"{tmp_path}/{name}"))
-
-
 def write_upsert_partitioned(
     base_path: str,
     updates: DataFrame,
     keys: Sequence[str],
     version: str,
     partition_col: str,
-    static_partitions: bool = False,
 ) -> None:
     """Apply updates to a partitioned parquet table rewriting ONLY the
     touched partitions. The read is partition-pruned to the touched
@@ -155,98 +126,32 @@ def write_upsert_partitioned(
     pruned to ``keys + partition_col``). Without the second set, an
     update that changes a key's ``partition_col`` would leave the stale
     base row alive in the old partition — two rows for one merge key,
-    which Delta MERGE would never produce. Pass ``static_partitions=
-    True`` only when the caller guarantees ``partition_col`` is
-    immutable per key; that skips the discovery scan (one footer+2-col
-    pass over the table) and prunes purely on the update values.
+    which Delta MERGE would never produce. A partition whose only rows
+    moved away is left as an empty dir.
 
-    Commit protocol (plain parquet has none, so this builds the minimal
-    one): the merged partitions are fully written to a sibling temp dir
-    first, then swapped into the table one directory RENAME at a time,
-    and only after every swap succeeds is the temp dir (holding the
-    retired partition data) deleted. Failure windows:
-
-    * crash during the merge/write → base table untouched; an orphaned
-      ``<base>__upsert_tmp_*`` dir remains (safe to delete — Spark never
-      lists sibling paths).
-    * crash mid-swap → no torn partitions (directory rename is atomic on
-      HDFS/POSIX), but THREE per-partition states are possible:
-      partitions swapped so far show the complete new version, the rest
-      show the complete old version, and the one partition between its
-      two renames (retire → publish) is ABSENT from the table until the
-      publish rename lands. Its old data is recoverable from the temp
-      dir's ``_retired_<name>`` entry and the new data from the temp
-      dir's ``<name>`` entry; re-running the upsert converges.
-      Partition-atomic, not table-atomic.
-
-    On object stores without atomic rename (plain S3), rename degrades
-    to copy+delete per partition — correct but with a wider window;
-    genuinely table-atomic MERGE there needs a transactional format
-    (Delta/Iceberg) or an S3-committer-style manifest."""
+    The commit and its crash windows are
+    ``sources.io._swap_partitions``'s: partition-atomic, not
+    table-atomic, and a re-run converges."""
     spark = updates.sparkSession
-    _require_jvm(spark)
     touched = _touched_partition_strings(updates, partition_col)
     table = spark.read.parquet(base_path)
-    if not static_partitions:
-        key_cols = list(keys)
-        upd_keys = updates.select(*key_cols).distinct()
-        touched.update(
-            _touched_partition_strings(
-                table.join(F.broadcast(upd_keys), key_cols, "left_semi"),
-                partition_col,
-            )
+    upd_keys = updates.select(*keys).distinct()
+    touched.update(
+        _touched_partition_strings(
+            table.join(F.broadcast(upd_keys), list(keys), "left_semi"),
+            partition_col,
         )
+    )
     vals = sorted(touched, key=lambda v: (v is None, str(v)))
     base = table.filter(_isin_with_null(partition_col, vals))
-    merged = merge_upsert(base, updates, keys, version)
-    # Sibling path (never inside base_path: a reader listing the table
-    # mid-upsert must not see half-written files).
-    tmp_path = f"{base_path}__upsert_tmp_{uuid.uuid4().hex}"
-    merged.write.partitionBy(partition_col).parquet(tmp_path)
-    # A partition whose only rows moved away produces no output dir —
-    # publish an explicit empty dir so the swap retires the stale data.
-    _ensure_partition_dirs(
-        spark,
-        tmp_path,
+    _rewrite_partitions(
+        merge_upsert(base, updates, keys, version),
+        base_path,
+        partition_col,
         _partition_dir_names(
             spark, partition_col, [touched[v] for v in vals]
         ),
     )
-    _swap_partitions(spark, base_path, tmp_path, partition_col)
-
-
-def _swap_partitions(
-    spark, base_path: str, tmp_path: str, partition_col: str
-) -> None:
-    """Swap every ``<partition_col>=*`` directory of ``tmp_path`` into
-    ``base_path`` (retiring any existing one into the temp dir), then
-    drop the temp dir. Partition dirs are discovered by LISTING the temp
-    output — not rebuilt from values — so Spark's partition-value path
-    escaping is honored verbatim. Separated from the write as the
-    crash-injection seam for tests."""
-    from mhm_data_pipelines_spark.session import supports_jvm_access
-
-    if not supports_jvm_access(spark):
-        raise RuntimeError(
-            "partition swap needs Hadoop-FS atomic renames (py4j) — "
-            "genuinely JVM-bound; run the upsert on a classic session."
-        )
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(base_path).getFileSystem(spark._jsc.hadoopConfiguration())
-    prefix = f"{partition_col}="
-    for status in fs.listStatus(hpath(tmp_path)):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith(prefix)):
-            continue  # _SUCCESS marker etc.
-        dst = hpath(f"{base_path}/{name}")
-        if fs.exists(dst) and not fs.rename(
-            dst, hpath(f"{tmp_path}/_retired_{name}")
-        ):
-            raise IOError(f"upsert swap: could not retire {dst}")
-        if not fs.rename(status.getPath(), dst):
-            raise IOError(f"upsert swap: could not publish {name}")
-    fs.delete(hpath(tmp_path), True)
 
 
 def scd2_history(
@@ -294,13 +199,12 @@ def erase_subjects(
     discovers touched partitions (partition-pruned to nothing if the
     subjects don't exist) and (2) the anti-join inside each rewritten
     partition; untouched partitions are never read past their
-    footer/stats. The rewrite rides the same partition-atomic rename
-    protocol as :func:`write_upsert_partitioned` (see its crash-window
-    notes). Returns ``{"partitions_rewritten": n, "rows_erased": n}``
-    — the audit record an erasure job must emit.
+    footer/stats. The rewrite commits like
+    :func:`write_upsert_partitioned`. Returns
+    ``{"partitions_rewritten": n, "rows_erased": n}`` — the audit record
+    an erasure job must emit.
     """
     spark = subjects.sparkSession
-    _require_jvm(spark)
     subj = subjects.select(key).distinct()
     table = spark.read.parquet(base_path)
     touched = _touched_partition_strings(
@@ -321,20 +225,19 @@ def erase_subjects(
     erased = int(
         scoped.join(F.broadcast(subj), key, "left_semi").count()
     )
-    kept = scoped.join(F.broadcast(subj), key, "left_anti")
-    tmp_path = f"{base_path}__erase_tmp_{uuid.uuid4().hex}"
-    kept.write.partitionBy(partition_col).parquet(tmp_path)
-    # Partitions that lost ALL rows produce no output dir from the write
-    # above — publish an explicit empty dir so the swap retires the old
-    # data (erasure must not silently keep a partition). Dir names use
-    # Spark's own partition-path escaping; a raw f-string would publish
-    # a bogus dir for values needing %XX escapes and the real dir — with
-    # the subject's data — would survive the "successful" erasure.
-    expected = _partition_dir_names(
-        spark, partition_col, [touched[v] for v in vals]
+    # Partitions that lost ALL rows are left as empty dirs (erasure must
+    # not silently keep a partition). Dir names use Spark's own
+    # partition-path escaping; a raw f-string would retire a bogus dir
+    # for values needing %XX escapes and the real dir — with the
+    # subject's data — would survive the "successful" erasure.
+    _rewrite_partitions(
+        scoped.join(F.broadcast(subj), key, "left_anti"),
+        base_path,
+        partition_col,
+        _partition_dir_names(
+            spark, partition_col, [touched[v] for v in vals]
+        ),
     )
-    _ensure_partition_dirs(spark, tmp_path, expected)
-    _swap_partitions(spark, base_path, tmp_path, partition_col)
     return {
         "partitions_rewritten": len(vals),
         "rows_erased": erased,

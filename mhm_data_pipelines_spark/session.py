@@ -134,9 +134,9 @@ def stop_spark() -> None:
 def supports_jvm_access(spark: SparkSession) -> bool:
     """True on classic PySpark (py4j gateway available). Spark Connect
     sessions have no ``_jvm``/``_jsc`` — the genuinely JVM-bound ops
-    (Hadoop-FS atomic renames in ``operators.upsert`` /
-    ``streaming.stateful.compact_index``, ``localCheckpoint`` loops)
-    check this and raise a clear error instead of an AttributeError."""
+    (the Hadoop-FS atomic renames of ``sources.io._swap_partitions``,
+    ``localCheckpoint`` loops) check this and raise a clear error
+    instead of an AttributeError."""
     return getattr(spark, "_jvm", None) is not None
 
 

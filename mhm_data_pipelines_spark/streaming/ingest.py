@@ -14,9 +14,10 @@ Watermarking + windowed/session aggregation are new capabilities beyond
 the reference (its late-data policy was "coerce to null and drop", P3).
 
 Scale notes: ``maxFilesPerTrigger`` bounds micro-batch size; the file
-index checkpoint replaces skip-if-exists bookkeeping; ``foreachBatch``
-writes reproduce the per-directory partial-stats emission without ever
-re-reading old data.
+index checkpoint replaces skip-if-exists bookkeeping; the per-epoch
+partial sinks (``sources.io._batch_sink``; ``sources.io`` states the
+idempotency rule) reproduce the per-directory partial-stats emission
+without ever re-reading old data.
 """
 
 from __future__ import annotations
@@ -26,6 +27,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
+from mhm_data_pipelines_spark.sources.io import (
+    _batch_sink,
+    _rewrite_partitions,
+)
 from mhm_data_pipelines_spark.sources.lake import _with_dimensions
 
 
@@ -109,31 +114,24 @@ def incremental_overview(
     ts: str = "ts",
     keys: tuple[str, ...] = ("site", "participant_id", "metric"),
 ) -> DataStreamWriter:
-    """foreachBatch partial-stats emission: each micro-batch appends its
+    """Per-epoch partial-stats emission: each micro-batch writes its
     partial (count/min/max/day-set) aggregate; readers merge partials
-    with one more groupBy — exactly the reference's
-    accumulate-then-merge contract (process-overview.py:168-194,301-324)
-    but checkpointed and restart-safe."""
-
-    def emit(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.filter(F.col(ts).isNotNull())
-            .groupBy(*keys)
-            .agg(
-                F.count("*").alias("row_count"),
-                F.min(F.to_date(ts)).alias("start_date"),
-                F.max(F.to_date(ts)).alias("end_date"),
-                F.collect_set(F.to_date(ts)).alias("day_set"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_path)
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(emit)
+    with one more groupBy (:func:`merge_partial_overview`) — exactly the
+    reference's accumulate-then-merge contract
+    (process-overview.py:168-194,301-324) but checkpointed and
+    restart-safe."""
+    return _batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: batch.filter(F.col(ts).isNotNull())
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("row_count"),
+            F.min(F.to_date(ts)).alias("start_date"),
+            F.max(F.to_date(ts)).alias("end_date"),
+            F.collect_set(F.to_date(ts)).alias("day_set"),
+        ),
     )
 
 
@@ -162,32 +160,21 @@ def sketch_stream(
     bucket_cols: tuple[str, ...],
     key: str,
 ) -> DataStreamWriter:
-    """foreachBatch maintenance of a mergeable DISTINCT-COUNT sketch
+    """Per-epoch maintenance of a mergeable DISTINCT-COUNT sketch
     table (``operators.sketches``): each micro-batch writes its own
     per-bucket HLL sketches; readers merge across batches with one
     ``hll_union_agg`` (:func:`read_sketch_table`). Distinct counting
     over a stream WITHOUT keeping member sets in the state store —
     per-batch state is one KB-sized sketch per touched bucket, and the
     merge is exact sketch semantics, not approximate bookkeeping.
-
-    Idempotent the same way as ``stateful.neardup_stream``: each batch
-    owns its ``batch_id=N`` partition directory with overwrite
-    semantics, so a retried epoch replaces its partial output instead
-    of double-counting it.
     """
     from mhm_data_pipelines_spark.operators.sketches import sketch_distinct
 
-    def emit(batch: DataFrame, batch_id: int) -> None:
-        (
-            sketch_distinct(batch, list(bucket_cols), key)
-            .write.mode("overwrite")
-            .parquet(f"{sketch_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(emit)
+    return _batch_sink(
+        stream,
+        sketch_path,
+        checkpoint,
+        lambda batch: sketch_distinct(batch, list(bucket_cols), key),
     )
 
 
@@ -212,30 +199,22 @@ def manifest_stream(
     columns: list[str],
     n_buckets: int = 64,
 ) -> DataStreamWriter:
-    """foreachBatch maintenance of a content manifest
+    """Per-epoch maintenance of a content manifest
     (``operators.diff.content_manifest``) over a stream: each
     micro-batch writes its per-bucket partial (count, commutative XOR
-    signature, min/max hash) to its own ``batch_id=N`` partition with
-    overwrite semantics — a retried epoch replaces its partial, so the
-    maintenance is checkpoint-idempotent like :func:`sketch_stream`.
-    Readers merge with :func:`read_manifest_table`; because XOR/sum/
-    min/max are associative and commutative, the streamed manifest is
-    BYTE-EQUAL to the batch manifest of the same rows, whatever the
-    arrival order — the reproducibility audit works mid-ingest.
+    signature, min/max hash). Readers merge with
+    :func:`read_manifest_table`; because XOR/sum/min/max are associative
+    and commutative, the streamed manifest is BYTE-EQUAL to the batch
+    manifest of the same rows, whatever the arrival order — the
+    reproducibility audit works mid-ingest.
     """
     from mhm_data_pipelines_spark.operators.diff import content_manifest
 
-    def emit(batch: DataFrame, batch_id: int) -> None:
-        (
-            content_manifest(batch, columns, n_buckets)
-            .write.mode("overwrite")
-            .parquet(f"{manifest_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(emit)
+    return _batch_sink(
+        stream,
+        manifest_path,
+        checkpoint,
+        lambda batch: content_manifest(batch, columns, n_buckets),
     )
 
 
@@ -259,36 +238,23 @@ def enrich_stream(
 ) -> DataStreamWriter:
     """Stream-static dimension enrichment with mergeable per-batch
     aggregate partials: each micro-batch joins the (broadcast) static
-    dimension and writes its per-group ``(n, sum)`` partial to its own
-    ``batch_id=N`` partition with overwrite semantics — a retried
-    epoch replaces its partial, so the maintenance is checkpoint-
-    idempotent like :func:`sketch_stream`. Count/sum are associative
-    and commutative, so :func:`read_enriched_table`'s merge equals the
-    batch join + aggregate of the same rows regardless of arrival
-    order or micro-batch boundaries.
+    dimension and writes its per-group ``(n, sum)`` partial. Count/sum
+    are associative and commutative, so :func:`read_enriched_table`'s
+    merge equals the batch join + aggregate of the same rows regardless
+    of arrival order or micro-batch boundaries.
 
-    The dim is joined INSIDE foreachBatch (not as a stream-static plan
+    The dim is joined per micro-batch (not as a stream-static plan
     node), so a dim refresh between epochs is picked up — the
     "slowly-changing dimension, latest snapshot per batch" semantics
     production enrichment jobs want.
     """
-
-    def emit(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.join(F.broadcast(dim), on)
-            .groupBy(*group_cols)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(value_col).alias("s"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{out_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(emit)
+    return _batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: batch.join(F.broadcast(dim), on)
+        .groupBy(*group_cols)
+        .agg(F.count("*").alias("n"), F.sum(value_col).alias("s")),
     )
 
 
@@ -313,11 +279,9 @@ def validate_stream(
 ) -> DataStreamWriter:
     """Streaming data-contract enforcement: every micro-batch runs the
     declarative constraint suite (:func:`~..operators.validate.
-    validate_constraints`) and writes its per-rule violation counts to
-    a ``batch_id=N`` partition with overwrite semantics — a retried
-    epoch replaces its own report, so the maintenance is checkpoint-
-    idempotent exactly like :func:`enrich_stream`. Violation/total
-    counts are associative-commutative sums, so
+    validate_constraints`) and writes its per-rule violation counts as
+    its epoch's partial. Violation/total counts are
+    associative-commutative sums, so
     :func:`read_validation_table`'s merge equals the batch suite over
     the union of all arrived rows, whatever the micro-batch boundaries.
 
@@ -340,18 +304,13 @@ def validate_stream(
                 "sink table instead"
             )
 
-    def emit(batch: DataFrame, batch_id: int) -> None:
-        (
-            validate_constraints(batch, rules, refs)
-            .select("rule", "kind", "violations", "total")
-            .write.mode("overwrite")
-            .parquet(f"{out_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(emit)
+    return _batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: validate_constraints(batch, rules, refs).select(
+            "rule", "kind", "violations", "total"
+        ),
     )
 
 
@@ -383,7 +342,7 @@ def topk_stream(
     group_cols: tuple[str, ...],
     item_col: str,
 ) -> DataStreamWriter:
-    """foreachBatch maintenance of a streaming TOP-K table: each
+    """Per-epoch maintenance of a streaming TOP-K table: each
     micro-batch writes only its OWN (group, item) count partials —
     counts are mergeable, so the reader's sum-then-rank
     (:func:`read_topk_table`) equals a batch top-k over everything
@@ -392,24 +351,14 @@ def topk_stream(
     aggregate, and complete-mode ranking (which Spark would otherwise
     require for a streaming ORDER BY/LIMIT) is deferred to read time
     where it runs over the compact partial table, not the stream.
-
-    Idempotent like the other foreachBatch sinks here: each batch owns
-    its ``batch_id=N`` partition with overwrite semantics, so a
-    retried epoch replaces rather than double-counts.
     """
-
-    def emit(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.groupBy(*group_cols, item_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .parquet(f"{out_path}/batch_id={batch_id}")
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(emit)
+    return _batch_sink(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: batch.groupBy(*group_cols, item_col).agg(
+            F.count(F.lit(1)).alias("n")
+        ),
     )
 
 
@@ -457,93 +406,55 @@ def cdc_stream(
     ``awaitTermination()``).
 
     Scale design — the snapshot is NEVER rewritten whole: it is stored
-    hash-bucketed on the key (``_bucket = pmod(xxhash64(keys),
-    n_buckets)`` partition column), each batch only READS the buckets
+    hash-bucketed on the key (``_bucket`` partition column, the
+    ``operators.ivm`` bucket hash), each batch only READS the buckets
     its keys hash into (partition pruning on the filter) and only
-    REWRITES those buckets (dynamic partition overwrite). A 100 TB
+    REWRITES those buckets (``sources.io._rewrite_partitions``; a bucket
+    whose last key was deleted is left as an empty dir). A 100 TB
     snapshot under a 1 GB batch touches batch-sized data, not the
     table. Within-batch conflicts resolve by cdc_apply's latest-seq
     rule; ACROSS batches, arrival order applies batch-by-batch — the
     standard CDC stream contract (per-key seq must not regress across
     batches; within a batch any order is fine).
 
+    The base write also seeds a reserved zero-row ``_bucket=-1``
+    partition (bucket ids are ``pmod(...) >= 0``, so no batch touches
+    it): the snapshot stays schema-readable when every key is deleted.
     One deliberate driver action per batch: the touched-bucket list
-    and per-bucket survivor counts (both ≤ ``n_buckets`` rows) — the
-    latter because dynamic overwrite cannot write an EMPTY partition,
-    so a bucket whose last key was deleted is overwritten with a
-    zero-row parquet instead (stale rows gone, snapshot schema still
-    readable when the whole table empties).
+    (≤ ``n_buckets`` rows).
     """
     from mhm_data_pipelines_spark.operators.cdc import cdc_apply
+    from mhm_data_pipelines_spark.operators.ivm import _bucket_expr
 
-    spark = base.sparkSession
-    bucket = F.pmod(
-        F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)
-    ).alias("_bucket")
-    base_cols = [c for c in base.columns]
+    bucket = _bucket_expr(key_cols, n_buckets).alias("_bucket")
+    base_cols = list(base.columns)
     (
         base.select(*base_cols, bucket)
         .write.partitionBy("_bucket")
         .mode("overwrite")
         .parquet(snapshot_dir)
     )
+    base.limit(0).write.parquet(f"{snapshot_dir}/_bucket=-1")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sp = batch_df.sparkSession
-        b = batch_df.select(
-            "*",
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols]),
-                F.lit(n_buckets),
-            ).alias("_bucket"),
-        )
         touched = sorted(
             r["_bucket"]
-            for r in b.select("_bucket").distinct().collect()
+            for r in batch_df.select(bucket).distinct().collect()
         )  # bounded by n_buckets
+        if not touched:
+            return
         current = (
-            sp.read.parquet(snapshot_dir)
+            batch_df.sparkSession.read.parquet(snapshot_dir)
             .filter(F.col("_bucket").isin(touched))
             .select(*base_cols)
         )
-        merged = cdc_apply(
-            current, b.drop("_bucket"), key_cols, seq_col, op_col
-        ).select(
-            *base_cols,
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in key_cols]),
-                F.lit(n_buckets),
-            ).alias("_bucket"),
+        merged = cdc_apply(current, batch_df, key_cols, seq_col, op_col)
+        _rewrite_partitions(
+            merged.select(*base_cols, bucket),
+            snapshot_dir,
+            "_bucket",
+            [f"_bucket={t}" for t in touched],
         )
-        # EAGER checkpoint, load-bearing twice over: (a) one compute
-        # for the write and the per-bucket counts below, and (b) the
-        # merge READS the very files the write below overwrites —
-        # materializing first is what makes read-then-overwrite safe.
-        merged = merged.localCheckpoint()
-        (
-            merged.write.partitionBy("_bucket")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(snapshot_dir)
-        )
-        nonempty = {
-            r["_bucket"]
-            for r in merged.groupBy("_bucket").count().collect()
-        }  # bounded by n_buckets
-        emptied = [t for t in touched if t not in nonempty]
-        for t in emptied:
-            # Overwrite the emptied bucket with a ZERO-ROW parquet
-            # rather than deleting the directory: stale rows go away,
-            # and the snapshot stays schema-readable even when every
-            # key in the table has been deleted.
-            (
-                merged.drop("_bucket")
-                .limit(0)
-                .write.mode("overwrite")
-                .parquet(f"{snapshot_dir}/_bucket={t}")
-            )
 
     return (
         changes.writeStream.foreachBatch(_apply)

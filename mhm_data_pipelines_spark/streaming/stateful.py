@@ -262,13 +262,13 @@ def neardup_stream(
     too wide for the state store: num_hashes longs per historical doc).
 
     foreachBatch is the right harness: the banded join + verify is a
-    batch plan per micro-batch. foreachBatch re-runs a batch whose
-    epoch failed mid-emit, so the writes are made IDEMPOTENT by
-    scoping each batch to its own ``batch_id=N`` partition directory
-    with overwrite semantics — a retried batch replaces its partial
-    output instead of appending it twice. Readers load the directory
-    roots (partition discovery surfaces ``batch_id`` as a column;
-    consumers of the index use only id + signature).
+    batch plan per micro-batch. Both the matches and the index are
+    written as per-epoch partials (``sources.io._write_epoch``, the
+    idempotency rule of ``sources.io``), and a replayed batch matches
+    against the index WITHOUT its own earlier epoch, so it neither adds
+    rows twice nor matches its documents against themselves. Readers
+    load the directory roots (partition discovery surfaces ``batch_id``
+    as a column; consumers of the index use only id + signature).
 
     Each micro-batch is hashed exactly ONCE: the persisted signature
     frame feeds the match (via ``new_signatures``) and the index
@@ -285,11 +285,14 @@ def neardup_stream(
         minhash_match_index,
         minhash_signatures,
     )
+    from mhm_data_pipelines_spark.sources.io import _write_epoch
 
     def emit(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         try:
-            index = spark.read.parquet(index_path)
+            index = spark.read.parquet(index_path).filter(
+                F.col("batch_id") != batch_id
+            )
             have_index = True
         except AnalysisException as exc:
             # Only "index not created yet" is expected; a corrupt or
@@ -315,24 +318,23 @@ def neardup_stream(
                     hash_family,
                     new_signatures=sigs,
                 )
-                matches.write.mode("overwrite").parquet(
-                    f"{out_path}/batch_id={batch_id}"
-                )
+                _write_epoch(matches, out_path, batch_id)
             elif batch_id == 0:
                 # Materialize the matches root even when batch 0 has no
                 # index to match against, so readers never hit
                 # PATH_NOT_FOUND on a stream that produced no matches.
                 id_t = dict(batch.dtypes)[id_col]
-                spark.createDataFrame(
-                    [],
-                    f"id_new {id_t}, id_index {id_t}, est_jaccard double",
-                ).write.mode("overwrite").parquet(
-                    f"{out_path}/batch_id={batch_id}"
+                _write_epoch(
+                    spark.createDataFrame(
+                        [],
+                        f"id_new {id_t}, id_index {id_t}, "
+                        "est_jaccard double",
+                    ),
+                    out_path,
+                    batch_id,
                 )
             if update_index:
-                sigs.write.mode("overwrite").parquet(
-                    f"{index_path}/batch_id={batch_id}"
-                )
+                _write_epoch(sigs, index_path, batch_id)
         finally:
             sigs.unpersist()
 
@@ -354,49 +356,26 @@ def compact_signature_index(
     listing than scanning. Merges every batch partition into a single
     ``batch_id=-1`` partition (the reserved "compacted epoch"; real
     batch ids are non-negative, so later appends never collide) of
-    ``target_files`` files, published with the same sibling-temp-dir +
-    rename protocol as ``operators.upsert`` — a crash leaves either the
-    old layout or the new, never a torn index. Returns the number of
-    batch directories retired.
+    ``target_files`` files, committed by ``sources.io._rewrite_partitions``
+    (every old ``batch_id=*`` dir retired, ``batch_id=-1`` published).
+    Returns the number of batch directories retired.
 
     Operational contract: run while the stream is STOPPED (between
     restarts). Compacting under a live stream races the in-flight
     epoch's append.
     """
-    import uuid as _uuid
+    from mhm_data_pipelines_spark.sources.io import _rewrite_partitions
 
-    df = spark.read.parquet(index_path).drop("batch_id")
-    tmp = f"{index_path}__compact_tmp_{_uuid.uuid4().hex}"
-    df.coalesce(target_files).write.parquet(f"{tmp}/batch_id=-1")
-
-    from mhm_data_pipelines_spark.session import supports_jvm_access
-
-    if not supports_jvm_access(spark):
-        raise RuntimeError(
-            "index compaction needs Hadoop-FS atomic renames (py4j) — "
-            "genuinely JVM-bound; run compaction on a classic session."
-        )
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(index_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
+    df = spark.read.parquet(index_path)
+    retire = sorted({f.rsplit("/", 2)[-2] for f in df.inputFiles()})
+    _rewrite_partitions(
+        df.withColumn("batch_id", F.lit(-1)).coalesce(target_files),
+        index_path,
+        "batch_id",
+        retire,
+        keep_empty=False,
     )
-    retired = 0
-    for status in fs.listStatus(hpath(index_path)):
-        name = status.getPath().getName()
-        if not (status.isDirectory() and name.startswith("batch_id=")):
-            continue
-        if not fs.rename(
-            status.getPath(), hpath(f"{tmp}/_retired_{name}")
-        ):
-            raise IOError(f"index compact: could not retire {name}")
-        retired += 1
-    if not fs.rename(
-        hpath(f"{tmp}/batch_id=-1"), hpath(f"{index_path}/batch_id=-1")
-    ):
-        raise IOError("index compact: could not publish compacted epoch")
-    fs.delete(hpath(tmp), True)
-    return retired
+    return len(retire)
 
 
 _HOLT_OUT_SCHEMA = (

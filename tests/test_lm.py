@@ -100,9 +100,7 @@ def test_sb_trigram_branches_hand_values(spark):
     """Every Stupid-Backoff branch with hand-computed scores.
     train counts: tri (a,b,a):1 (b,a,b):1; big (a,b):2 (b,a):1 (a,c):1;
     uni a:3 b:2 c:1; N=6."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        sb_trigram_doc_scores,
-    )
+    from mhm_data_pipelines_spark.operators.lm import sb_doc_scores
 
     train = _df(spark, _TRAIN)
     held = _df(
@@ -118,7 +116,7 @@ def test_sb_trigram_branches_hand_values(spark):
     )
     got = {
         r["doc_id"]: r
-        for r in sb_trigram_doc_scores(held, train=train).collect()
+        for r in sb_doc_scores(held, train=train, order=3).collect()
     }
     assert "t6" not in got
     assert got["t1"]["avg_logs"] == pytest.approx(round(math.log(1.0), 4))
@@ -132,20 +130,18 @@ def test_sb_trigram_branches_hand_values(spark):
     assert got["t5"]["avg_logs"] == pytest.approx(
         round(math.log(0.4 * 0.4 * 1.0 / 6), 4)
     )
-    assert got["t1"]["n_trigrams"] == 1
+    assert got["t1"]["n_ngrams"] == 1
     with pytest.raises(ValueError):
-        sb_trigram_doc_scores(held, train=train, alpha=1.0)
+        sb_doc_scores(held, train=train, order=3, alpha=1.0)
 
 
 def test_sb_self_scored_is_mle_trigram(spark):
     """Self-scoring always hits the trigram branch (prefix
     containment), so scores reduce to MLE trigram conditionals."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        sb_trigram_doc_scores,
-    )
+    from mhm_data_pipelines_spark.operators.lm import sb_doc_scores
 
     df = _df(spark, [("d1", ["a", "b", "a", "b"])])
-    got = {r["doc_id"]: r for r in sb_trigram_doc_scores(df).collect()}
+    got = {r["doc_id"]: r for r in sb_doc_scores(df, order=3).collect()}
     # trigrams (a,b,a): 1/c(a,b)=1/2... c(a,b)=2 within d1;
     # (b,a,b): 1/c(b,a)=1/1
     want = (math.log(0.5) + math.log(1.0)) / 2
@@ -158,9 +154,7 @@ def test_kn_trigram_hand_values_all_levels(spark):
     P(a|a,b) = .25 + .75*P(a|b) = .25 + .75*.5 = .625;
     unseen trigram/known ctx -> interpolation term only;
     unknown ctx -> middle level; unknown middle -> P_cont; OOV -> D/B."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        kn_trigram_doc_scores,
-    )
+    from mhm_data_pipelines_spark.operators.lm import kn_doc_scores
 
     train = _df(spark, _TRAIN)
     held = _df(
@@ -177,15 +171,15 @@ def test_kn_trigram_hand_values_all_levels(spark):
     )
     got = {
         r["doc_id"]: r
-        for r in kn_trigram_doc_scores(held, train=train).collect()
+        for r in kn_doc_scores(held, train=train, order=3).collect()
     }
     assert "h5" not in got
     want = {"s1": 0.625, "h1": 0.1875, "h2": 0.5, "h3": 1 / 3, "h4": 0.25}
     for k, w in want.items():
         assert got[k]["avg_logp"] == pytest.approx(round(math.log(w), 4)), k
-        assert got[k]["n_trigrams"] == 1
+        assert got[k]["n_ngrams"] == 1
     with pytest.raises(ValueError):
-        kn_trigram_doc_scores(held, train=train, discount=0.0)
+        kn_doc_scores(held, train=train, order=3, discount=0.0)
 
 
 def test_kn_trigram_probability_mass_sums_to_one(spark):
@@ -193,9 +187,7 @@ def test_kn_trigram_probability_mass_sums_to_one(spark):
     EXACTLY 1 over the vocabulary — the property the re-aggregated
     c12 = Σ c123 denominator buys (raw bigram counts would break it
     at document boundaries). Σ_w3 P(w3 | a,b) over {a,b,c} = 1."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        kn_trigram_doc_scores,
-    )
+    from mhm_data_pipelines_spark.operators.lm import kn_doc_scores
 
     train = _df(spark, _TRAIN)
     held = _df(
@@ -205,37 +197,10 @@ def test_kn_trigram_probability_mass_sums_to_one(spark):
     )
     got = {
         r["doc_id"]: math.exp(r["avg_logp"])
-        for r in kn_trigram_doc_scores(held, train=train).collect()
+        for r in kn_doc_scores(held, train=train, order=3).collect()
     }
     # note: exp(round(ln p, 4)) ~ p to ~1e-4
     assert sum(got.values()) == pytest.approx(1.0, abs=5e-4)
-
-
-def test_kn_generic_order3_matches_handwritten_trigram(spark):
-    """kn_doc_scores(order=3) must reproduce kn_trigram_doc_scores
-    bit-for-bit (same tables, same float chains) — the generic builder
-    is the handwritten recursion with the loop unrolled."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        kn_doc_scores,
-        kn_trigram_doc_scores,
-    )
-
-    train = _df(spark, _TRAIN)
-    held = _df(
-        spark,
-        [("s1", ["a", "b", "a"]), ("h1", ["a", "b", "c"]),
-         ("h2", ["x", "a", "b"]), ("h3", ["x", "z", "b"]),
-         ("h4", ["x", "z", "q"])],
-    )
-    via_tri = {
-        r["doc_id"]: (r["n_trigrams"], r["avg_logp"], r["ppl"])
-        for r in kn_trigram_doc_scores(held, train=train).collect()
-    }
-    via_gen = {
-        r["doc_id"]: (r["n_ngrams"], r["avg_logp"], r["ppl"])
-        for r in kn_doc_scores(held, train=train, order=3).collect()
-    }
-    assert via_tri == via_gen
 
 
 def test_kn5_every_recursion_level_hand_values(spark):
@@ -341,31 +306,6 @@ def test_sb5_every_backoff_level_hand_values(spark):
         assert got[k]["n_ngrams"] == 1
     with pytest.raises(ValueError):
         sb_doc_scores(held, train=train, order=1)
-
-
-def test_sb_trigram_wrapper_matches_generic_order3(spark):
-    """sb_trigram_doc_scores is sb_doc_scores(order=3) with the
-    historical n_trigrams name — values must be identical."""
-    from mhm_data_pipelines_spark.operators.lm import (
-        sb_doc_scores,
-        sb_trigram_doc_scores,
-    )
-
-    train = _df(spark, _TRAIN)
-    held = _df(
-        spark,
-        [("t1", ["b", "a", "b"]), ("t3", ["x", "a", "b"]),
-         ("t5", ["x", "y", "z"])],
-    )
-    via_wrapper = {
-        r["doc_id"]: (r["n_trigrams"], r["avg_logs"], r["ppl"])
-        for r in sb_trigram_doc_scores(held, train=train).collect()
-    }
-    via_generic = {
-        r["doc_id"]: (r["n_ngrams"], r["avg_logs"], r["ppl"])
-        for r in sb_doc_scores(held, train=train, order=3).collect()
-    }
-    assert via_wrapper == via_generic
 
 
 def test_kn_lower_ppl_for_in_distribution_text(spark):

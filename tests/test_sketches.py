@@ -59,6 +59,7 @@ def test_stream_sketch_table_merges_across_batches(spark, tmp_path):
     """Per-batch sketch partitions (sketch_stream layout) must merge to
     the true distinct count even when batches overlap members, and a
     re-written batch partition (idempotent retry) must not double-count."""
+    from mhm_data_pipelines_spark.sources.io import _write_epoch
     from mhm_data_pipelines_spark.streaming.ingest import read_sketch_table
 
     root = str(tmp_path / "sk")
@@ -70,16 +71,12 @@ def test_stream_sketch_table_merges_across_batches(spark, tmp_path):
         [("d1", f"u{i}") for i in range(50, 150)], ["day", "user"]
     )
     for bid, b in ((0, b0), (1, b1)):
-        sketch_distinct(b, ["day"], key="user").write.mode(
-            "overwrite"
-        ).parquet(f"{root}/batch_id={bid}")
+        _write_epoch(sketch_distinct(b, ["day"], key="user"), root, bid)
     merged = estimate(read_sketch_table(spark, root, ("day",)))
     (row,) = merged.collect()
     assert abs(row["sketch_estimate"] - 150) <= 15  # union, not 200
     # Retry of batch 1 overwrites its partition; count unchanged.
-    sketch_distinct(b1, ["day"], key="user").write.mode(
-        "overwrite"
-    ).parquet(f"{root}/batch_id=1")
+    _write_epoch(sketch_distinct(b1, ["day"], key="user"), root, 1)
     (row2,) = estimate(read_sketch_table(spark, root, ("day",))).collect()
     assert row2["sketch_estimate"] == row["sketch_estimate"]
 

@@ -6,9 +6,12 @@ from __future__ import annotations
 
 import gzip
 
+import pytest
 from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.operators.overview import overview_stats
+from mhm_data_pipelines_spark.operators.sketches import estimate
+from mhm_data_pipelines_spark.streaming import ingest
 from mhm_data_pipelines_spark.streaming.ingest import (
     incremental_overview,
     merge_partial_overview,
@@ -16,6 +19,7 @@ from mhm_data_pipelines_spark.streaming.ingest import (
     stream_lake,
     windowed_counts,
 )
+from mhm_data_pipelines_spark.streaming.stateful import neardup_stream
 
 SCHEMA = "`value.time` string, `value.key` string, `value.intVal` string"
 DEC = 1735387200.0  # 2024-12-28 12:00 UTC
@@ -254,7 +258,7 @@ def test_topk_stream_merge_equals_batch_topk(spark, tmp_path):
 def test_cdc_stream_two_batches_and_bucket_emptying(spark, tmp_path):
     """Streaming CDC maintenance: two micro-batches (two source files)
     apply sequentially; a delete that empties an entire hash bucket
-    must remove the bucket directory, not leave stale rows."""
+    must not leave stale rows."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -340,8 +344,11 @@ def test_cdc_stream_two_batches_and_bucket_emptying(spark, tmp_path):
 
 def test_cdc_stream_single_key_bucket_fully_deleted(spark, tmp_path):
     """n_buckets=1 forces every key into one bucket; deleting ALL keys
-    must leave an empty snapshot (the emptied-bucket directory is
-    removed, and reads return zero rows)."""
+    must leave an empty snapshot: the emptied bucket is an empty dir,
+    and the reserved zero-row ``_bucket=-1`` partition keeps reads
+    schema-valid (zero rows)."""
+    import os
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -370,6 +377,9 @@ def test_cdc_stream_single_key_bucket_fully_deleted(spark, tmp_path):
     )
     q.awaitTermination(180)
     assert read_cdc_snapshot(spark, snap).count() == 0
+    assert not [
+        f for f in os.listdir(f"{snap}/_bucket=0") if f.endswith(".parquet")
+    ]
 
 
 def test_drain_timeout_stops_stream_and_names_key():
@@ -392,3 +402,135 @@ def test_drain_timeout_stops_stream_and_names_key():
     with pytest.raises(TimeoutError, match="stream_cdc"):
         _await_drain(q, "stream_cdc")
     assert q.stopped
+
+
+def _replay_source(spark, root):
+    """Two one-file micro-batches covering every column the partial
+    sinks read; doc 5 is a near-copy of doc 1 (a cross-batch near-dup)."""
+    import os
+    import time
+    from datetime import datetime
+
+    base = (
+        "the quick brown fox jumps over the lazy dog and keeps on "
+        "running through the quiet field"
+    )
+    texts = {
+        1: base,
+        5: base.replace("quick", "swift"),
+        **{i: f"unrelated document {i} about engines and gears"
+           for i in (2, 3, 4, 6, 7, 8)},
+    }
+    schema = (
+        "doc_id long, site string, participant_id string, metric string, "
+        "ts timestamp, item long, v double, text string"
+    )
+    rows = [
+        (
+            i,
+            ("LON", "NYC")[i % 2],
+            f"P{i % 3}",
+            "steps",
+            datetime(2024, 12, 28 + i % 3, i),
+            i % 4,
+            float(i - 3),
+            texts[i],
+        )
+        for i in range(1, 9)
+    ]
+    src = f"{root}/src"
+    df = spark.createDataFrame(rows, schema)
+    df.filter(F.col("doc_id") <= 4).coalesce(1).write.parquet(f"{src}/b0")
+    df.filter(F.col("doc_id") > 4).coalesce(1).write.parquet(f"{src}/b1")
+    old = time.time() - 3600  # b0 must form micro-batch 0
+    for d, _, files in os.walk(f"{src}/b0"):
+        for fn in files:
+            os.utime(os.path.join(d, fn), (old, old))
+    return (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+_RULES = [{"name": "v_range", "kind": "range", "col": "v", "min": 0.0}]
+
+#: sink → (writer of (stream, out, checkpoint), merged read of (spark, out))
+REPLAY_CASES = {
+    "incremental_overview": (
+        ingest.incremental_overview,
+        lambda sp, out: merge_partial_overview(sp.read.parquet(out)),
+    ),
+    "sketch_stream": (
+        lambda st, out, ck: ingest.sketch_stream(
+            st, out, ck, ("site",), "participant_id"
+        ),
+        lambda sp, out: estimate(ingest.read_sketch_table(sp, out, ("site",))),
+    ),
+    "manifest_stream": (
+        lambda st, out, ck: ingest.manifest_stream(
+            st, out, ck, ["doc_id", "text"], n_buckets=4
+        ),
+        ingest.read_manifest_table,
+    ),
+    "enrich_stream": (
+        lambda st, out, ck: ingest.enrich_stream(
+            st,
+            st.sparkSession.createDataFrame(
+                [("LON", "UK"), ("NYC", "US")], "site string, country string"
+            ),
+            ["site"], ["country"], "v", out, ck,
+        ),
+        lambda sp, out: ingest.read_enriched_table(sp, out, ["country"]),
+    ),
+    "validate_stream": (
+        lambda st, out, ck: ingest.validate_stream(st, _RULES, out, ck),
+        ingest.read_validation_table,
+    ),
+    "topk_stream": (
+        lambda st, out, ck: ingest.topk_stream(st, out, ck, ("site",), "item"),
+        lambda sp, out: ingest.read_topk_table(
+            sp, out, ("site",), "item", k=3
+        ),
+    ),
+    "neardup_stream": (
+        lambda st, out, ck: neardup_stream(
+            st, f"{out}_index", ck, out, threshold=0.5
+        ),
+        lambda sp, out: sp.read.parquet(out).drop("batch_id"),
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", sorted(REPLAY_CASES))
+def test_partial_sink_replay_leaves_merged_read_unchanged(
+    spark, tmp_path, sink
+):
+    """Exactly-once under replay: Spark re-runs an epoch whose output
+    was written but whose checkpoint commit was lost. Drain two
+    micro-batches, delete the last commit, restart — the re-run epoch
+    must replace its own output, so the merged read is unchanged."""
+    import os
+
+    make_writer, read = REPLAY_CASES[sink]
+    stream = _replay_source(spark, str(tmp_path))
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+
+    def drain():
+        q = make_writer(stream, out, ck).trigger(availableNow=True).start()
+        assert q.awaitTermination(300)
+
+    def merged():
+        return sorted(tuple(map(str, r)) for r in read(spark, out).collect())
+
+    drain()
+    first = merged()
+    assert first
+    assert sorted(os.listdir(f"{ck}/commits"))[-1] == "1"  # two epochs
+    for name in ("1", ".1.crc"):
+        if os.path.exists(f"{ck}/commits/{name}"):
+            os.remove(f"{ck}/commits/{name}")
+    drain()
+    assert os.path.exists(f"{ck}/commits/1")  # epoch 1 ran again
+    assert merged() == first

@@ -3,6 +3,9 @@ of untouched rows, and partition-scoped rewrite on disk."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.operators.upsert import (
@@ -79,49 +82,140 @@ def test_partitioned_rewrite_touches_only_updated_partitions(spark, tmp_path):
     assert mtime_b_after == mtime_b
 
 
-def test_crash_between_write_and_swap_leaves_base_intact(
-    spark, tmp_path, monkeypatch
-):
-    """Commit-protocol crash injection: die after the temp-dir write but
-    before any partition swap — the base table must be byte-identical,
-    with only an orphaned temp dir left, and a retry must converge."""
-    import os
-
-    import pytest
-
-    import mhm_data_pipelines_spark.operators.upsert as up
-
-    base_path = str(tmp_path / "tbl3")
+def _upsert_case(spark, root):
+    base = f"{root}/tbl"
     spark.createDataFrame(
         [(1, 1, "one", "a"), (2, 1, "two", "a"), (3, 1, "three", "b")],
         SCHEMA,
-    ).write.partitionBy("pt").parquet(base_path)
-    before = {
-        r.k: (r.v, r.payload) for r in spark.read.parquet(base_path).collect()
-    }
+    ).write.partitionBy("pt").parquet(base)
     updates = spark.createDataFrame([(2, 9, "two-v9", "a")], SCHEMA)
+
+    def state():
+        return {
+            r.k: (r.v, r.payload) for r in spark.read.parquet(base).collect()
+        }
+
+    def run():
+        write_upsert_partitioned(base, updates, ["k"], "v", "pt")
+
+    return state, run, {1: (1, "one"), 2: (9, "two-v9"), 3: (1, "three")}
+
+
+def _erase_case(spark, root):
+    from mhm_data_pipelines_spark.operators.upsert import erase_subjects
+
+    base = f"{root}/tbl"
+    spark.createDataFrame(
+        [(u, f"p{u % 2}", float(u)) for u in range(6)],
+        "user_id long, part string, v double",
+    ).write.partitionBy("part").parquet(base)
+    subjects = spark.createDataFrame([(2,), (3,)], "user_id long")
+
+    def state():
+        return {
+            (r.user_id, r.part) for r in spark.read.parquet(base).collect()
+        }
+
+    def run():
+        erase_subjects(base, subjects, "user_id", "part")
+
+    return state, run, {(0, "p0"), (1, "p1"), (4, "p0"), (5, "p1")}
+
+
+def _ivm_case(spark, root):
+    from mhm_data_pipelines_spark.operators.ivm import (
+        apply_increment,
+        init_rollup_table,
+        read_rollup,
+    )
+
+    path = f"{root}/roll"
+    rows = [(i % 3, float(i)) for i in range(12)]
+    init_rollup_table(
+        spark, path, spark.createDataFrame(rows[:6], "g long, v double"),
+        ["g"], "v", n_buckets=4,
+    )
+    batch = spark.createDataFrame(rows[6:], "g long, v double")
+
+    def state():
+        return {
+            r.g: (r.n, r.s1) for r in read_rollup(spark, path).collect()
+        }
+
+    def run():
+        apply_increment(spark, path, batch, ["g"], "v")
+
+    want = {}
+    for g, v in rows:
+        n, s1 = want.get(g, (0, 0.0))
+        want[g] = (n + 1, s1 + v)
+    return state, run, want
+
+
+def _index_compaction_case(spark, root):
+    from mhm_data_pipelines_spark.operators.dedup import minhash_signatures
+    from mhm_data_pipelines_spark.streaming.stateful import (
+        compact_signature_index,
+    )
+
+    index = f"{root}/sigidx"
+    docs = spark.createDataFrame(
+        [(i, f"document number {i} with shared words") for i in range(6)],
+        "doc_id long, text string",
+    )
+    for b in range(3):
+        minhash_signatures(
+            docs.filter(F.col("doc_id") % 3 == b), num_hashes=8
+        ).write.parquet(f"{index}/batch_id={b}")
+
+    def state():
+        rows = spark.read.parquet(index).collect()
+        return (
+            {(r.doc_id, tuple(r.signature)) for r in rows},
+            {r.batch_id for r in rows},
+        )
+
+    def run():
+        compact_signature_index(spark, index, target_files=2)
+
+    return state, run, (state()[0], {-1})
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_upsert_case, _erase_case, _ivm_case, _index_compaction_case],
+    ids=[
+        "write_upsert_partitioned",
+        "erase_subjects",
+        "ivm_apply_increment",
+        "compact_signature_index",
+    ],
+)
+def test_crash_between_write_and_swap_leaves_base_intact(
+    spark, tmp_path, monkeypatch, case
+):
+    """Commit-protocol crash injection for every partition rewrite: die
+    after the temp-dir write but before any partition swap — the table
+    must read as before, with only an orphaned temp dir left, and a
+    retry must converge."""
+    import mhm_data_pipelines_spark.sources.io as sio
+
+    state, run, want = case(spark, str(tmp_path))
+    before = state()
 
     def boom(*a, **k):
         raise RuntimeError("injected crash before swap")
 
-    monkeypatch.setattr(up, "_swap_partitions", boom)
+    monkeypatch.setattr(sio, "_swap_partitions", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
-        up.write_upsert_partitioned(base_path, updates, ["k"], "v", "pt")
-    after_crash = {
-        r.k: (r.v, r.payload) for r in spark.read.parquet(base_path).collect()
-    }
-    assert after_crash == before  # base untouched
-    orphans = [
-        d for d in os.listdir(tmp_path) if "__upsert_tmp_" in d
-    ]
-    assert orphans  # written-but-unpublished merge survives for cleanup
+        run()
+    assert state() == before  # base untouched
+    # written-but-unpublished rewrite survives for cleanup
+    assert [d for d in os.listdir(tmp_path) if "__rewrite_tmp_" in d]
 
     monkeypatch.undo()
-    up.write_upsert_partitioned(base_path, updates, ["k"], "v", "pt")
-    got = {
-        r.k: (r.v, r.payload) for r in spark.read.parquet(base_path).collect()
-    }
-    assert got == {1: (1, "one"), 2: (9, "two-v9"), 3: (1, "three")}
+    run()
+    assert state() == want
 
 
 def test_partitioned_rewrite_restores_overwrite_mode(spark, tmp_path):
