@@ -16,6 +16,7 @@ the 100 TB north-star but parameterized so tests run on ``local[*]``:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -69,6 +70,30 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+def _buffer_conf(memory: str) -> dict[str, str]:
+    """Tungsten page and broadcast chunk size for a JVM whose heap is
+    ``memory`` (a ``spark.driver.memory`` value; a bare number is MiB):
+    heap/8192, rounded up to a power of two (1 MiB at 8g).
+
+    G1 allocates any array of half a heap region or more as a humongous
+    object, outside the young generation: it claims whole regions and is
+    freed only by a marking cycle. Its regions are heap/2048 rounded down
+    to a power of two (4 MiB at 8g, capped at 32 MiB), so heap/8192 stays
+    below half a region. Spark's own defaults do not: a 64 MiB page (from
+    heap and cores) and a 4 MiB torrent chunk (one per stage's task
+    binary, kept until cleanup) each take whole regions at 8g. 8192 is
+    also the size of a task's page table, so 8192 pages still address
+    the whole heap; for a heap that is not a power of two that coverage
+    wins over the region bound, which is why the size rounds up."""
+    m = re.fullmatch(r"(\d+)([bkmgt]?)b?", memory.strip().lower())
+    if m is None:
+        raise ValueError(f"spark.driver.memory: cannot parse {memory!r}")
+    heap = int(m[1]) << {"b": 0, "k": 10, "m": 20, "g": 30, "t": 40}[m[2] or "m"]
+    page = 1 << (-(-heap // 8192) - 1).bit_length()
+    size = f"{page >> 10}k"
+    return {"spark.buffer.pageSize": size, "spark.broadcast.blockSize": size}
+
+
 def get_spark(
     app_name: str = "mhm-data-pipelines-spark",
     master: str | None = None,
@@ -120,6 +145,8 @@ def get_spark(
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:
         conf.update(extra_conf)
+    # Sized from the heap actually launched; an explicit value wins.
+    conf = {**_buffer_conf(conf["spark.driver.memory"]), **conf}
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

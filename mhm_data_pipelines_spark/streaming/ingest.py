@@ -31,7 +31,7 @@ from mhm_data_pipelines_spark.sources.io import (
     _batch_sink,
     _rewrite_partitions,
 )
-from mhm_data_pipelines_spark.sources.lake import _with_dimensions
+from mhm_data_pipelines_spark.sources.lake import _CSV_OPTIONS, _with_dimensions
 
 
 def stream_lake(
@@ -55,7 +55,7 @@ def stream_lake(
         .option("recursiveFileLookup", "true")
     )
     if fmt == "csv":
-        reader = reader.option("header", "true")
+        reader = reader.options(**_CSV_OPTIONS)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return _with_dimensions(reader.load(root), root, layout)

@@ -320,3 +320,78 @@ def test_read_lake_unified_build_jobs_scale_with_metrics(spark, tmp_path):
     )
     assert 1 <= jobs <= 2 + len(metrics)
     assert tasks < len(metrics) * files
+
+
+def _csv_buffer_sizes(df) -> list[str | None]:
+    """The ``inputBufferSize`` option of each CSV file relation (batch or
+    streaming) in ``df``'s analyzed plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    sizes = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation":
+            rel = leaf.relation()
+            if rel.fileFormat().getClass().getSimpleName() != "CSVFileFormat":
+                continue
+            opts = rel.options()
+        elif kind == "StreamingRelation":
+            opts = leaf.dataSource().options()
+        else:
+            continue
+        size = opts.get("inputBufferSize")
+        sizes.append(size.get() if size.isDefined() else None)
+    return sizes
+
+
+def test_lake_csv_reads_carry_the_shared_buffer_size(spark, tmp_path, monkeypatch):
+    """Every CSV relation the lake readers build, including the header
+    read of ``read_lake_unified``, sizes univocity's input buffer from
+    ``_CSV_OPTIONS`` instead of its 1 Mi-char default."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from mhm_data_pipelines_spark.sources.lake import _CSV_OPTIONS, read_lake_unified
+    from mhm_data_pipelines_spark.streaming.ingest import stream_lake
+
+    want = _CSV_OPTIONS["inputBufferSize"]
+    root = tmp_path / "buf"
+    for m in ("hr", "steps"):
+        _write_gz(root / "top" / "LON" / "P1" / m / "20240101_0900.csv.gz", ["ts,v", "1,2"])
+
+    built = []
+    for name in ("load", "csv"):
+        def record(self, *args, _read=getattr(DataFrameReader, name), **kwargs):
+            df = _read(self, *args, **kwargs)
+            built.append(df)
+            return df
+        monkeypatch.setattr(DataFrameReader, name, record)
+    read_lake_unified(spark, str(root), layout="raw")
+    unified = [s for df in built for s in _csv_buffer_sizes(df)]
+    # Per metric: one header read and one data read.
+    assert unified == [want] * 4
+
+    assert _csv_buffer_sizes(read_lake(spark, str(root), glob="*.csv.gz")) == [want]
+    stream = stream_lake(spark, str(root), "ts string, v string")
+    assert _csv_buffer_sizes(stream) == [want]
+
+
+def test_lake_reads_lines_longer_than_the_parser_buffer(spark, tmp_path):
+    """A field and a header line each longer than the input buffer read
+    back whole through ``read_lake`` and ``read_lake_unified``."""
+    from mhm_data_pipelines_spark.sources.lake import _CSV_OPTIONS, read_lake_unified
+
+    buf = int(_CSV_OPTIONS["inputBufferSize"])
+    field = "".join(chr(ord("a") + i % 26) for i in range(200_000))
+    long_col = "c" + "_" * (buf + 1000)
+    cases = {
+        "field": (["ts,note", f"1,{field}", "2,short"], ["ts", "note"],
+                  {("1", field), ("2", "short")}),
+        "header": ([f"ts,{long_col}", "3,x"], ["ts", long_col], {("3", "x")}),
+    }
+    for name, (lines, cols, rows) in cases.items():
+        root = tmp_path / name
+        _write_gz(root / "top" / "LON" / "P1" / "m" / "20240101_0900.csv.gz", lines)
+        for df in (read_lake(spark, str(root), glob="*.csv.gz"),
+                   read_lake_unified(spark, str(root), layout="raw")):
+            got = df.select(*[F.col(f"`{c}`").cast("string") for c in cols]).collect()
+            assert {tuple(r) for r in got} == rows, name
