@@ -3275,17 +3275,18 @@ def q_token_budget_select(spark, sf_dir):
     from mhm_data_pipelines_spark.operators.budget import select_to_budget
     from mhm_data_pipelines_spark.functions.text import token_count
 
-    df = _t(spark, sf_dir, "documents").withColumn(
-        "n_tokens", token_count("text").cast("long")
+    # tokenization is the expensive upstream — evaluate it once and
+    # share it between the boundary-sample, totals and window jobs
+    df = (
+        _t(spark, sf_dir, "documents")
+        .withColumn("n_tokens", token_count("text").cast("long"))
+        .localCheckpoint(eager=False)
     )
     out = select_to_budget(
         df,
         budget=5000,
         order_by=[("n_chars", False), ("doc_id", True)],
         value_col="n_tokens",
-        # tokenization is the expensive upstream — evaluate it once and
-        # share the tagged frame between the totals and window jobs
-        share_scan=True,
     )
     return out.select(
         "doc_id", "n_tokens", "running_total"
@@ -3366,15 +3367,15 @@ def q_llm_dataset_build(spark, sf_dir):
     clean = train.join(dirty, "doc_id", "left_anti")
     q = clean.filter(quality_score("text") >= 0.75)
     d = dedup_exact(q)
+    # the upstream decontam→quality→dedup chain is expensive — evaluate
+    # it once and share it across the prefix-sum jobs
     sel = select_to_budget(
-        d.withColumn("n_tokens", token_count("text").cast("long")),
+        d.withColumn("n_tokens", token_count("text").cast("long"))
+        .localCheckpoint(eager=False),
         budget=3000,
         order_by=[("n_chars", False), ("doc_id", True)],
         value_col="n_tokens",
         keep_running=False,
-        # the upstream decontam→quality→dedup chain is expensive —
-        # evaluate it once and share across the prefix-sum jobs
-        share_scan=True,
     )
     return chunk_documents(sel, chunk_tokens=20, overlap=5).orderBy(
         "doc_id", "chunk_id"
@@ -4410,8 +4411,9 @@ def q_minhash_neardup(spark, sf_dir):
     shingle-less re-attach join inside the signature build
     (attach_empty=False here — a NULL signature can never band or
     verify), ~12% of warm wall."""
+    df = _t(spark, sf_dir, "documents")
     out = minhash_near_duplicates(
-        _t(spark, sf_dir, "documents"),
+        df,
         num_hashes=_MINHASH_N,
         bands=_MINHASH_BANDS,
         threshold=_MINHASH_EST_T,
@@ -4419,8 +4421,10 @@ def q_minhash_neardup(spark, sf_dir):
         # md5-per-shingle signatures are expensive enough that the
         # one-scan localCheckpoint beats re-deriving them for all
         # three consumers (measured at sf0.1: ~1.8-2.0 s vs
-        # 1.8-2.4 s+tail lazy) — the documented share_scan condition.
-        share_scan=True,
+        # 1.8-2.4 s+tail lazy).
+        signatures=minhash_signatures(
+            df, "text", "doc_id", _MINHASH_N, 5, "md5", attach_empty=False
+        ).localCheckpoint(eager=False),
     )
     return out.select(
         "id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard")
@@ -10945,7 +10949,9 @@ def q_minhash_pr_curve(spark, sf_dir):
         bands=_MINHASH_BANDS,
         threshold=_MINHASH_EST_T,
         hash_family="md5",
-        share_scan=True,
+        signatures=minhash_signatures(
+            df, "text", "doc_id", _MINHASH_N, 5, "md5", attach_empty=False
+        ).localCheckpoint(eager=False),
     ).select(
         "id_a",
         "id_b",

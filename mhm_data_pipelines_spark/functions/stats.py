@@ -36,21 +36,17 @@ def stats_agg_exprs(value: Column | str, prefix: str = "") -> list[Column]:
     ]
 
 
-def distinct_days(ts: Column | str, exact: bool = True, rsd: float = 0.01) -> Column:
+def distinct_days(ts: Column | str) -> Column:
     """Distinct calendar days with data — the reference's pervasive
     ``day_set`` (process-overview.py:120-126, data_collection.py:48-62,
     extract_patient_summary.py:111,382-388).
 
-    The exact count is the size of the group's set of days: a set holds
-    at most one entry per calendar day, so it stays small, and unlike
-    ``count_distinct`` it needs no second shuffle. ``exact=False``
-    switches to HyperLogLog (``approx_count_distinct``).
+    The count is the size of the group's set of days: a set holds at
+    most one entry per calendar day, so it stays small, and unlike
+    ``count_distinct`` it needs no second shuffle.
     """
     c = F.col(ts) if isinstance(ts, str) else ts
-    d = F.to_date(c)
-    if exact:
-        return F.size(F.collect_set(d)).cast("long")
-    return F.approx_count_distinct(d, rsd)
+    return F.size(F.collect_set(F.to_date(c))).cast("long")
 
 
 def normal_cdf(z: Column | str) -> Column:

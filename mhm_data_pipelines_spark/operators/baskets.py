@@ -131,7 +131,6 @@ def association_rules(
     min_pair_count: int = 2,
     max_basket_size: int = 64,
     round_to: int = 6,
-    share_scan: bool = True,
     prefilter_oversized: bool = False,
 ) -> DataFrame:
     """Pair-depth association statistics:
@@ -143,15 +142,12 @@ def association_rules(
     support/lift stay internally consistent). Pairs below
     ``min_pair_count`` are pruned before the marginal joins.
     """
+    # THREE consumers (pairs, marginals, basket total) — lazily
+    # materialize the basket-array table once instead of re-deriving
+    # the distinct + aggregate per consumer.
     lists = _basket_lists(
         df, basket_col, item_col, max_basket_size, prefilter_oversized
-    )
-    if share_scan:
-        # THREE consumers (pairs, marginals, basket total) — lazily
-        # materialize the basket-array table once instead of
-        # re-deriving the distinct + aggregate per consumer (same
-        # trade as pca.covariance_long; pass False on Spark Connect).
-        lists = lists.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     pairs = (
         _pairs_from_lists(lists)
         .groupBy("item_a", "item_b")
@@ -233,7 +229,7 @@ def item_cosine_neighbors(
     """
     # TWO consumers (pairs + marginals) — lazily materialize the
     # basket-array table once instead of re-deriving it per consumer
-    # (association_rules' share_scan discipline).
+    # (as association_rules does).
     lists = _basket_lists(
         df, basket_col, item_col, max_basket_size, prefilter_oversized
     ).localCheckpoint(eager=False)

@@ -197,25 +197,22 @@ def running_total(
     out_col: str = "running_total",
     num_partitions: int | None = None,
     boundary_samples_per_partition: int = 64,
-    share_scan: bool = False,
 ) -> DataFrame:
     """``out_col`` = inclusive cumulative sum of ``value_col`` over the
     global ``order_by`` ordering, computed with the literal-boundary
-    distributed prefix sum above (no single-task window and, by
-    default, no materialization). ``order_by`` MUST be a total order
+    distributed prefix sum above (no single-task window and no
+    materialization). ``order_by`` MUST be a total order
     (include a unique tiebreaker) with NON-NULL keys — null keys have
     no defined range bucket (boundary comparisons are null-poisoned);
     coalesce them to a sentinel first.
 
-    ``share_scan=True`` lazily ``localCheckpoint``\\ s the bucket-tagged
-    frame so the per-bucket-totals job and the final window job
-    evaluate the upstream plan ONCE instead of twice — opt in when the
-    input embeds expensive derivations (tokenization, Pandas UDFs);
-    the boundary-sample job stays on the original (column-pruned) plan
-    since it reads only the ordering keys. The default keeps the
-    pure-lineage contract: every job re-derives buckets from literal
-    boundaries, nothing is pinned to executor storage, and executor
-    loss costs recompute instead of query failure."""
+    The plan is pure lineage: the boundary-sample, per-bucket-totals
+    and window jobs each re-derive buckets from literal boundaries,
+    nothing is pinned to executor storage, and executor loss costs
+    recompute instead of query failure. When the input embeds
+    expensive derivations (tokenization, Pandas UDFs), pass it through
+    ``localCheckpoint(eager=False)`` first so those jobs evaluate it
+    once."""
     spark = df.sparkSession
     pairs = _split_sort_order(spark, order_by)
     sort_cols = [
@@ -239,8 +236,6 @@ def running_total(
             _bucket_sql(key_names, [a for _, a in pairs], boundaries)
         ).cast("int"),
     ).drop(*key_names)
-    if share_scan:
-        tagged = tagged.localCheckpoint(eager=False)
     w = (
         Window.partitionBy("_pid")
         .orderBy(*sort_cols)
@@ -281,15 +276,14 @@ def select_to_budget(
     order_by: list,
     value_col: str,
     keep_running: bool = True,
-    share_scan: bool = False,
 ) -> DataFrame:
     """Greedy budgeted selection: walk ``df`` in ``order_by`` order and
     keep rows while the cumulative ``value_col`` stays ≤ ``budget`` —
     the "best docs until the token budget is spent" primitive. A row
     whose value would cross the budget is dropped, as is everything
     after it (inclusive-sum semantics, matching SQL's
-    ``SUM(...) OVER (... ROWS UNBOUNDED PRECEDING) <= budget``).
-    ``share_scan`` forwards to :func:`running_total`."""
-    out = running_total(df, order_by, value_col, share_scan=share_scan)
+    ``SUM(...) OVER (... ROWS UNBOUNDED PRECEDING) <= budget``);
+    see :func:`running_total` for when to checkpoint ``df`` first."""
+    out = running_total(df, order_by, value_col)
     out = out.filter(F.col("running_total") <= budget)
     return out if keep_running else out.drop("running_total")

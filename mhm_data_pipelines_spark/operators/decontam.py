@@ -150,7 +150,6 @@ def source_ngram_overlap(
     group_col: str = "source",
     text_col: str = "text",
     n: int = 3,
-    share_scan: bool = True,
 ) -> DataFrame:
     """Cross-source contamination matrix: for every pair of
     ``group_col`` values, how many distinct word ``n``-grams they
@@ -183,12 +182,10 @@ def source_ngram_overlap(
     grams = tokd.select(
         "_g", F.explode(ngrams_of_tokens("_toks", n)).alias("gram")
     ).distinct()
-    if share_scan:
-        # Both consumers (per-gram set, per-group totals) read the
-        # distinct (group, gram) relation; without materialization the
-        # corpus explode runs once per consumer. Same opt-in trade as
-        # bm25_scores/covariance_long; pass False on Spark Connect.
-        grams = grams.localCheckpoint(eager=False)
+    # Both consumers (per-gram set, per-group totals) read the distinct
+    # (group, gram) relation; without materialization the corpus
+    # explode runs once per consumer.
+    grams = grams.localCheckpoint(eager=False)
     per_gram = grams.groupBy("gram").agg(
         F.sort_array(F.collect_set("_g")).alias("_gs")
     )

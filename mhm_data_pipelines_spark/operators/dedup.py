@@ -347,7 +347,6 @@ def minhash_near_duplicates(
     hash_family: str = "xxhash64",
     max_bucket_size: int | None = 10_000,
     signatures: DataFrame | None = None,
-    share_scan: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: signatures → banded candidate
     pairs → verification by estimated Jaccard (signature agreement rate)
@@ -355,20 +354,17 @@ def minhash_near_duplicates(
 
     ``signatures``: precomputed :func:`minhash_signatures` output
     (same num_hashes / shingle_size / hash_family). The signature
-    subplan has THREE consumers (banding + both verification sides),
-    and which strategy wins is scale-dependent, so all three are
-    exposed: (a) default fully-lazy — FASTEST at the measured scales
+    subplan has THREE consumers (banding + both verification sides).
+    Computed here it stays lazy — the fastest at the measured scales
     (sf0.1 warm interleaved A/B: 1.54–1.59 s lazy vs 1.69–1.94 s
     checkpointed; recomputing cheap shingle/hash beats block
-    write+read) and leaves nothing behind; (b) ``share_scan=True`` —
-    lazy ``localCheckpoint``, ONE corpus scan instead of three, the
-    right call when the corpus scan dominates (blocks release on GC
-    of the returned frame — never a catalog entry, unlike the r4
-    internal ``persist()`` ADVICE flagged); (c) pass ``signatures``
-    yourself (persisted or parquet-backed) to own the lifecycle and
-    reuse across several downstream ops — the 100 TB pattern, where
-    signatures are written once and every dedup/incremental/streaming
-    stage reads them.
+    write+read) — and leaves nothing behind. When the corpus scan
+    dominates, pass ``signatures`` yourself: a lazy
+    ``localCheckpoint`` of them gives ONE corpus scan instead of three,
+    and a persisted or parquet-backed frame can be reused across
+    several downstream ops — the 100 TB pattern, where signatures are
+    written once and every dedup/incremental/streaming stage reads
+    them.
 
     ``max_bucket_size`` (default 10k) caps quadratic hot-bucket fan-out
     — see :func:`minhash_lsh_candidates`. Star pairs from capped buckets
@@ -395,8 +391,6 @@ def minhash_near_duplicates(
             df, text_col, id_col, num_hashes, shingle_size, hash_family,
             attach_empty=False,
         )
-        if share_scan:
-            sigs = sigs.localCheckpoint(eager=False)
     cands = minhash_lsh_candidates(
         sigs, id_col, bands, num_hashes=num_hashes,
         max_bucket_size=max_bucket_size,
@@ -1143,7 +1137,6 @@ def duplicate_ngram_spans(
     k: int = 5,
     min_run: int = 2,
     max_gram_df: int | None = 1000,
-    hash_grams: bool = True,
 ) -> DataFrame:
     """Maximal exact duplicated token spans across documents (the
     distributed analogue of Lee et al. 2022's suffix-array substring
@@ -1156,14 +1149,13 @@ def duplicate_ngram_spans(
     Scale design — no suffix array, three shuffles, all bounded:
 
     1. k-grams WITH positions via ``posexplode`` of an expression-built
-       key array (zero Python). With ``hash_grams`` (default) the key
-       is a rolling hash-of-hashes: each token hashes ONCE
-       (``xxhash64``), then each k-gram hashes its k token hashes — no
-       gram strings are ever materialized (the string-building
-       ``slice``+``array_join`` formulation measured 3× slower at
-       sf0.1). The staged token-hash array is referenced k+2 times, so
-       CollapseProject cannot re-inline it into the gram lambda. Join
-       keys stay 8 bytes, the text never shuffles;
+       key array (zero Python). The key is a rolling hash-of-hashes:
+       each token hashes ONCE (``xxhash64``), then each k-gram hashes
+       its k token hashes — no gram strings are ever materialized (a
+       string-building ``slice``+``array_join`` formulation measured
+       3× slower at sf0.1). The staged token-hash array is referenced
+       k+2 times, so CollapseProject cannot re-inline it into the gram
+       lambda. Join keys stay 8 bytes, the text never shuffles;
        P(any collision) ≈ n²/2⁶⁵, deterministic;
     2. cross-doc candidate matches by equi-join on the gram key;
        boilerplate grams occurring > ``max_gram_df`` times corpus-wide
@@ -1178,38 +1170,20 @@ def duplicate_ngram_spans(
     toks = F.filter(
         F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
     )
-    if hash_grams:
-        th = F.transform(toks, lambda t: F.xxhash64(t))
-        staged = df.select(
-            F.col(id_col).alias("_id"), th.alias("_th")
-        )
-        thc = F.col("_th")
-        nh = F.size(thc)
-        keys = F.when(
-            nh >= k,
-            F.transform(
-                F.sequence(F.lit(1), nh - k + 1),
-                lambda i: F.xxhash64(
-                    *[F.element_at(thc, i + j) for j in range(k)]
-                ),
+    th = F.transform(toks, lambda t: F.xxhash64(t))
+    staged = df.select(F.col(id_col).alias("_id"), th.alias("_th"))
+    thc = F.col("_th")
+    nh = F.size(thc)
+    keys = F.when(
+        nh >= k,
+        F.transform(
+            F.sequence(F.lit(1), nh - k + 1),
+            lambda i: F.xxhash64(
+                *[F.element_at(thc, i + j) for j in range(k)]
             ),
-        ).otherwise(F.array().cast("array<long>"))
-        g = staged.select(
-            "_id", F.posexplode(keys).alias("pos0", "gk")
-        )
-    else:
-        n = F.size(toks)
-        grams = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                lambda i: F.array_join(F.slice(toks, i, k), " "),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        g = df.select(
-            F.col(id_col).alias("_id"),
-            F.posexplode(grams).alias("pos0", "gk"),
-        )
+        ),
+    ).otherwise(F.array().cast("array<long>"))
+    g = staged.select("_id", F.posexplode(keys).alias("pos0", "gk"))
     # 1-based token offset of the gram start (posexplode is 0-based).
     g = g.select("_id", (F.col("pos0") + 1).alias("pos"), "gk")
     if max_gram_df is not None:

@@ -32,6 +32,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Node (or sub-k node) count up to which pagerank, label_propagation
+#: and k_core hint the per-round join of the one-row-per-node frame as a
+#: broadcast; past it the joins fall back to shuffle joins under AQE.
+_BROADCAST_MAX_ROWS = 2_000_000
+
 
 def pagerank(
     edges: DataFrame,
@@ -40,7 +45,6 @@ def pagerank(
     weight: str | None = None,
     iterations: int = 10,
     damping: float = 0.85,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list.
 
@@ -55,7 +59,7 @@ def pagerank(
     (with precomputed ``w / out_w``) is checkpointed once and reused;
     only the (node, rank) frame — one row per node — cycles through
     the loop. When the node count (already computed for the 1/N init)
-    is ≤ ``broadcast_max_rows``, the per-round rank/inflow joins take
+    is ≤ ``_BROADCAST_MAX_ROWS``, the per-round rank/inflow joins take
     explicit broadcast hints so the edge list never shuffles inside a
     round; past the threshold the joins fall back to shuffle joins
     under AQE.
@@ -86,7 +90,7 @@ def pagerank(
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
-    small = n <= broadcast_max_rows
+    small = n <= _BROADCAST_MAX_ROWS
 
     def _maybe_bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -123,7 +127,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    share_scan: bool = True,
     include_degree: bool = False,
 ) -> DataFrame:
     """Per-node triangle counts over an undirected simple graph.
@@ -153,14 +156,11 @@ def triangle_count(
     a<b edge list (each triangle found exactly once as a<b<c), proving
     the orientation lossless.
 
-    ``share_scan=True`` (default) lazily ``localCheckpoint``\\ s the
-    degree table and the oriented edge list: the oriented list is
-    consumed THREE times (both wedge spokes + the closure probe) and
-    degrees twice (orientation + the zero-fill node set) — without
-    materialization Spark re-runs the upstream edge scan once per
-    consumer. Same opt-in trade-off as ``pca.embedding_covariance``;
-    pass ``False`` on Spark Connect (no localCheckpoint), where the
-    result is identical but the edge derivation runs multiple times.
+    The degree table and the oriented edge list are lazily
+    ``localCheckpoint``\\ ed: the oriented list is consumed THREE times
+    (both wedge spokes + the closure probe) and degrees twice
+    (orientation + the zero-fill node set) — without materialization
+    Spark re-runs the upstream edge scan once per consumer.
     """
     und = (
         edges.filter(
@@ -178,9 +178,8 @@ def triangle_count(
         .unionAll(und.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
+        .localCheckpoint(eager=False)
     )
-    if share_scan:
-        deg = deg.localCheckpoint(eager=False)
     # Orient by the total order (deg, node): u -> v with u strictly
     # smaller. deg rides on both endpoints so the wedge join can order
     # the two spokes without re-joining degrees.
@@ -201,9 +200,7 @@ def triangle_count(
         F.when(a_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias(
             "deg_v"
         ),
-    )
-    if share_scan:
-        oriented = oriented.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     # Wedge (u; v, w) with v before w in the same total order — each
     # triangle is generated from its unique smallest vertex, once.
@@ -253,7 +250,6 @@ def label_propagation(
     weight: str | None = None,
     iterations: int = 3,
     seeds: DataFrame | None = None,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Synchronous weighted label propagation (Raghavan et al. 2007,
     made deterministic): community detection over an UNDIRECTED view
@@ -286,7 +282,7 @@ def label_propagation(
     with map-side partial aggregation and no per-node sort), with
     lineage truncated per round. Only the (node, label) frame cycles.
     When the node count (counted once up front) is ≤
-    ``broadcast_max_rows``, the per-round label/winner/seed joins take
+    ``_BROADCAST_MAX_ROWS``, the per-round label/winner/seed joins take
     explicit broadcast hints so the EDGE LIST never shuffles inside a
     round — the label frame is one row per node and orders of
     magnitude smaller than the edges it votes over; past the
@@ -332,7 +328,7 @@ def label_propagation(
     # One count decides the per-round join strategy: the label frame
     # is |nodes| rows, so when that fits comfortably in a broadcast
     # the big edge list never shuffles inside the loop.
-    small = nodes.count() <= broadcast_max_rows
+    small = nodes.count() <= _BROADCAST_MAX_ROWS
 
     def _maybe_bcast(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small else df
@@ -397,7 +393,6 @@ def k_core(
     dst: str = "dst",
     k: int = 2,
     max_iter: int = 50,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman 1983; the
     standard web-graph quality filter — pages outside a dense core are
@@ -425,7 +420,7 @@ def k_core(
     per non-final round, so max_iter bounds are loud, not silent).
     The per-round sub-k node set is usually tiny relative to the edge
     list; when its (already computed) count is ≤
-    ``broadcast_max_rows`` the anti-joins take an explicit broadcast
+    ``_BROADCAST_MAX_ROWS`` the anti-joins take an explicit broadcast
     hint, so the edge list is never shuffled inside a round — without
     the hint both anti-joins plan as sort-merge against the
     unknown-size checkpoint RDD and re-shuffle the full edge list
@@ -465,9 +460,7 @@ def k_core(
         # broadcast exchange canonicalizes identically and is built
         # once and reused (the former withColumnRenamed copy forced a
         # second broadcast build job per round).
-        hinted = (
-            F.broadcast(bad) if n_bad <= broadcast_max_rows else bad
-        )
+        hinted = F.broadcast(bad) if n_bad <= _BROADCAST_MAX_ROWS else bad
         cur = (
             cur.join(hinted, F.col("a") == F.col("_bad"), "left_anti")
             .join(hinted, F.col("b") == F.col("_bad"), "left_anti")

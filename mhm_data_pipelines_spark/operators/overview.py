@@ -38,7 +38,6 @@ def overview_stats(
     ts: Column | str = "ts",
     group_cols: list[str] = ("site", "participant_id", "metric"),
     split_by_device: bool = False,
-    exact_days: bool = True,
 ) -> DataFrame:
     """Stats table: ``row_count, start_date, end_date, day_count`` per
     group, ordered by the group key (process-overview.py:207-226; output
@@ -66,7 +65,7 @@ def overview_stats(
             F.count("*").alias("row_count"),
             F.min(F.to_date(t)).alias("start_date"),
             F.max(F.to_date(t)).alias("end_date"),
-            distinct_days(t, exact=exact_days).alias("day_count"),
+            distinct_days(t).alias("day_count"),
         )
         .orderBy(*group_cols)
     )

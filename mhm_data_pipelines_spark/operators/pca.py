@@ -81,7 +81,6 @@ def covariance_long(
     dim: int,
     vec_col: str = "embedding",
     round_to: int | None = None,
-    share_scan: bool = True,
 ) -> DataFrame:
     """Population covariance in long form ``(i, j, cov)`` for the
     upper triangle (i ≤ j, 0-based): combines the batch partials with
@@ -90,17 +89,12 @@ def covariance_long(
     an external SQL engine reproduces it from the raw vectors, which
     is exactly how the oracle checks it.
 
-    ``share_scan=True`` (default) lazily ``localCheckpoint``\\ s the
-    partials frame: the g-sum, s-sum and n subtrees all consume it,
-    and without materialization Spark re-runs the corpus scan + moment
-    pass once PER subtree — 3 scans of the corpus for ~n_batches tiny
-    rows. Same opt-in trade-off as ``retrieval.bm25_scores``; pass
-    ``False`` on Spark Connect (no localCheckpoint), where the oracle
-    remains correct but scans thrice.
+    The partials frame is lazily ``localCheckpoint``\\ ed: the g-sum,
+    s-sum and n subtrees all consume it, and without materialization
+    Spark re-runs the corpus scan + moment pass once PER subtree — 3
+    scans of the corpus for ~n_batches tiny rows.
     """
-    parts = embedding_moments(df, vec_col, dim)
-    if share_scan:
-        parts = parts.localCheckpoint(eager=False)
+    parts = embedding_moments(df, vec_col, dim).localCheckpoint(eager=False)
     # Pack (n, s_i, s_j, g_ij) per flat index, explode, one hash agg.
     iu_i, iu_j = _triu(dim)
     g = parts.select(

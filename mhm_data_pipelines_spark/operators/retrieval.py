@@ -59,17 +59,15 @@ def bm25_scores(
     k1: float = 1.2,
     b: float = 0.75,
     round_scores: int | None = None,
-    share_scan: bool = False,
 ) -> DataFrame:
     """BM25 score of every document that matches ≥1 query term:
     ``(id_col, score, n_terms_matched)``.
 
-    ``share_scan=True`` lazily ``localCheckpoint``\\ s the per-(doc,
-    term) tf frame so the docfreq aggregate reuses it instead of
-    re-running the token explode (Spark shares no subtrees without
-    materialization — the plan otherwise scans + explodes twice). Same
-    opt-in trade-off as ``operators.budget.running_total``: pinning the
-    (term-filtered, small) frame vs pure re-executable lineage.
+    The per-(doc, term) tf frame feeds both the docfreq aggregate and
+    the scoring join, so the plan scans + explodes the corpus twice;
+    it stays pure re-executable lineage (nothing is pinned to executor
+    storage) — checkpoint ``df`` first if its own derivation is the
+    expensive part.
 
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
     idf(t)   = ln(1 + (N − df + 0.5)/(df + 0.5))      (Lucene form)
@@ -89,8 +87,6 @@ def bm25_scores(
         F.explode(F.transform(tokens(text_col), F.lower)).alias("term"),
     ).filter(F.col("term").isin(terms))
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("_tf"))
-    if share_scan:
-        tf = tf.localCheckpoint(eager=False)
     # ≤ len(terms) rows by construction — broadcast back.
     docfreq = tf.groupBy("term").agg(
         F.count_distinct(id_col).alias("_df")
@@ -127,14 +123,11 @@ def bm25_topk(
     k1: float = 1.2,
     b: float = 0.75,
     round_scores: int | None = 4,
-    share_scan: bool = False,
 ) -> DataFrame:
     """Top-``k`` documents for ``query`` by BM25, deterministically
     (ties → smaller id). ``orderBy().limit()`` compiles to TakeOrdered —
     per-partition top-k then a k-row driver merge, no global sort."""
-    scored = bm25_scores(
-        df, query, id_col, text_col, k1, b, round_scores, share_scan
-    )
+    scored = bm25_scores(df, query, id_col, text_col, k1, b, round_scores)
     return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
 
 

@@ -417,13 +417,18 @@ def conformal_report(
         .select(F.col(score_col).cast("double").alias("s"))
         .localCheckpoint(eager=False)
     )
-    counts = c.groupBy("s").agg(F.count(F.lit(1)).alias("cnt"))
+    # The count aggregate is itself the expensive input of the prefix
+    # sum's jobs — checkpoint it so they evaluate it once.
+    counts = (
+        c.groupBy("s")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint(eager=False)
+    )
     # cumulative count over the distinct-score table via the
     # two-phase distributed prefix sum — continuous scores can leave
     # the distinct table corpus-sized, so no single-task window here
-    # (share_scan: the count aggregate is itself the expensive input)
     cum = running_total(counts, order_by=["s"], value_col="cnt",
-                        out_col="cum", share_scan=True)
+                        out_col="cum")
     tot = c.agg(F.count(F.lit(1)).alias("n_cal"))
     k_expr = F.ceil(
         (F.col("n_cal") + 1) * F.lit(round(1.0 - float(alpha), 9))

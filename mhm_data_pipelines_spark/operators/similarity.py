@@ -1310,7 +1310,6 @@ def embedding_outliers(
     id_col: str = "vec_id",
     group_col: str | None = None,
     z_threshold: float = 2.0,
-    share_scan: bool = True,
 ) -> DataFrame:
     """Centroid-distance outlier report — the semantic-filtering
     complement of SemDeDup: SemDeDup removes points too CLOSE to their
@@ -1331,11 +1330,8 @@ def embedding_outliers(
     (n_groups rows) join back by broadcast — the corpus never
     self-joins. The narrow (id, group, dist) projection has two
     consumers (stats agg, final join) and Spark plans subtrees per
-    consumer, so ``share_scan=True`` (default) lazily
-    ``localCheckpoint``\\ s it — ONE corpus scan instead of two. Pass
-    ``False`` on Spark Connect (no localCheckpoint), where results are
-    identical but the corpus scans twice (same trade-off as
-    ``pca.embedding_covariance``).
+    consumer, so it is lazily ``localCheckpoint``\\ ed — ONE corpus
+    scan instead of two.
     """
     g = group_col
     if g is None:
@@ -1355,9 +1351,8 @@ def embedding_outliers(
         df.join(F.broadcast(cents), on=g)
         .withColumn("dist", F.sqrt(dsq))
         .select(id_col, F.col(g).alias("group"), "dist")
+        .localCheckpoint(eager=False)
     )
-    if share_scan:
-        dists = dists.localCheckpoint(eager=False)
     stats = dists.groupBy("group").agg(
         F.avg("dist").alias("_mu"),
         F.stddev_pop("dist").alias("_sd"),

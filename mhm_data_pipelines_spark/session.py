@@ -160,10 +160,10 @@ def stop_spark() -> None:
 
 def supports_jvm_access(spark: SparkSession) -> bool:
     """True on classic PySpark (py4j gateway available). Spark Connect
-    sessions have no ``_jvm``/``_jsc`` — the genuinely JVM-bound ops
-    (the Hadoop-FS atomic renames of ``sources.io._swap_partitions``,
-    ``localCheckpoint`` loops) check this and raise a clear error
-    instead of an AttributeError."""
+    sessions have no ``_jvm``/``_jsc`` — the genuinely JVM-bound op
+    (the Hadoop-FS atomic renames of ``sources.io._swap_partitions``)
+    checks this and raises a clear error instead of an
+    AttributeError."""
     return getattr(spark, "_jvm", None) is not None
 
 

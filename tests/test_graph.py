@@ -564,7 +564,7 @@ class TestMarkovStationary:
 class TestBroadcastThresholdEquivalence:
     """r9 optimization: the iterative operators broadcast their small
     per-round frames when the node/sub-k count fits under
-    ``broadcast_max_rows``. The hint changes join strategy only —
+    ``graph._BROADCAST_MAX_ROWS``. The hint changes join strategy only —
     results must be IDENTICAL with the threshold forced to 0 (pure
     shuffle joins, the at-scale plan)."""
 
@@ -576,46 +576,37 @@ class TestBroadcastThresholdEquivalence:
             [(a, b) for a, b in rows if a != b], "src long, dst long"
         )
 
-    def test_k_core_same_either_strategy(self, spark):
-        from mhm_data_pipelines_spark.operators.graph import k_core
+    def test_k_core_same_either_strategy(self, spark, monkeypatch):
+        from mhm_data_pipelines_spark.operators import graph
 
         e = self._edges(spark)
-        bc = {(r.node, r.core_degree) for r in k_core(e, k=3).collect()}
-        sj = {
-            (r.node, r.core_degree)
-            for r in k_core(e, k=3, broadcast_max_rows=0).collect()
-        }
+        bc = {(r.node, r.core_degree) for r in graph.k_core(e, k=3).collect()}
+        monkeypatch.setattr(graph, "_BROADCAST_MAX_ROWS", 0)
+        sj = {(r.node, r.core_degree) for r in graph.k_core(e, k=3).collect()}
         assert bc == sj and bc  # non-trivial core
 
-    def test_label_propagation_same_either_strategy(self, spark):
-        from mhm_data_pipelines_spark.operators.graph import (
-            label_propagation,
-        )
+    def test_label_propagation_same_either_strategy(self, spark, monkeypatch):
+        from mhm_data_pipelines_spark.operators import graph
 
         e = self._edges(spark)
         bc = {
             (r.node, r.label)
-            for r in label_propagation(e, iterations=3).collect()
+            for r in graph.label_propagation(e, iterations=3).collect()
         }
+        monkeypatch.setattr(graph, "_BROADCAST_MAX_ROWS", 0)
         sj = {
             (r.node, r.label)
-            for r in label_propagation(
-                e, iterations=3, broadcast_max_rows=0
-            ).collect()
+            for r in graph.label_propagation(e, iterations=3).collect()
         }
         assert bc == sj
 
-    def test_pagerank_same_either_strategy(self, spark):
-        from mhm_data_pipelines_spark.operators.graph import pagerank
+    def test_pagerank_same_either_strategy(self, spark, monkeypatch):
+        from mhm_data_pipelines_spark.operators import graph
 
         e = self._edges(spark)
-        bc = {r.node: r.rank for r in pagerank(e, iterations=4).collect()}
-        sj = {
-            r.node: r.rank
-            for r in pagerank(
-                e, iterations=4, broadcast_max_rows=0
-            ).collect()
-        }
+        bc = {r.node: r.rank for r in graph.pagerank(e, iterations=4).collect()}
+        monkeypatch.setattr(graph, "_BROADCAST_MAX_ROWS", 0)
+        sj = {r.node: r.rank for r in graph.pagerank(e, iterations=4).collect()}
         assert set(bc) == set(sj)
         for k in bc:
             assert bc[k] == pytest.approx(sj[k], rel=1e-12)

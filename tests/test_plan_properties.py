@@ -18,65 +18,19 @@ from mhm_data_pipelines_spark.benchmarks.registry import QUERIES
 
 SF = "/root/testdata/sf0.001"
 
-#: Queries whose CONSTRUCTION executes jobs (streaming drain, iterative
-#: component loops) — planned-shape checks run on their building blocks'
-#: own tests instead.
-EXECUTES_ON_BUILD = {
-    "stateful_sessions_stream",
-    "stream_dedup",
-    "stream_interval_join",
-    "neardup_clusters",
-    "neardup_dedup_keep",
-    "semantic_dedup",
-    "corpus_prep",
-    "tpch_q11",  # localCheckpoint of the reused per-part aggregate
-    "staging_mirror",  # runs the distributed copy + status count on build
-    "heatmap_render",  # renders + collects the bounded pivot on build
-    "lake_e2e",  # writes the csv.gz lake + compacts it on build
-    "stream_neardup",  # drains a two-batch streaming query on build
-    "jsonl_roundtrip",  # writes the line-JSON dump + persists the raw
-                        # read on build (quarantine split)
-    "stream_sketch_rollup",  # drains a two-batch sketch stream on build
-    "stream_topk",  # drains a two-batch top-k stream on build
-    "stream_manifest",  # drains a two-batch manifest stream on build
-    "stream_cdc",       # drains the changelog stream + rewrites the
-                        # bucketed snapshot on build
-    "mmr_diverse",  # k greedy argmax rounds (bounded collects) on build
-    "orc_roundtrip",     # writes the partitioned ORC dump on build
-    "avro_roundtrip",    # writes the Avro containers on build (bounded
-                         # one-row-per-file manifest collect)
-    "ann_index_roundtrip",  # persists the bucketed IVF-PQ index table
-                            # on build + one bounded probed-lists
-                            # collect (<= |queries| x nprobe ints)
-    "ann_index_append",     # persists + appends the bucketed index
-                            # table on build (same bounded collect)
-    "stream_dim_join",   # drains a two-batch enrichment stream on build
-    "embedding_whitening",  # fits the whitener (bounded collects) on build
-    "subject_erasure",   # writes + erasure-rewrites the table on build
-    "label_communities",  # iterative LPA rounds (eager per-round
-                          # checkpoints) run on build — planned-shape
-                          # checks live in tests/test_graph.py
-    "golden_records",     # iterative CC loop runs on build (same as
-                          # neardup_clusters); survivorship shape
-                          # checks live in tests/test_components.py
-    "stream_holt",        # drains the availableNow smoothing stream
-                          # on build
-    "stream_anomaly",     # drains the availableNow EWMA-anomaly
-                          # stream on build
-}
-
 #: Queries where a BroadcastNestedLoopJoin is EXPECTED: they cross-join
 #: a single-row aggregate (scalar subquery pattern — n_docs, scalar avg,
 #: global max). The broadcast side is one row; the "nested loop" is a
-#: constant append. Keep this list tight — additions need justification.
+#: constant append. Keep this list tight — additions need justification;
+#: every entry must still plan one, so an entry cannot go stale.
 SINGLE_ROW_BROADCAST_OK = {
     "tfidf_top_terms",    # crossJoin(broadcast(count_distinct n_docs))
     "doc_lm_score",       # crossJoin(broadcast(corpus token total)) — 1 row
     "tpch_q22",           # crossJoin(broadcast(avg acctbal))
-    "doc_quality",        # quality normalization scalar (if planned so)
-    "value_percentiles",  # scalar percentile bounds
-    "summary_assembly",
-    "corpus_prep",
+    "tpch_q11",           # value > broadcast(1-row sum threshold)
+    "embedding_whitening",  # covariance_long's crossJoin(broadcast(vector
+                            # count n)) — 1 row
+    "jsonl_roundtrip",    # crossJoin(broadcast(quarantined-row count)) — 1 row
     "balanced_classes",   # crossJoin(broadcast(min class count)) — 1 row
     "zorder_layout",      # crossJoin(broadcast(per-column min/max)) — 1 row
     "missing_data",       # distinct-participants × distinct-metrics grid:
@@ -96,7 +50,6 @@ SINGLE_ROW_BROADCAST_OK = {
                           # list_id
     "bm25_topk",          # crossJoin(broadcast(N docs + avgdl)) — 1 row
     "hybrid_rrf",         # contains bm25_topk's 1-row stats cross
-    "ppl_buckets",        # crossJoin(broadcast(bigram-type total)) — 1 row
     "doc_kn_lm",          # crossJoin(broadcast(bigram-type total)) — 1 row
     "doc_kn3_lm",         # crossJoin(broadcast(bigram-type total)) — 1 row
     "doc_kn5_lm",         # crossJoin(broadcast(bigram-type total)) — 1 row
@@ -193,13 +146,22 @@ SINGLE_ROW_BROADCAST_OK = {
 }
 
 
-@pytest.mark.parametrize(
-    "name", sorted(set(QUERIES) - EXECUTES_ON_BUILD)
-)
+def test_allow_list_names_registry_keys():
+    assert SINGLE_ROW_BROADCAST_OK <= set(QUERIES), (
+        SINGLE_ROW_BROADCAST_OK - set(QUERIES)
+    )
+
+
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_no_cartesian_or_unexpected_nested_loop(spark, name):
     plan = _plan(spark, name)
     assert "CartesianProduct" not in plan, f"{name} plans a cross product"
-    if name not in SINGLE_ROW_BROADCAST_OK:
+    if name in SINGLE_ROW_BROADCAST_OK:
+        assert "BroadcastNestedLoopJoin" in plan, (
+            f"{name} no longer plans a nested-loop join; drop it from "
+            "SINGLE_ROW_BROADCAST_OK"
+        )
+    else:
         assert "BroadcastNestedLoopJoin" not in plan, (
             f"{name} plans a nested-loop join; if the broadcast side is a "
             "single-row scalar, whitelist it explicitly"

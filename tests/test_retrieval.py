@@ -135,20 +135,6 @@ def test_rrf_fuse_tie_rule_and_topk(spark):
         rrf_fuse([])
 
 
-def test_bm25_share_scan_same_results(spark, corpus):
-    base = {
-        (r.doc_id, r.score)
-        for r in bm25_scores(corpus, "spark data", round_scores=6).collect()
-    }
-    shared = {
-        (r.doc_id, r.score)
-        for r in bm25_scores(
-            corpus, "spark data", round_scores=6, share_scan=True
-        ).collect()
-    }
-    assert base == shared
-
-
 def test_phrase_search_counts_positions(spark):
     from mhm_data_pipelines_spark.operators.retrieval import phrase_search
 
