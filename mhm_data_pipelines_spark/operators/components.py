@@ -10,11 +10,17 @@ engine-level completion a 100 TB corpus requires.
 Algorithm: iterative min-label propagation (each node adopts the
 smallest id reachable so far; converges in O(component diameter)
 rounds). Every round is ONE shuffle keyed by node id — the same hash
-partitioning each round, so AQE reuses the exchange layout. Lineage is
-truncated per round with ``localCheckpoint`` (eager) so 20 rounds don't
-build a 20-deep recursive plan. Near-dup graphs in practice have tiny
-diameters (clusters are cliques-ish from banded LSH), so 3-5 rounds
-settle real corpora; ``max_iter`` bounds adversarial chains.
+partitioning each round, so AQE reuses the exchange layout — and ONE
+action: the round's aggregate carries each node's previous label next
+to its new one, and a lazy ``localCheckpoint`` plus the count of
+labels that dropped both materializes the round and tests the
+fixpoint (the same discipline as ``graph.k_core``). The checkpoint
+truncates lineage so 20 rounds don't build a 20-deep recursive plan.
+Near-dup graphs in practice have tiny diameters (clusters are
+cliques-ish from banded LSH), so 3-5 rounds settle real corpora;
+``max_iter`` bounds adversarial chains loudly — a graph that has not
+reached its fixpoint by then raises instead of returning split
+components.
 
 The driver-side loop is control flow only — labels never leave the
 cluster; convergence is checked with a count aggregate, not a collect.
@@ -40,7 +46,8 @@ def connected_components(
     Returns (node, component) where component = min node id reachable.
     ``nodes`` (single-column DataFrame) adds isolated vertices — pass
     the full corpus id set so singleton docs appear with their own id
-    as the component label.
+    as the component label. Raises ``RuntimeError`` when the labels
+    still change in round ``max_iter``.
     """
     sym = (
         edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
@@ -48,7 +55,7 @@ def connected_components(
             edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
         )
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     labels = (
         sym.select("node")
@@ -57,27 +64,34 @@ def connected_components(
     )
     for _ in range(max_iter):
         # Each node offers its current label to every neighbor; a node's
-        # next label is the min of its own and all offers.
-        offers = (
-            sym.join(labels, "node")
-            .select(F.col("nbr").alias("node"), "component")
+        # next label is the min of its own and all offers. Its own row
+        # also carries the old label, so the same aggregate says whether
+        # the node moved.
+        offers = sym.join(labels, "node").select(
+            F.col("nbr").alias("node"), "component", F.lit(None).alias("_old")
         )
         new_labels = (
-            labels.unionByName(offers)
+            labels.withColumn("_old", F.col("component"))
+            .unionByName(offers)
             .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
+            .agg(
+                F.min("component").alias("component"),
+                F.min("_old").alias("_old"),
+            )
+            .localCheckpoint(eager=False)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
+        # One job: materializes the round and tests the fixpoint.
+        changed = new_labels.filter(
+            F.col("component") < F.col("_old")
+        ).count()
+        labels = new_labels.drop("_old")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not reach a fixpoint in {max_iter}"
+            " rounds"
+        )
     if nodes is not None:
         node_col = nodes.columns[0]
         isolated = (

@@ -15,9 +15,8 @@ per-point neighbor queries with per-CELL hash aggregation:
    shifted cell keys — never a distance join);
 4. resolve connected regions with a single-task union-find over the
    GRID-BOUNDED cell graph (cell count is set by coordinate range and
-   cell size, never by the corpus — ``cc_mode="iterative"`` swaps in
-   the shared distributed
-   :func:`..components.connected_components` for pathological grids);
+   cell size, never by the corpus; the labels are those of the
+   distributed :func:`..components.connected_components`);
 5. points inherit their cell's region; points in sparse cells are
    noise (NULL cluster).
 
@@ -31,10 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from mhm_data_pipelines_spark.operators.components import (
-    connected_components,
-)
 
 __all__ = ["grid_density_clusters"]
 
@@ -54,8 +49,6 @@ def grid_density_clusters(
     id_col: str,
     cell_size: float = 0.05,
     min_pts: int = 3,
-    max_iter: int = 25,
-    cc_mode: str = "local",
 ) -> DataFrame:
     """Cluster points by dense grid regions (see module doc).
 
@@ -64,15 +57,11 @@ def grid_density_clusters(
     of the point's connected dense region, NULL for noise points
     (sparse cells). Rows with NULL x/y are dropped.
 
-    ``cc_mode``: how the dense-cell region merge runs. ``"local"``
-    (default) is a single-task union-find over the cell graph — the
-    cell count is bounded by the COORDINATE RANGE (``(span /
-    cell_size)²``), not by the data volume, so one task is safe at
-    any corpus scale and replaces ~5 iterative min-label rounds of
-    scheduling with one pass (measured 4.2 s → ~1.5 s at sf0.1).
-    ``"iterative"`` keeps the shared distributed
-    :func:`..components.connected_components` for pathological grids
-    (kilometer-wide coordinate spans at millimeter cells).
+    The dense-cell region merge is a single-task union-find over the
+    cell graph — the cell count is bounded by the COORDINATE RANGE
+    (``(span / cell_size)²``), not by the data volume, so one task is
+    safe at any corpus scale and replaces ~5 iterative min-label rounds
+    of scheduling with one pass (measured 4.2 s → ~1.5 s at sf0.1).
     """
     if cell_size <= 0:
         raise ValueError(f"cell_size must be positive, got {cell_size}")
@@ -134,18 +123,9 @@ def grid_density_clusters(
         ),
         ["nx", "ny"],
     ).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    if cc_mode == "iterative":
-        comp = connected_components(
-            edges,
-            nodes=dense.select(F.col("_cid").alias("node")),
-            max_iter=max_iter,
-        )
-    elif cc_mode == "local":
-        comp = _local_components(
-            edges, dense.select(F.col("_cid").alias("node"))
-        )
-    else:
-        raise ValueError(f"unknown cc_mode: {cc_mode!r}")
+    comp = _local_components(
+        edges, dense.select(F.col("_cid").alias("node"))
+    )
     return binned.join(
         comp.select(
             F.col("node").alias("_cid"), F.col("component").alias("cluster")

@@ -38,6 +38,31 @@ from pyspark.sql import functions as F
 _BROADCAST_MAX_ROWS = 2_000_000
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple graph of an edge list, as ``(a, b)`` with
+    ``a < b``: reversed and parallel edges collapse, self-loops and
+    NULL endpoints drop. The graph contract of triangle_count, k_core,
+    adamic_adar, jaccard_links and degree_assortativity."""
+    return (
+        edges.filter(
+            F.col(src).isNotNull()
+            & F.col(dst).isNotNull()
+            & (F.col(src) != F.col(dst))
+        )
+        .select(
+            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
+        )
+        .distinct()
+    )
+
+
+def _both_ways(canon: DataFrame) -> DataFrame:
+    """Both orientations of each ``(a, b)`` edge of ``canon``."""
+    return canon.unionByName(
+        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -162,17 +187,7 @@ def triangle_count(
     (orientation + the zero-fill node set) — without materialization
     Spark re-runs the upstream edge scan once per consumer.
     """
-    und = (
-        edges.filter(
-            F.col(src).isNotNull()
-            & F.col(dst).isNotNull()
-            & (F.col(src) != F.col(dst))
-        )
-        .select(
-            F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
-        )
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     deg = (
         und.select(F.col("a").alias("node"))
         .unionAll(und.select(F.col("b").alias("node")))
@@ -432,15 +447,9 @@ def k_core(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    canon = e.select(
-        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-    ).distinct()
-    cur = canon.unionByName(
-        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
+    cur = _both_ways(_undirected(edges, src, dst)).localCheckpoint(
+        eager=False
+    )
     for _ in range(max_iter):
         # Lazy checkpoint + count = ONE job that computes the previous
         # round's anti-joins, caches the sub-k node set, and returns
@@ -532,19 +541,8 @@ def adamic_adar(
     """
     if hub_cap is not None and hub_cap < 2:
         raise ValueError(f"hub_cap must be >= 2, got {hub_cap}")
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    canon = (
-        e.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    sym = canon.unionByName(
-        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    canon = _undirected(edges, src, dst).localCheckpoint(eager=False)
+    sym = _both_ways(canon)
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     centers = deg.filter(F.col("deg") >= 2)
     if hub_cap is not None:
@@ -630,19 +628,8 @@ def jaccard_links(
     """
     if hub_cap is not None and hub_cap < 2:
         raise ValueError(f"hub_cap must be >= 2, got {hub_cap}")
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    canon = (
-        e.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    sym = canon.unionByName(
-        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
+    canon = _undirected(edges, src, dst).localCheckpoint(eager=False)
+    sym = _both_ways(canon)
     deg = (
         sym.groupBy("a")
         .agg(F.count(F.lit(1)).alias("deg"))
@@ -717,18 +704,11 @@ def degree_assortativity(
     Returns one row ``(n_nodes, n_edges, assortativity)`` —
     assortativity NULL for degree-regular graphs (zero variance).
     """
-    e = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).filter(F.col("a") != F.col("b"))
     # Checkpoint: sym is consumed by the degree aggregate AND both
     # endpoint attachments — without it each consumer re-derives the
     # whole upstream edge build.
-    sym = (
-        e.unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+    sym = _both_ways(_undirected(edges, src, dst)).localCheckpoint(
+        eager=False
     )
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     attached = (

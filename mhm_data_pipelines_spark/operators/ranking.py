@@ -52,6 +52,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["bradley_terry", "ranking_metrics"]
 
+#: Directed pair-table size up to which bradley_terry runs its MM loop
+#: driver-side in numpy; past it the loop stays distributed.
+_DRIVER_MAX_PAIRS = 2_000_000
+
 
 def bradley_terry(
     comparisons: DataFrame,
@@ -59,7 +63,6 @@ def bradley_terry(
     loser_col: str = "loser",
     iterations: int = 8,
     quantize: int = 9,
-    driver_max_pairs: int = 2_000_000,
 ) -> DataFrame:
     """Fit Bradley-Terry ratings over ``(winner, loser)`` rows.
 
@@ -73,7 +76,7 @@ def bradley_terry(
 
     Execution strategy: the distributed reductions always run on the
     cluster; the MM loop itself runs DRIVER-SIDE in numpy whenever the
-    directed pair table fits ``driver_max_pairs`` (a K²-bounded
+    directed pair table fits ``_DRIVER_MAX_PAIRS`` (a K²-bounded
     metadata collect, same contract as ``pca.fit_pca``'s d² moments —
     K is items, not rows), because 2·iterations cluster jobs over a
     K-row table are pure scheduling latency. Above the bound the loop
@@ -109,8 +112,8 @@ def bradley_terry(
 
     spark = comparisons.sparkSession
     n_pairs = directed.count()  # metadata-sized by the K contract
-    if n_pairs <= driver_max_pairs:
-        rows = directed.collect()  # bounded: <= driver_max_pairs rows
+    if n_pairs <= _DRIVER_MAX_PAIRS:
+        rows = directed.collect()  # bounded: <= _DRIVER_MAX_PAIRS rows
         wrows = {r["item"]: r["w"] for r in wins.collect()}  # K rows
         items = sorted({r["item"] for r in rows})
         idx = {it_: i for i, it_ in enumerate(items)}

@@ -77,7 +77,7 @@ def bucketed_join(
 def assert_no_shuffle(df: DataFrame) -> str:
     """Raise if the physical plan contains a shuffle Exchange (broadcast
     exchanges are fine — they're the cheap side). Returns the plan text
-    for logging/PLANS.md evidence.
+    for logging or plan evidence.
 
     Plan text comes from the public ``df.explain()`` (stdout-captured)
     so this works on classic AND Spark Connect sessions — the previous

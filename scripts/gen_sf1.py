@@ -6,7 +6,7 @@ NOT driver data: the official testdata stops at sf0.1, so this
 generator builds statistically-similar tables (same schemas, same
 word-frequency profile sampled from the sf0.1 corpus, deterministic
 seed) under a scratch dir. Results go to BENCH_local-style records and
-PLANS.md — never the driver tail.
+plan dumps (``scripts/dump_plans.py --sf-dir``) — never the driver tail.
 
 Usage: python scripts/gen_sf1.py [dest_dir]   (default /tmp/mhm_sf1)
 """

@@ -4,6 +4,7 @@ per-component property."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.operators.components import (
@@ -45,6 +46,39 @@ def test_empty_edges_all_isolated(spark):
         for r in connected_components(edges, nodes=nodes).collect()
     }
     assert got == {(5, 5), (6, 6)}
+
+
+def _path(spark, n):
+    return _edges(spark, [(i, i + 1) for i in range(n - 1)])
+
+
+def test_unconverged_labels_raise(spark):
+    # An 11-node path needs 10 label hops plus one quiet round; three
+    # rounds would leave it split into 8 components.
+    edges = _path(spark, 11)
+    with pytest.raises(RuntimeError, match="fixpoint in 3 rounds"):
+        connected_components(edges, max_iter=3)
+    labels = connected_components(edges).collect()
+    assert {r.component for r in labels} == {0}
+    assert len(labels) == 11
+
+
+def test_one_action_per_round(spark):
+    """A path of n nodes takes n rounds (n - 1 label hops plus the quiet
+    one), so the 8-node path runs 4 rounds more than the 4-node path.
+    Each round is one count, whose plan holds the round's shuffles; under
+    adaptive execution that is 6 jobs per round."""
+    from test_lake import _run_counted
+
+    jobs = {
+        n: _run_counted(
+            spark,
+            f"test-cc-rounds-{n}",
+            lambda n=n: connected_components(_path(spark, n)).collect(),
+        )[0]
+        for n in (4, 8)
+    }
+    assert 0 < jobs[8] - jobs[4] <= 6 * 4
 
 
 def test_dedup_min_id_representative(spark):

@@ -70,30 +70,41 @@ class TestGridDensityClusters:
             grid_density_clusters(df, "x", "y", "id", min_pts=0)
 
     def test_cc_modes_agree(self, spark):
+        """The single-task union-find labels a dense-cell graph exactly
+        as the distributed min-label propagation does."""
         import random
 
+        from mhm_data_pipelines_spark.operators.components import (
+            connected_components,
+        )
         from mhm_data_pipelines_spark.operators.density import (
-            grid_density_clusters,
+            _local_components,
         )
 
         rng = random.Random(9)
-        rows = [
-            (i, rng.uniform(-0.3, 0.3), rng.uniform(-0.3, 0.3))
-            for i in range(400)
+        cells = sorted({
+            (rng.randint(-6, 6), rng.randint(-6, 6)) for _ in range(40)
+        })
+        cid = {c: (c[0] + 100) * 1000 + c[1] + 100 for c in cells}
+        pairs = [
+            (cid[a], cid[b])
+            for a in cells
+            for b in cells
+            if cid[a] < cid[b]
+            and max(abs(a[0] - b[0]), abs(a[1] - b[1])) == 1
         ]
-        df = _df(spark, rows)
-        a = sorted(
-            (r["id"], r["cluster"])
-            for r in grid_density_clusters(
-                df, "x", "y", "id", 0.1, 3, cc_mode="local"
-            ).collect()
+        edges = spark.createDataFrame(pairs, "id_a long, id_b long")
+        nodes = spark.createDataFrame(
+            [(v,) for v in cid.values()], "node long"
         )
-        b = sorted(
-            (r["id"], r["cluster"])
-            for r in grid_density_clusters(
-                df, "x", "y", "id", 0.1, 3, cc_mode="iterative"
-            ).collect()
+        local = sorted(
+            (r["node"], r["component"])
+            for r in _local_components(edges, nodes).collect()
         )
-        assert a == b
-        with pytest.raises(ValueError, match="cc_mode"):
-            grid_density_clusters(df, "x", "y", "id", cc_mode="bogus")
+        ref = sorted(
+            (r["node"], r["component"])
+            for r in connected_components(edges, nodes=nodes).collect()
+        )
+        assert local == ref
+        assert len(local) == len(cells)
+        assert 1 < len({c for _, c in local}) < len(cells)

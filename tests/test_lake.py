@@ -249,13 +249,12 @@ def _run_counted(spark, group: str, action) -> tuple[int, int]:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    tasks = sum(
-        tracker.getStageInfo(s).numCompletedTasks
-        for j in jobs
-        for s in tracker.getJobInfo(j).stageIds
-    )
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    # Per-job task counts: a job's skipped stages are the first records
+    # the status store evicts past ``spark.ui.retainedStages``, so
+    # reading them stage by stage fails late in a long session.
+    store = sc._jsc.sc().statusStore()
+    tasks = sum(store.job(j).numCompletedTasks() for j in jobs)
     return len(jobs), tasks
 
 

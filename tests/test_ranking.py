@@ -88,7 +88,9 @@ def test_never_winner_hits_zero_and_self_pairs_dropped(spark):
     assert all(math.isfinite(v) for v in got.values())
 
 
-def test_driver_and_distributed_paths_identical(spark):
+def test_driver_and_distributed_paths_identical(spark, monkeypatch):
+    from mhm_data_pipelines_spark.operators import ranking
+
     rows = (
         [("a", "b")] * 4 + [("b", "a")] * 2 + [("b", "c")] * 3
         + [("c", "d")] * 2 + [("d", "a")]
@@ -96,9 +98,9 @@ def test_driver_and_distributed_paths_identical(spark):
     df = spark.createDataFrame(rows, "winner string, loser string")
     fast = {r["item"]: r["rating"]
             for r in bradley_terry(df, iterations=6).collect()}
+    monkeypatch.setattr(ranking, "_DRIVER_MAX_PAIRS", 0)
     slow = {r["item"]: r["rating"]
-            for r in bradley_terry(df, iterations=6,
-                                   driver_max_pairs=0).collect()}
+            for r in bradley_terry(df, iterations=6).collect()}
     assert fast == slow
 
 
