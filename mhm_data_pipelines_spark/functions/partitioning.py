@@ -15,15 +15,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_small_input(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition ``df`` up to ``min_partitions`` (default: the
-    cluster's ``defaultParallelism``) when the scan produced fewer —
+def spread_small_input(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` up to the cluster's ``defaultParallelism``
+    when the scan produced fewer —
     a round-robin shuffle of the raw rows, paid once, so the expensive
     map stage that follows uses every core. No-op when the input is
     already at least that wide (the at-scale case)."""
     try:
         sc = df.sparkSession.sparkContext
-        target = min_partitions or sc.defaultParallelism
+        target = sc.defaultParallelism
         narrow = df.rdd.getNumPartitions() < target
     except Exception:
         # Spark Connect: no SparkContext / RDD introspection. Skip the

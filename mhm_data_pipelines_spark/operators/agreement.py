@@ -32,6 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 __all__ = ["pairwise_kappa"]
 
 
@@ -40,7 +44,6 @@ def pairwise_kappa(
     item_col: str = "item_id",
     rater_col: str = "rater",
     label_col: str = "label",
-    round_to: int = 6,
 ) -> DataFrame:
     """Cohen's kappa for every unordered rater pair.
 
@@ -49,7 +52,7 @@ def pairwise_kappa(
     inflate the join) — deduplicate upstream. NULL labels are dropped
     (an abstention is not a rating). Returns
     ``(rater_a, rater_b, n_items, po, pe, kappa)`` with rater_a <
-    rater_b, floats rounded to ``round_to``; ``kappa`` NULL when
+    rater_b, floats rounded to 6 decimals; ``kappa`` NULL when
     ``pe = 1``.
     """
     base = df.filter(F.col(label_col).isNotNull()).select(
@@ -88,7 +91,8 @@ def pairwise_kappa(
         .select(marg_a["rater_a"], marg_a["rater_b"],
                 # products as doubles: ca·cb can exceed int64 at corpus
                 # scale (n ~ 1e12 → ca·cb ~ 1e24); the L-term float sum
-                # drifts < 1ulp·L, absorbed by round_to
+                # drifts < 1ulp·L, absorbed by the
+                # 6-decimal rounding
                 (F.col("ca").cast("double") * F.col("cb")).alias("p"))
         .groupBy("rater_a", "rater_b")
         .agg(F.sum("p").alias("pe_num"))
@@ -102,8 +106,8 @@ def pairwise_kappa(
             "rater_a",
             "rater_b",
             F.col("n").cast("long").alias("n_items"),
-            F.round(po, round_to).alias("po"),
-            F.round(pe, round_to).alias("pe"),
-            F.round(kappa, round_to).alias("kappa"),
+            F.round(po, _DIGITS).alias("po"),
+            F.round(pe, _DIGITS).alias("pe"),
+            F.round(kappa, _DIGITS).alias("kappa"),
         )
     )

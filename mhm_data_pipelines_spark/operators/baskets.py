@@ -42,6 +42,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 __all__ = ["item_pair_counts", "association_rules", "item_cosine_neighbors"]
 
 def _basket_lists(
@@ -130,7 +134,6 @@ def association_rules(
     item_col: str,
     min_pair_count: int = 2,
     max_basket_size: int = 64,
-    round_to: int = 6,
     prefilter_oversized: bool = False,
 ) -> DataFrame:
     """Pair-depth association statistics:
@@ -188,9 +191,9 @@ def association_rules(
             F.col("n_a").cast("long").alias("n_a"),
             F.col("n_b").cast("long").alias("n_b"),
             F.round(
-                F.col("n_pair") / F.col("n_baskets"), round_to
+                F.col("n_pair") / F.col("n_baskets"), _DIGITS
             ).alias("support"),
-            F.round(lift, round_to).alias("lift"),
+            F.round(lift, _DIGITS).alias("lift"),
         )
     )
 
@@ -202,7 +205,6 @@ def item_cosine_neighbors(
     k: int = 10,
     min_pair_count: int = 2,
     max_basket_size: int = 64,
-    round_to: int = 6,
     prefilter_oversized: bool = False,
 ) -> DataFrame:
     """Item-item cosine similarity with per-item top-k neighbors —
@@ -287,7 +289,7 @@ def item_cosine_neighbors(
             "item",
             "neighbor",
             "n_pair",
-            F.round("cosine", round_to).alias("cosine"),
+            F.round("cosine", _DIGITS).alias("cosine"),
             "rank",
         )
     )

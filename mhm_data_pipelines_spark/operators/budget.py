@@ -196,7 +196,6 @@ def running_total(
     value_col: str,
     out_col: str = "running_total",
     num_partitions: int | None = None,
-    boundary_samples_per_partition: int = 64,
 ) -> DataFrame:
     """``out_col`` = inclusive cumulative sum of ``value_col`` over the
     global ``order_by`` ordering, computed with the literal-boundary
@@ -221,9 +220,7 @@ def running_total(
     from mhm_data_pipelines_spark.session import default_parallelism
 
     parts = num_partitions or default_parallelism(spark)
-    boundaries = _sample_boundaries(
-        df, pairs, parts, boundary_samples_per_partition
-    )
+    boundaries = _sample_boundaries(df, pairs, parts, 64)
     # Stage the (possibly computed) keys under reserved names so the
     # generated bucket SQL can reference them by name; dropped below.
     key_names = [f"_rt_k{i}" for i in range(len(pairs))]
@@ -268,6 +265,28 @@ def running_total(
         .withColumn(out_col, (F.col("_offset") + F.col("_local_cum")).cast("long"))
         .drop("_pid", "_local_cum", "_offset")
     )
+
+
+def _tie_avg_ranks(
+    counts: DataFrame, val_col: str, count_col: str, cum_col: str
+) -> tuple[DataFrame, Column]:
+    """Fractional ranks from a per-value count table: ``counts`` gains
+    ``cum_col``, the :func:`running_total` of ``count_col`` in
+    ascending ``val_col`` order, and the returned Column is the rank
+    of each value's rows. Ties at a value span positions
+    ``cum − c + 1 .. cum``, so their average rank is
+    ``cum − c/2 + 0.5`` — an integer or a half, exact in doubles. The
+    raw rows are never globally sorted."""
+    cum = running_total(
+        counts, order_by=[(val_col, True)], value_col=count_col,
+        out_col=cum_col,
+    )
+    rank = (
+        F.col(cum_col).cast("double")
+        - F.col(count_col).cast("double") / 2
+        + F.lit(0.5)
+    )
+    return cum, rank
 
 
 def select_to_budget(

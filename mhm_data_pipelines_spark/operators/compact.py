@@ -44,9 +44,8 @@ def compact_lake(
     exclude: list[str] | None = None,
     update: bool = False,
     monthly: bool = False,
-    fmt: str = "parquet",
 ) -> None:
-    """Rewrite the raw csv.gz lake as a partitioned table.
+    """Rewrite the raw csv.gz lake as a partitioned parquet table.
 
     ``update=False`` → ``mode='ignore'`` (skip if output exists,
     merge-data.py:68-70); ``update=True`` → dynamic partition overwrite
@@ -66,9 +65,7 @@ def compact_lake(
             "batch_month", F.date_format("file_timestamp", "yyyy-MM")
         )
         partitions.append("batch_month")
-    writer = df.hint("rebalance", *partitions).write.format(fmt)
-    if fmt == "csv":
-        writer = writer.option("header", "true").option("compression", "gzip")
+    writer = df.hint("rebalance", *partitions).write.format("parquet")
     if update:
         writer = writer.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"

@@ -32,37 +32,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 __all__ = ["spearman_rho", "rbo"]
 
 
 def _avg_ranks(df: DataFrame, val_col: str, out_col: str) -> DataFrame:
     """(value → fractional rank) lookup: ties get the average of the
-    positions they span (standard fractional ranking). Built from the
-    per-value count table + a distributed prefix sum over values —
-    the raw rows are never globally sorted."""
-    from mhm_data_pipelines_spark.operators.budget import running_total
+    positions they span (standard fractional ranking)."""
+    from mhm_data_pipelines_spark.operators.budget import _tie_avg_ranks
 
     counts = df.groupBy(val_col).agg(F.count("*").alias("_c"))
-    cum = running_total(
-        counts, order_by=[(val_col, True)], value_col="_c", out_col="_cum"
-    )
-    # positions spanned: (_cum - _c + 1) .. _cum → average is
-    # _cum - _c/2 + 0.5 — integer-or-half exactly.
-    return cum.select(
-        val_col,
-        (
-            F.col("_cum").cast("double")
-            - F.col("_c").cast("double") / 2
-            + F.lit(0.5)
-        ).alias(out_col),
-    )
+    cum, rank = _tie_avg_ranks(counts, val_col, "_c", "_cum")
+    return cum.select(val_col, rank.alias(out_col))
 
 
 def spearman_rho(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Tie-aware Spearman rank correlation between two numeric columns.
 
@@ -92,7 +82,7 @@ def spearman_rho(
     )
     return agg.select(
         F.col("n").cast("long").alias("n"),
-        F.round(rho, round_to).alias("rho"),
+        F.round(rho, _DIGITS).alias("rho"),
     )
 
 
@@ -104,7 +94,6 @@ def rbo(
     rank_col: str = "rank",
     p: float = 0.9,
     depth: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Truncated rank-biased overlap RBO@depth per query:
 
@@ -148,5 +137,5 @@ def rbo(
     scores = joined.groupBy(query_col).agg(F.sum("_w").alias("_s"))
     return queries.join(scores, query_col, "left").select(
         F.col(query_col),
-        F.round(F.coalesce(F.col("_s"), F.lit(0.0)), round_to).alias("rbo"),
+        F.round(F.coalesce(F.col("_s"), F.lit(0.0)), _DIGITS).alias("rbo"),
     )

@@ -417,7 +417,6 @@ def minhash_match_index(
     shingle_size: int = 5,
     threshold: float = 0.7,
     hash_family: str = "xxhash64",
-    prune_index: bool = True,
     new_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental near-dup detection: match an incoming BATCH against a
@@ -432,11 +431,11 @@ def minhash_match_index(
     (pigeonhole over bands), but the candidate join is new-vs-index, not
     a self-join — no quadratic hot-bucket concern on the batch side.
 
-    Scale design: with ``prune_index`` (default) the new batch's bucket
-    keys — at most ``|batch| * bands`` rows, usually tiny — broadcast
-    into a semi-join that prunes the index's banded rows BEFORE the pair
-    join, so the standing index is filtered scan-side rather than
-    shuffled wholesale each run. For a 100 TB index, store the banded
+    Scale design: the new batch's bucket keys — at most
+    ``|batch| * bands`` rows, usually tiny — broadcast into a semi-join
+    that prunes the index's banded rows BEFORE the pair join, so the
+    standing index is filtered scan-side rather than shuffled
+    wholesale each run. For a 100 TB index, store the banded
     form bucketed by (band, bucket) (``sources/bucketed.py``) and the
     pair join is shuffle-free on the index side; the signature index
     itself is ~num_hashes longs per doc — ~0.1% of corpus bytes.
@@ -464,11 +463,10 @@ def minhash_match_index(
     banded_idx = _band_signatures(
         index_signatures, id_col, bands, num_hashes
     )
-    if prune_index:
-        keys = banded_new.select("band", "bucket").distinct()
-        banded_idx = banded_idx.join(
-            F.broadcast(keys), ["band", "bucket"], "left_semi"
-        )
+    keys = banded_new.select("band", "bucket").distinct()
+    banded_idx = banded_idx.join(
+        F.broadcast(keys), ["band", "bucket"], "left_semi"
+    )
     a = banded_new.alias("a")
     b = banded_idx.alias("b")
     cands = (
@@ -1297,6 +1295,31 @@ def dedup_spans_keep_first(
     )
 
 
+def _line_rows(
+    df: DataFrame, text_col: str, id_col: str, sep: str
+) -> DataFrame:
+    """Every line of every document as ``(id, pos, ln, _key)``, where
+    ``_key`` is the trimmed line."""
+    return df.select(
+        F.col(id_col),
+        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "ln"),
+    ).withColumn("_key", F.trim("ln"))
+
+
+def _frequent_keys(lines: DataFrame, id_col: str, min_df: int) -> DataFrame:
+    """The boilerplate rule over :func:`_line_rows`: each non-blank
+    ``_key`` found in at least ``min_df`` distinct documents, with its
+    document frequency ``_df``."""
+    return (
+        lines.filter(F.col("_key") != "")
+        .select(id_col, "_key")
+        .distinct()
+        .groupBy("_key")
+        .agg(F.count("*").alias("_df"))
+        .filter(F.col("_df") >= min_df)
+    )
+
+
 def frequent_lines(
     df: DataFrame,
     text_col: str = "text",
@@ -1309,22 +1332,14 @@ def frequent_lines(
     first half): every trimmed non-blank line occurring in at least
     ``min_df`` DISTINCT documents, with its document frequency.
     Returns ``(line, df)`` — the inspection/report surface of
-    :func:`remove_frequent_lines`.
+    :func:`remove_frequent_lines`, which drops exactly these lines.
 
     Scale shape: explode → per-(line, doc) distinct → one count agg;
     the result is the (small) boilerplate vocabulary, never the corpus.
     """
-    lines = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), sep)).alias("_ln"),
-    ).select(F.col(id_col), F.trim("_ln").alias("line"))
-    return (
-        lines.filter(F.col("line") != "")
-        .distinct()
-        .groupBy("line")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") >= min_df)
-    )
+    freq = _frequent_keys(_line_rows(df, text_col, id_col, sep), id_col,
+                          min_df)
+    return freq.select(F.col("_key").alias("line"), F.col("_df").alias("df"))
 
 
 def remove_frequent_lines(
@@ -1349,25 +1364,17 @@ def remove_frequent_lines(
     every line was boilerplate comes back as the empty string, ready
     for a length filter.
 
-    Scale shape: one explode → distinct → count agg builds the (small)
-    frequent-line set; a left join on the trimmed-line key marks drops
+    Scale shape: the explode that feeds reassembly also feeds the
+    :func:`frequent_lines` rule, which builds the (small) frequent-line
+    set; a left join on the trimmed-line key marks drops
     (AQE broadcasts the set when it is small — no assumption that it
     is); reassembly is one per-doc hash aggregate of (pos, line)
     structs. Line text shuffles once for reassembly — inherent to
     rebuilding documents.
     """
-    ex = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "ln"),
-    ).withColumn("_key", F.trim("ln"))
-    freq = (
-        ex.filter(F.col("_key") != "")
-        .select(id_col, "_key")
-        .distinct()
-        .groupBy("_key")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") >= min_df)
-        .withColumn("_drop", F.lit(True))
+    ex = _line_rows(df, text_col, id_col, sep)
+    freq = _frequent_keys(ex, id_col, min_df).withColumn(
+        "_drop", F.lit(True)
     )
     marked = ex.join(freq.select("_key", "_drop"), on="_key", how="left")
     kept_struct = F.when(

@@ -32,6 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 #: Node (or sub-k node) count up to which pagerank, label_propagation
 #: and k_core hint the per-round join of the one-row-per-node frame as a
 #: broadcast; past it the joins fall back to shuffle joins under AQE.
@@ -677,7 +681,6 @@ def degree_assortativity(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    round_to: int = 6,
 ) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002): the Pearson
     correlation of endpoint degrees over the edge list — do
@@ -732,7 +735,7 @@ def degree_assortativity(
     return agg.crossJoin(F.broadcast(nodes)).select(
         F.col("n_nodes").cast("long").alias("n_nodes"),
         (F.col("m") / 2).cast("long").alias("n_edges"),
-        F.round(F.when(den > 0, num / den), round_to).alias(
+        F.round(F.when(den > 0, num / den), _DIGITS).alias(
             "assortativity"
         ),
     )
@@ -744,8 +747,6 @@ def markov_stationary(
     dst: str = "dst",
     weight: str | None = None,
     n_iter: int = 20,
-    iter_round: int = 12,
-    round_to: int = 6,
 ) -> DataFrame:
     """Stationary distribution of the Markov chain defined by a
     weighted transition edge list — where does a random walk over the
@@ -757,7 +758,7 @@ def markov_stationary(
     the uniform start — a FIXED iteration count, not a convergence
     test, so the result is a deterministic function of the input and
     an external SQL engine replays it exactly. Each round rounds the
-    distribution at ``iter_round`` dp (round-before-derive — the
+    distribution at 12 dp (round-before-derive — the
     cross-engine float discipline used across this package).
 
     States with no outgoing edges become explicit SELF-LOOPS in the
@@ -772,7 +773,7 @@ def markov_stationary(
 
     State count is assumed metadata-sized (event types, pages);
     this is a chain over CATEGORIES, not over users. Returns
-    ``(state, pi)`` rounded to ``round_to``, ordered by state.
+    ``(state, pi)`` rounded to 6 dp, ordered by state.
     """
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
@@ -815,7 +816,7 @@ def markov_stationary(
             .groupBy(F.col("d").alias("state"))
             .agg(
                 F.round(
-                    F.sum(F.col("pi") * F.col("p")), iter_round
+                    F.sum(F.col("pi") * F.col("p")), 12
                 ).alias("pi")
             )
         )
@@ -825,7 +826,7 @@ def markov_stationary(
         states.join(pi, "state", "left")
         .select(
             "state",
-            F.round(F.coalesce(F.col("pi"), F.lit(0.0)), round_to)
+            F.round(F.coalesce(F.col("pi"), F.lit(0.0)), _DIGITS)
             .alias("pi"),
         )
         .orderBy("state")

@@ -37,6 +37,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 4
+
 
 def _ngrams(
     df: DataFrame, id_cols: list[str], tokens_col: str, n: int
@@ -94,10 +98,9 @@ def kn_bigram_doc_scores(
     tokens_col: str = "tk",
     train: DataFrame | None = None,
     discount: float = 0.75,
-    quantize: int = 4,
 ) -> DataFrame:
     """Per-document interpolated-KN bigram score: ``n_bigrams``,
-    ``avg_logp`` (mean natural-log ``P_KN``, rounded to ``quantize``)
+    ``avg_logp`` (mean natural-log ``P_KN``, rounded to 4 dp)
     and ``ppl`` (``exp(-avg_logp)`` of the unrounded mean) — the CCNet
     filter statistic. ``train`` defaults to ``docs`` (self-scored
     corpus); pass a held-out/reference corpus for true perplexity
@@ -144,12 +147,12 @@ def kn_bigram_doc_scores(
     return scored.select(
         id_col,
         "n_bigrams",
-        F.round("_m", quantize).alias("avg_logp"),
+        F.round("_m", _DIGITS).alias("avg_logp"),
     ).select(
         id_col,
         "n_bigrams",
         "avg_logp",
-        F.round(F.exp(-F.col("avg_logp")), quantize).alias("ppl"),
+        F.round(F.exp(-F.col("avg_logp")), _DIGITS).alias("ppl"),
     )
 
 
@@ -160,7 +163,6 @@ def kn_doc_scores(
     train: DataFrame | None = None,
     order: int = 5,
     discount: float = 0.75,
-    quantize: int = 4,
 ) -> DataFrame:
     """Interpolated Kneser-Ney at a CONFIGURABLE order — ``order=5``
     is the EXACT shape of CCNet's industrial KenLM filter (Wenzek et
@@ -303,12 +305,12 @@ def kn_doc_scores(
     return out.select(
         id_col,
         "n_ngrams",
-        F.round("_m", quantize).alias("avg_logp"),
+        F.round("_m", _DIGITS).alias("avg_logp"),
     ).select(
         id_col,
         "n_ngrams",
         "avg_logp",
-        F.round(F.exp(-F.col("avg_logp")), quantize).alias("ppl"),
+        F.round(F.exp(-F.col("avg_logp")), _DIGITS).alias("ppl"),
     )
 
 
@@ -319,7 +321,6 @@ def sb_doc_scores(
     train: DataFrame | None = None,
     order: int = 5,
     alpha: float = 0.4,
-    quantize: int = 4,
 ) -> DataFrame:
     """Per-document Stupid-Backoff score at a CONFIGURABLE order
     (Brants et al. 2007, "Large Language Models in Machine
@@ -342,7 +343,7 @@ def sb_doc_scores(
     ``train`` defaults to ``docs``; pass a disjoint split to exercise
     the backoff chain for real (self-scoring always hits the top
     branch). Returns ``(id_col, n_ngrams, avg_logs, ppl)`` —
-    ``avg_logs`` the mean natural-log score rounded to ``quantize``,
+    ``avg_logs`` the mean natural-log score rounded to 4 dp,
     ``ppl`` = exp(-avg_logs) of the rounded mean (deterministic pair,
     as in :func:`kn_bigram_doc_scores`). Docs with < ``order`` tokens
     are absent by contract.
@@ -434,10 +435,10 @@ def sb_doc_scores(
     return out.select(
         id_col,
         "n_ngrams",
-        F.round("_m", quantize).alias("avg_logs"),
+        F.round("_m", _DIGITS).alias("avg_logs"),
     ).select(
         id_col,
         "n_ngrams",
         "avg_logs",
-        F.round(F.exp(-F.col("avg_logs")), quantize).alias("ppl"),
+        F.round(F.exp(-F.col("avg_logs")), _DIGITS).alias("ppl"),
     )

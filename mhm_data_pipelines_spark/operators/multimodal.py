@@ -172,7 +172,6 @@ def fake_feature_extractor(payload: bytes, dim: int = 8) -> list[float]:
 def extract_features(
     assets: DataFrame,
     extractor: Callable[[bytes], list[float]] = fake_feature_extractor,
-    batch_size_hint: int = 256,
 ) -> DataFrame:
     """mapInPandas feature extraction over binary payloads — the Arrow
     batch shape a real image/audio model UDF would use (payloads arrive

@@ -14,8 +14,7 @@ Scale design:
 * Top-k frequent values explode to ``(column, value)`` rows (one scan)
   → one hash-agg → per-column window top-k. Cardinality after the agg
   is Σ distinct(col) — prune wide/high-cardinality columns with the
-  ``columns`` arg; ``exact_distinct=False`` swaps in
-  ``approx_count_distinct`` (HLL, bounded memory) for the 100 TB path.
+  ``columns`` arg.
 * Values render as strings so heterogeneous columns share one output
   schema (profiling output is for humans/monitors, not joins).
 """
@@ -27,12 +26,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 
 def profile_table(
     df: DataFrame,
     columns: list[str] | None = None,
     top_k: int = 3,
-    exact_distinct: bool = True,
 ) -> DataFrame:
     """One row per profiled column: ``(column, dtype, n_rows, n_nulls,
     n_distinct, min_value, max_value, top_values)`` where
@@ -57,9 +59,6 @@ def profile_table(
             return F.hex(col)
         return col.cast("string")
 
-    distinct_agg = (
-        F.count_distinct if exact_distinct else F.approx_count_distinct
-    )
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for i, c in enumerate(cols):
         col, v = F.col(f"`{c}`"), value_expr(c)
@@ -68,7 +67,7 @@ def profile_table(
         mm = v if dtypes[c].startswith(("struct", "map", "array")) else col
         aggs += [
             F.sum(col.isNull().cast("long")).alias(f"_nulls_{i}"),
-            distinct_agg(v).alias(f"_nd_{i}"),
+            F.count_distinct(v).alias(f"_nd_{i}"),
             F.min(mm).cast("string").alias(f"_min_{i}"),
             F.max(mm).cast("string").alias(f"_max_{i}"),
         ]
@@ -215,7 +214,6 @@ def profile_drift(
 def benford_report(
     df: DataFrame,
     int_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """First-digit (Benford) audit of a positive integer column —
     the classic fabricated-/synthetic-data smell test: naturally
@@ -259,9 +257,9 @@ def benford_report(
         .select(
             "digit",
             F.col("n").cast("long").alias("n"),
-            F.round(obs, round_to).alias("observed_p"),
-            F.round(p, round_to).alias("expected_p"),
-            F.round(chi2, round_to).alias("chi2_term"),
+            F.round(obs, _DIGITS).alias("observed_p"),
+            F.round(p, _DIGITS).alias("expected_p"),
+            F.round(chi2, _DIGITS).alias("chi2_term"),
         )
         .orderBy("digit")
     )
@@ -271,7 +269,6 @@ def concentration_report(
     df: DataFrame,
     group_col: str,
     weight_col: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Concentration of a corpus over groups (sources, domains,
     languages) — the "is one source dominating the mix?" audit:
@@ -320,9 +317,9 @@ def concentration_report(
     hhi = F.col("xx") / (F.col("t") * F.col("t"))
     return agg.select(
         F.col("n").cast("long").alias("n_groups"),
-        F.round("t", round_to).alias("total"),
-        F.round(hhi, round_to).alias("hhi"),
-        F.round(gini, round_to).alias("gini"),
+        F.round("t", _DIGITS).alias("total"),
+        F.round(hhi, _DIGITS).alias("hhi"),
+        F.round(gini, _DIGITS).alias("gini"),
     )
 
 
@@ -487,7 +484,6 @@ def weighted_percentiles(
     weight_col: str,
     qs: Sequence[float] = (0.5, 0.9, 0.99),
     group_cols: Sequence[str] = (),
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact weighted percentiles — the lower weighted quantile
     ``min{ v : cumW(v) ≥ q·W }`` per group, the estimator you need
@@ -537,7 +533,7 @@ def weighted_percentiles(
         return f"p{pct:g}".replace(".", "_")
 
     aggs = [
-        F.round(F.sum(F.col("_wv")), round_to).alias("total_weight")
+        F.round(F.sum(F.col("_wv")), _DIGITS).alias("total_weight")
     ] + [
         F.min(
             F.when(

@@ -33,7 +33,7 @@ Scale shape (the part that matters at 100 TB of comparisons):
 
 Cross-engine float determinism: each iteration's per-item denominator
 and the normalization mean are float sums in engine-arbitrary order,
-so ratings are QUANTIZED to ``quantize`` decimals at the end of every
+so ratings are QUANTIZED to 9 decimals at the end of every
 iteration — per-step ordering drift (~1e-15) is absorbed and both
 engines enter the next iteration from bit-identical state. The DuckDB
 oracle unrolls the identical recurrence (fixed iterations, same
@@ -52,6 +52,10 @@ from pyspark.sql import functions as F
 
 __all__ = ["bradley_terry", "ranking_metrics"]
 
+#: Decimals every iteration's ratings are quantized to (see module
+#: doc); the driver and distributed loops must round alike.
+_DIGITS = 9
+
 #: Directed pair-table size up to which bradley_terry runs its MM loop
 #: driver-side in numpy; past it the loop stays distributed.
 _DRIVER_MAX_PAIRS = 2_000_000
@@ -62,12 +66,11 @@ def bradley_terry(
     winner_col: str = "winner",
     loser_col: str = "loser",
     iterations: int = 8,
-    quantize: int = 9,
 ) -> DataFrame:
     """Fit Bradley-Terry ratings over ``(winner, loser)`` rows.
 
     Returns ``(item, rating)`` — ratings normalized to mean 1.0 and
-    rounded to ``quantize`` decimals (the per-iteration quantization
+    rounded to 9 decimals (the per-iteration quantization
     that makes the recurrence engine-reproducible; see module doc).
 
     ``iterations`` is a fixed count, not a convergence test — fixed
@@ -145,7 +148,7 @@ def bradley_terry(
             for i in range(k):
                 denom = sum(n / (p[i] + p[j]) for j, n in nbr[i])
                 raw[i] = w[i] / denom
-            p = np.round(raw / raw.mean(), quantize)
+            p = np.round(raw / raw.mean(), _DIGITS)
         out = [(it_, float(p[idx[it_]])) for it_ in items]
         return spark.createDataFrame(out, schema)
 
@@ -177,7 +180,7 @@ def bradley_terry(
         mean = raw.agg(F.avg("r").alias("_mean"))
         ratings = raw.crossJoin(F.broadcast(mean)).select(
             "item",
-            F.round(F.col("r") / F.col("_mean"), quantize).alias("p"),
+            F.round(F.col("r") / F.col("_mean"), _DIGITS).alias("p"),
         )
         # Truncate lineage every OTHER round: ratings feeds both join
         # sides, so an un-checkpointed round squares the plan — one

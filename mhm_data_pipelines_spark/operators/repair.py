@@ -21,6 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 __all__ = [
     "impute_stats",
     "impute_nulls",
@@ -132,7 +136,6 @@ def robust_outlier_stats(
     value_col: str,
     group_cols: list[str],
     cutoff: float = 3.5,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group robust outlier report via the modified z-score
     (Iglewicz & Hoaglin 1993): ``z = 0.6745·(x − median) / MAD`` with
@@ -185,8 +188,8 @@ def robust_outlier_stats(
         .select(
             *group_cols,
             F.col("n").cast("long").alias("n"),
-            F.round("_med", round_to).alias("median"),
-            F.round("_mad", round_to).alias("mad"),
+            F.round("_med", _DIGITS).alias("median"),
+            F.round("_mad", _DIGITS).alias("mad"),
             F.when(
                 F.col("_mad") > 0,
                 F.coalesce(F.col("_nout"), F.lit(0)),
@@ -268,7 +271,6 @@ def quantile_normalize(
     value_col: str,
     group_col: str,
     n_quantiles: int = 101,
-    round_grid: int | None = 6,
 ) -> DataFrame:
     """Map each group's score distribution onto the GLOBAL distribution
     — the sklearn-QuantileTransformer shape, per group: a row's
@@ -286,7 +288,7 @@ def quantile_normalize(
     (salt or pre-aggregate a pathologically hot group upstream).
 
     Exactness contract: percent_rank is an exact rational in both
-    engines; ``round_grid`` rounds the collected quantiles (half-up =
+    engines; the collected quantiles are rounded to 6 decimals (half-up =
     SQL round) so both engines interpolate from identical doubles; the
     grid index is ``least(floor(p·(B−1)), B−2)`` with linear
     interpolation to the next knot. NULL scores pass through as NULL;
@@ -307,8 +309,7 @@ def quantile_normalize(
         F.percentile(v, F.array(*[F.lit(p) for p in probs])).alias("q")
     ).collect()  # ONE row, n_quantiles doubles — metadata-sized
     grid = [float(x) for x in grid_row[0]["q"]]
-    if round_grid is not None:
-        grid = [_round_half_up(x, round_grid) for x in grid]
+    grid = [_round_half_up(x, _DIGITS) for x in grid]
     garr = F.array(*[F.lit(x) for x in grid])
     # NULL scores go to their own sub-partition so they can't distort
     # the ranks of real values (they emit NULL regardless)

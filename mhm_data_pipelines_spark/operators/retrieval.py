@@ -33,6 +33,10 @@ from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.functions.text import tokens
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 __all__ = [
     "pmi_collocations",
     "bm25_scores",
@@ -137,7 +141,6 @@ def jaccard_topk(
     k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    round_scores: int | None = 6,
 ) -> DataFrame:
     """Top-``k`` documents by query↔document token-SET Jaccard — the
     set-overlap lexical ranking that complements BM25's tf-weighted one
@@ -166,8 +169,7 @@ def jaccard_topk(
         )
         .filter(F.col("n_terms_matched") > 0)
     )
-    if round_scores is not None:
-        out = out.withColumn("score", F.round("score", round_scores))
+    out = out.withColumn("score", F.round("score", _DIGITS))
     return out.orderBy(F.desc("score"), F.col(id_col)).limit(k)
 
 
@@ -236,7 +238,6 @@ def rrf_fuse(
     id_col: str = "doc_id",
     k_const: int = 60,
     topk: int | None = None,
-    round_scores: int | None = 8,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack/Clarke/Buettcher, SIGIR'09) of
     N ranked lists — the standard hybrid-retrieval combiner (sparse
@@ -274,10 +275,7 @@ def rrf_fuse(
         F.sum("_contrib").alias("rrf_score"),
         F.count("*").alias("n_lists"),
     )
-    if round_scores is not None:
-        out = out.withColumn(
-            "rrf_score", F.round("rrf_score", round_scores)
-        )
+    out = out.withColumn("rrf_score", F.round("rrf_score", 8))
     out = out.orderBy(F.desc("rrf_score"), F.col(id_col))
     return out.limit(topk) if topk is not None else out
 
@@ -288,7 +286,6 @@ def pmi_collocations(
     text_col: str = "text",
     min_count: int = 3,
     topk: int = 50,
-    round_scores: int = 6,
 ) -> DataFrame:
     """Corpus-level collocation mining: top-k adjacent-bigram PMI/NPMI.
 
@@ -312,7 +309,7 @@ def pmi_collocations(
     AQE-sized joins; the final top-k is a bounded sort, not a global
     materialization.
 
-    Determinism: rank and emit on ``round(npmi, round_scores)`` with
+    Determinism: rank and emit on ``round(npmi, 6)`` with
     (w1, w2) tie-breaks — ``ln`` is not correctly rounded across
     engines, so raw doubles never decide order.
 
@@ -357,12 +354,12 @@ def pmi_collocations(
     pmi = F.log(
         p_ab / ((F.col("c_a") / F.col("n_tokens")) * (F.col("c_b") / F.col("n_tokens")))
     )
-    npmi = F.round(pmi / -F.log(p_ab), round_scores)
+    npmi = F.round(pmi / -F.log(p_ab), _DIGITS)
     out = scored.select(
         "w1",
         "w2",
         F.col("c_ab").cast("long").alias("c_ab"),
-        F.round(pmi, round_scores).alias("pmi"),
+        F.round(pmi, _DIGITS).alias("pmi"),
         npmi.alias("npmi"),
     ).orderBy(F.desc("npmi"), "w1", "w2")
     return out.limit(topk) if topk is not None else out
@@ -373,7 +370,6 @@ def doc_keywords(
     id_col: str = "doc_id",
     text_col: str = "text",
     topk: int = 3,
-    round_scores: int = 6,
 ) -> DataFrame:
     """Per-document keyword extraction: top-k terms by TF-IDF
     (``tf · ln(N/df)``) — the summarize-by-salient-terms primitive for
@@ -384,7 +380,7 @@ def doc_keywords(
     and the document-frequency aggregate (df re-attaches by term —
     AQE-sized); ranking is a window PARTITIONED BY document (scales
     with docs-per-partition, never a global sort). Rank on
-    ``round(score, round_scores)`` with term tie-break — ``ln`` is not
+    ``round(score, 6)`` with term tie-break — ``ln`` is not
     correctly rounded cross-engine, raw doubles never decide order.
 
     Returns ``(id_col, rank, term, score)``, rank 1..topk per doc.
@@ -408,7 +404,7 @@ def doc_keywords(
             "term",
             F.round(
                 F.col("tf") * F.log(F.col("n_docs") / F.col("df")),
-                round_scores,
+                _DIGITS,
             ).alias("score"),
         )
     )

@@ -19,6 +19,10 @@ from fractions import Fraction
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 #: Denominator for hash-bucket fractions (1e6 → 0.0001% resolution).
 _BUCKETS = 1_000_000
 
@@ -702,7 +706,6 @@ def ht_estimate(
     sample: DataFrame,
     value_col: str,
     prob_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Horvitz-Thompson estimation from an unequal-probability sample
     — the read-side completion of this module's samplers: given rows
@@ -738,10 +741,10 @@ def ht_estimate(
     )
     return agg.select(
         F.col("n_sample").cast("long").alias("n_sample"),
-        F.round("t_hat", round_to).alias("est_total"),
-        F.round("n_hat", round_to).alias("est_population"),
-        F.round(F.col("t_hat") / F.col("n_hat"), round_to).alias(
+        F.round("t_hat", _DIGITS).alias("est_total"),
+        F.round("n_hat", _DIGITS).alias("est_population"),
+        F.round(F.col("t_hat") / F.col("n_hat"), _DIGITS).alias(
             "ht_mean"
         ),
-        F.round(F.sqrt(F.col("v_hat")), round_to).alias("se_total"),
+        F.round(F.sqrt(F.col("v_hat")), _DIGITS).alias("se_total"),
     )

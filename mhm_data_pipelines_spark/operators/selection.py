@@ -30,6 +30,10 @@ from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.functions.text import tokens
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 
 def _hashed_features(
     df: DataFrame, text_col: str, id_col: str, buckets: int
@@ -327,7 +331,6 @@ def calibration_curve(
     score_col: str,
     label_col: str,
     bins: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Reliability diagram for a [0,1]-scored classifier against
     boolean labels — the standard audit before a quality-classifier
@@ -368,10 +371,10 @@ def calibration_curve(
         .select(
             "bin",
             F.col("n").cast("long").alias("n"),
-            F.round(conf, round_to).alias("conf"),
-            F.round(acc, round_to).alias("acc"),
+            F.round(conf, _DIGITS).alias("conf"),
+            F.round(acc, _DIGITS).alias("acc"),
             F.round(
-                F.col("n") / F.col("_N") * F.abs(acc - conf), round_to
+                F.col("n") / F.col("_N") * F.abs(acc - conf), _DIGITS
             ).alias("ece_term"),
         )
     )

@@ -23,6 +23,10 @@ from pyspark.sql import functions as F
 
 from mhm_data_pipelines_spark.functions.vectors import cosine, dot, normalize
 
+#: Decimals mmr_select quantizes relevance and every round's score to;
+#: its driver-side and distributed greedy loops must round alike.
+_MMR_DIGITS = 7
+
 
 def _topk_per(
     scored: DataFrame, part_col: str, score_col: str, id_col: str, k: int
@@ -1506,7 +1510,6 @@ def mmr_select(
     lam: float = 0.7,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    quantize: int = 7,
     pool: int | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein,
@@ -1537,7 +1540,7 @@ def mmr_select(
       j does not replay rounds 1..j-1's filters over the scan lineage.
 
     Cross-engine determinism: relevance and every round's score are
-    QUANTIZED to ``quantize`` decimals before the argmax, ties broken
+    QUANTIZED to 7 decimals before the argmax, ties broken
     by id asc — the unrolled SQL oracle replays the identical greedy
     recursion value-for-value.
 
@@ -1556,7 +1559,7 @@ def mmr_select(
     rel_expr = corpus.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_v"),
-        F.round(cosine(F.col(vec_col), q), quantize).alias("_rel"),
+        F.round(cosine(F.col(vec_col), q), _MMR_DIGITS).alias("_rel"),
     ).filter(F.col("_rel").isNotNull())
     if pool is not None:
         if pool < k:
@@ -1566,7 +1569,7 @@ def mmr_select(
             .limit(pool)
             .collect()  # bounded by contract: pool rows × dim doubles
         )
-        picks = _mmr_greedy_driver(rows, lam, k, quantize)
+        picks = _mmr_greedy_driver(rows, lam, k, _MMR_DIGITS)
         return spark.createDataFrame(picks, schema=out_schema)
     rel = rel_expr.localCheckpoint(eager=False)
     olam = 1.0 - lam
@@ -1583,7 +1586,7 @@ def mmr_select(
             ]
             maxsim = sims[0] if len(sims) == 1 else F.greatest(*sims)
             score = F.round(
-                F.lit(lam) * F.col("_rel") - F.lit(olam) * maxsim, quantize
+                F.lit(lam) * F.col("_rel") - F.lit(olam) * maxsim, _MMR_DIGITS
             )
         top = (
             remaining.select("_id", "_v", score.alias("_score"))

@@ -29,6 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 __all__ = [
     "grid_radius_join",
     "radius_neighbor_counts",
@@ -135,7 +139,6 @@ def radius_neighbor_counts(
     x: str = "x",
     y: str = "y",
     cell_cap: int | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-left-point neighborhood summary — the aggregate-not-emit
     production path over :func:`grid_radius_join`: ``(left_id,
@@ -154,7 +157,7 @@ def radius_neighbor_counts(
     )
     return pairs.groupBy("left_id").agg(
         F.count(F.lit(1)).alias("n_neighbors"),
-        F.round(F.min("dist"), round_to).alias("min_dist"),
+        F.round(F.min("dist"), _DIGITS).alias("min_dist"),
     )
 
 
@@ -166,7 +169,6 @@ def mobility_features(
     y: str = "y",
     cell_size: float = 1.0,
     order_tiebreak: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-user mobility summary — the standard digital-phenotyping
     trajectory features (Canzian & Musolesi, UbiComp'15 family) over a
@@ -245,13 +247,13 @@ def mobility_features(
     ent = F.log(c_n) - F.sum(F.col("_c") * F.log("_c")) / c_n
     per_cells = cells.groupBy("_u").agg(
         F.count(F.lit(1)).alias("n_cells"),
-        F.round(ent, round_to).alias("cell_entropy"),
+        F.round(ent, _DIGITS).alias("cell_entropy"),
     )
     return per_user.join(per_cells, "_u").select(
         F.col("_u").alias(user),
         F.col("n_points").cast("long").alias("n_points"),
-        F.round("_dist", round_to).alias("total_distance"),
-        F.round(rog, round_to).alias("radius_of_gyration"),
+        F.round("_dist", _DIGITS).alias("total_distance"),
+        F.round(rog, _DIGITS).alias("radius_of_gyration"),
         F.col("n_cells").cast("long").alias("n_cells"),
         "cell_entropy",
     )

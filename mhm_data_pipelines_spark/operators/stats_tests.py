@@ -37,6 +37,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 __all__ = [
     "ks_test",
     "mann_whitney_u",
@@ -73,7 +77,6 @@ def ks_test(
     group_col: str,
     group_a,
     group_b,
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov D between ``group_a`` and
     ``group_b`` rows of ``value_col``.
@@ -126,8 +129,8 @@ def ks_test(
     return d.select(
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
-        F.round("d", round_to).alias("d_stat"),
-        F.round(lam, round_to).alias("ks_lambda"),
+        F.round("d", _DIGITS).alias("d_stat"),
+        F.round(lam, _DIGITS).alias("ks_lambda"),
     )
 
 
@@ -160,23 +163,10 @@ def mann_whitney_u(
     per_val = base.groupBy("v").agg(
         F.count("*").alias("t"), F.sum("ia").alias("ca")
     )
-    from mhm_data_pipelines_spark.operators.budget import running_total
+    from mhm_data_pipelines_spark.operators.budget import _tie_avg_ranks
 
-    cum = running_total(
-        per_val, order_by=[("v", True)], value_col="t", out_col="cum"
-    )
-    # tie-averaged rank of every row with value v:
-    # positions (cum−t+1)..cum → avg = cum − t/2 + 0.5
-    ranked = cum.select(
-        "v",
-        "t",
-        "ca",
-        (
-            F.col("cum").cast("double")
-            - F.col("t").cast("double") / 2
-            + F.lit(0.5)
-        ).alias("r"),
-    )
+    cum, rank = _tie_avg_ranks(per_val, "v", "t", "cum")
+    ranked = cum.select("v", "t", "ca", rank.alias("r"))
     agg = ranked.agg(
         F.sum("ca").cast("double").alias("n_a"),
         F.sum(F.col("t") - F.col("ca")).cast("double").alias("n_b"),
@@ -207,7 +197,6 @@ def chi2_independence(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Pearson chi-square test of independence between two categorical
     columns: ``chi2 = Σ (o_xy − e_xy)² / e_xy`` with
@@ -248,7 +237,7 @@ def chi2_independence(
             ((F.col("r") - 1) * (F.col("c") - 1)).cast("long").alias(
                 "dof"
             ),
-            F.round(F.col("n") * F.col("s") - F.col("n"), round_to).alias(
+            F.round(F.col("n") * F.col("s") - F.col("n"), _DIGITS).alias(
                 "chi2"
             ),
         )
@@ -261,7 +250,6 @@ def two_proportion_ztest(
     group_a,
     group_b,
     success_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Two-proportion z-test (pooled): did variant A convert at a
     different rate than variant B? — the A/B-readout companion to the
@@ -301,10 +289,10 @@ def two_proportion_ztest(
     return agg.select(
         F.col("n_a").cast("long").alias("n_a"),
         F.col("n_b").cast("long").alias("n_b"),
-        F.round(p_a, round_to).alias("p_a"),
-        F.round(p_b, round_to).alias("p_b"),
-        F.round(F.when(p_b > 0, p_a / p_b), round_to).alias("risk_ratio"),
-        F.round(z, round_to).alias("z"),
+        F.round(p_a, _DIGITS).alias("p_a"),
+        F.round(p_b, _DIGITS).alias("p_b"),
+        F.round(F.when(p_b > 0, p_a / p_b), _DIGITS).alias("risk_ratio"),
+        F.round(z, _DIGITS).alias("z"),
     )
 
 
@@ -341,7 +329,6 @@ def poisson_bootstrap_ci(
     n_boot: int = 200,
     seed: int = 42,
     alpha: float = 0.05,
-    round_sums: int = 6,
 ) -> DataFrame:
     """Per-group bootstrap confidence interval for the MEAN of
     ``value_col`` — the Poisson bootstrap (the industry-standard
@@ -357,8 +344,8 @@ def poisson_bootstrap_ci(
     * the CI is the exact interpolated [α/2, 1−α/2] percentile of the
       ``n_boot`` replicate means (percentile = quantile_cont parity).
 
-    Float discipline: per-replicate weighted sums round to
-    ``round_sums`` digits before the division, so both engines derive
+    Float discipline: per-replicate weighted sums round to 6 digits
+    before the division, so both engines derive
     replicate means from bit-identical doubles (the ivm_rollup/
     ols_trend convention). Replicates whose weights all landed 0 (only
     possible for tiny groups) yield NULL means, which the percentile
@@ -394,7 +381,7 @@ def poisson_bootstrap_ci(
     boot = (
         reps.groupBy(*keys, "_b")
         .agg(
-            F.round(F.sum(w * F.col("_y")), round_sums).alias("_sw"),
+            F.round(F.sum(w * F.col("_y")), _DIGITS).alias("_sw"),
             F.sum(w).alias("_ww"),
         )
         .withColumn(
@@ -412,7 +399,7 @@ def poisson_bootstrap_ci(
     pgb = base.groupBy(*keys) if keys else base.groupBy()
     point = pgb.agg(
         F.count("_y").alias("n"),
-        (F.round(F.sum("_y"), round_sums) / F.count("_y")).alias("mean"),
+        (F.round(F.sum("_y"), _DIGITS) / F.count("_y")).alias("mean"),
     )
     joined = (
         point.join(F.broadcast(ci), on=keys)
@@ -533,8 +520,6 @@ def randomization_test(
     id_col: str,
     n_perm: int = 200,
     seed: int = 42,
-    round_sums: int = 6,
-    round_diff: int = 6,
 ) -> DataFrame:
     """Randomization (approximate permutation) test for the difference
     in MEANS between two groups — the assumption-free significance
@@ -551,8 +536,8 @@ def randomization_test(
     valid randomization test). The two-sided p is the add-one
     estimator ``(1 + #{|diff_b| >= |diff_obs|}) / (n_perm + 1)``.
 
-    Float discipline: per-replicate sums round to ``round_sums``
-    digits and both diffs to ``round_diff`` BEFORE the >= compare, so
+    Float discipline: per-replicate sums and both diffs round to 6
+    digits BEFORE the >= compare, so
     the extreme-count is integer-identical across engines. Degenerate
     replicates (a side drew zero rows — vanishing probability at real
     n) yield NULL diffs, which never count as extreme. Returns one row
@@ -577,16 +562,16 @@ def randomization_test(
     obs = base.agg(
         F.sum("_ia").alias("n_a"),
         F.sum(F.lit(1) - F.col("_ia")).alias("n_b"),
-        F.round(F.sum(F.col("_ia") * F.col("_y")), round_sums).alias("sa"),
+        F.round(F.sum(F.col("_ia") * F.col("_y")), _DIGITS).alias("sa"),
         F.round(
-            F.sum((F.lit(1) - F.col("_ia")) * F.col("_y")), round_sums
+            F.sum((F.lit(1) - F.col("_ia")) * F.col("_y")), _DIGITS
         ).alias("sb"),
     ).select(
         "n_a",
         "n_b",
         F.round(
             F.col("sa") / F.col("n_a") - F.col("sb") / F.col("n_b"),
-            round_diff,
+            _DIGITS,
         ).alias("diff_obs"),
     )
     reps = base.crossJoin(F.broadcast(obs.select("n_a", "n_b"))).withColumn(
@@ -606,10 +591,10 @@ def randomization_test(
     tagged = reps.withColumn("_pa", (u < pa).cast("int"))
     per_rep = tagged.groupBy("_b").agg(
         F.round(
-            F.sum(F.col("_pa") * F.col("_y")), round_sums
+            F.sum(F.col("_pa") * F.col("_y")), _DIGITS
         ).alias("sa"),
         F.round(
-            F.sum((F.lit(1) - F.col("_pa")) * F.col("_y")), round_sums
+            F.sum((F.lit(1) - F.col("_pa")) * F.col("_y")), _DIGITS
         ).alias("sb"),
         F.sum("_pa").alias("ka"),
         F.sum(F.lit(1) - F.col("_pa")).alias("kb"),
@@ -619,7 +604,7 @@ def randomization_test(
             (F.col("ka") > 0) & (F.col("kb") > 0),
             F.col("sa") / F.col("ka") - F.col("sb") / F.col("kb"),
         ),
-        round_diff,
+        _DIGITS,
     )
     tail = per_rep.crossJoin(F.broadcast(obs)).agg(
         F.first("n_a").alias("n_a"),
@@ -1024,6 +1009,23 @@ def cuped_report(
     )
 
 
+def _chi2_upper_p(x: Column, k: Column) -> Column:
+    """Upper-tail p-value of a chi-square statistic ``x`` on ``k − 1``
+    dof: the exact ``2·(1 − Φ(√x))`` at one dof, Wilson-Hilferty's
+    ``(x/d)^(1/3) ~ N(1 − 2/(9d), 2/(9d))`` with ``d = k − 1``
+    otherwise."""
+    from mhm_data_pipelines_spark.functions.stats import normal_cdf
+
+    p_1dof = F.lit(2.0) * (F.lit(1.0) - normal_cdf(F.sqrt(x)))
+    wh_z = (
+        F.pow(x / (k - 1), F.lit(1.0) / F.lit(3.0))
+        - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * (k - 1)))
+    ) / F.sqrt(F.lit(2.0) / (F.lit(9.0) * (k - 1)))
+    return F.when(k == 2, p_1dof).otherwise(
+        F.lit(1.0) - normal_cdf(wh_z)
+    )
+
+
 def srm_check(
     df: DataFrame,
     arm_col: str,
@@ -1061,8 +1063,6 @@ def srm_check(
     + a single-row rollup; the expected shares ride in as a literal
     lookup. Nothing else touches the data.
     """
-    from mhm_data_pipelines_spark.functions.stats import normal_cdf
-
     counts = (
         df.groupBy(
             F.col(arm_col).cast("string").alias("arm")
@@ -1137,17 +1137,7 @@ def srm_check(
     )
     k = F.col("k")
     chi2 = F.col("chi2")
-    p_1dof = F.lit(2.0) * (
-        F.lit(1.0) - normal_cdf(F.sqrt(chi2))
-    )
-    # Wilson-Hilferty: (chi2/k)^(1/3) ~ N(1 - 2/(9k), 2/(9k))
-    wh_z = (
-        F.pow(chi2 / (k - 1), F.lit(1.0) / F.lit(3.0))
-        - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * (k - 1)))
-    ) / F.sqrt(F.lit(2.0) / (F.lit(9.0) * (k - 1)))
-    p = F.when(k == 2, p_1dof).otherwise(
-        F.lit(1.0) - normal_cdf(wh_z)
-    )
+    p = _chi2_upper_p(chi2, k)
     return base.crossJoin(F.broadcast(nulls)).select(
         "n",
         F.col("n_null_arm").cast("long").alias("n_null_arm"),
@@ -1444,7 +1434,6 @@ def kruskal_wallis(
     df: DataFrame,
     value_col: str,
     group_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Kruskal-Wallis H test — the k-group extension of
     :func:`mann_whitney_u` (one-way ANOVA on ranks): are the k group
@@ -1471,8 +1460,7 @@ def kruskal_wallis(
     statistics are NULL when every value is tied (zero rank
     variance) or k < 2.
     """
-    from mhm_data_pipelines_spark.functions.stats import normal_cdf
-    from mhm_data_pipelines_spark.operators.budget import running_total
+    from mhm_data_pipelines_spark.operators.budget import _tie_avg_ranks
 
     base = df.filter(
         F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
@@ -1481,18 +1469,8 @@ def kruskal_wallis(
         F.col(group_col).alias("grp"),
     )
     per_val = base.groupBy("v").agg(F.count(F.lit(1)).alias("t"))
-    cum = running_total(
-        per_val, order_by=[("v", True)], value_col="t", out_col="cum"
-    )
-    ranked = cum.select(
-        "v",
-        "t",
-        (
-            F.col("cum").cast("double")
-            - F.col("t").cast("double") / 2
-            + F.lit(0.5)
-        ).alias("r"),
-    )
+    cum, rank = _tie_avg_ranks(per_val, "v", "t", "cum")
+    ranked = cum.select("v", "t", rank.alias("r"))
     per_gv = base.groupBy("grp", "v").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -1522,21 +1500,13 @@ def kruskal_wallis(
     )
     corr = F.lit(1.0) - F.col("tie_mass") / (n * n * n - n)
     h_c = F.when((corr > 0) & (k >= 2), h / corr)
-    p_1dof = F.lit(2.0) * (F.lit(1.0) - normal_cdf(F.sqrt(h_c)))
-    # Wilson-Hilferty on (k-1) dof, as in srm_check
-    wh_z = (
-        F.pow(h_c / (k - 1), F.lit(1.0) / F.lit(3.0))
-        - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * (k - 1)))
-    ) / F.sqrt(F.lit(2.0) / (F.lit(9.0) * (k - 1)))
-    p = F.when(k == 2, p_1dof).otherwise(
-        F.lit(1.0) - normal_cdf(wh_z)
-    )
+    p = _chi2_upper_p(h_c, k)
     return gstat.crossJoin(F.broadcast(ties)).select(
         F.col("n").cast("long").alias("n"),
         F.col("k").cast("int").alias("k"),
-        F.round(h, round_to).alias("h"),
-        F.round(h_c, round_to).alias("h_corrected"),
-        F.round(p, round_to).alias("p_value"),
+        F.round(h, _DIGITS).alias("h"),
+        F.round(h_c, _DIGITS).alias("h_corrected"),
+        F.round(p, _DIGITS).alias("p_value"),
     )
 
 
@@ -1544,7 +1514,6 @@ def cochran_armitage(
     df: DataFrame,
     outcome_col: str,
     dose_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Cochran-Armitage trend test: is a binary outcome rate
     monotonically associated with an ORDERED exposure level? The
@@ -1602,11 +1571,11 @@ def cochran_armitage(
     return agg.select(
         F.col("n").cast("long").alias("n"),
         F.col("k").cast("int").alias("k"),
-        F.round(pbar, round_to).alias("rate"),
-        F.round(z, round_to).alias("z"),
+        F.round(pbar, _DIGITS).alias("rate"),
+        F.round(z, _DIGITS).alias("z"),
         F.round(
             F.lit(2.0) * (F.lit(1.0) - normal_cdf(F.abs(z))),
-            round_to,
+            _DIGITS,
         ).alias("p_value"),
     )
 
@@ -1616,7 +1585,6 @@ def mcnemar_test(
     first_col: str,
     second_col: str,
     continuity: bool = True,
-    round_to: int = 6,
 ) -> DataFrame:
     """McNemar's test for PAIRED binary outcomes — did the rate
     change between two measurements of the SAME subjects (before vs
@@ -1665,10 +1633,10 @@ def mcnemar_test(
         F.col("n").cast("long").alias("n"),
         F.col("b10").cast("long").alias("b"),
         F.col("c01").cast("long").alias("c"),
-        F.round(chi2, round_to).alias("chi2"),
+        F.round(chi2, _DIGITS).alias("chi2"),
         F.round(
             F.lit(2.0) * (F.lit(1.0) - normal_cdf(F.sqrt(chi2))),
-            round_to,
+            _DIGITS,
         ).alias("p_value"),
     )
 
@@ -1678,7 +1646,6 @@ def friedman_test(
     block_col: str,
     treatment_col: str,
     value_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Friedman test — the repeated-measures sibling of
     :func:`kruskal_wallis`: k treatments measured on the SAME blocks
@@ -1705,8 +1672,6 @@ def friedman_test(
     ``(n_blocks, k, q, p_value)`` — NULL statistics when every
     in-block ranking is fully tied (zero denominator) or k < 2.
     """
-    from mhm_data_pipelines_spark.functions.stats import normal_cdf
-
     base = (
         df.filter(
             F.col(block_col).isNotNull()
@@ -1762,19 +1727,12 @@ def friedman_test(
     )
     den = F.col("rr") - n * k * (k + 1) * (k + 1) / 4
     q = F.when((den > 0) & (k >= 2), num / den)
-    p_1dof = F.lit(2.0) * (F.lit(1.0) - normal_cdf(F.sqrt(q)))
-    wh_z = (
-        F.pow(q / (k - 1), F.lit(1.0) / F.lit(3.0))
-        - (F.lit(1.0) - F.lit(2.0) / (F.lit(9.0) * (k - 1)))
-    ) / F.sqrt(F.lit(2.0) / (F.lit(9.0) * (k - 1)))
-    p = F.when(k == 2, p_1dof).otherwise(
-        F.lit(1.0) - normal_cdf(wh_z)
-    )
+    p = _chi2_upper_p(q, k)
     return merged.select(
         F.col("n").cast("long").alias("n_blocks"),
         F.col("k").cast("int").alias("k"),
-        F.round(q, round_to).alias("q"),
-        F.round(p, round_to).alias("p_value"),
+        F.round(q, _DIGITS).alias("q"),
+        F.round(p, _DIGITS).alias("p_value"),
     )
 
 
@@ -1787,7 +1745,6 @@ def group_sequential_ztest(
     treatment,
     looks: int = 4,
     critical_c: float = 2.024,
-    round_to: int = 6,
 ) -> DataFrame:
     """Group-sequential two-proportion monitoring with an
     O'Brien-Fleming-shaped boundary — the interim-look discipline
@@ -1894,8 +1851,8 @@ def group_sequential_ztest(
         (F.col("cnt") + F.col("cnc")).cast("long").alias("n"),
         F.col("cnt").cast("long").alias("n_treat"),
         F.col("cnc").cast("long").alias("n_ctrl"),
-        F.round(z, round_to).alias("z"),
-        F.round(boundary, round_to).alias("boundary"),
+        F.round(z, _DIGITS).alias("z"),
+        F.round(boundary, _DIGITS).alias("boundary"),
         F.when(z.isNotNull(), F.abs(z) > boundary).alias("crossed"),
     ).orderBy("look")
 
@@ -1904,7 +1861,6 @@ def eb_rate_shrinkage(
     df: DataFrame,
     group_col: str,
     outcome_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Empirical-Bayes (beta-binomial) shrinkage of per-group rates —
     the standard fix for "this item has 1/1 = 100% CTR": fit a Beta
@@ -1962,9 +1918,9 @@ def eb_rate_shrinkage(
         F.col("g").alias(group_col),
         F.col("n").cast("long").alias("n"),
         F.col("s").cast("long").alias("s"),
-        F.round("rate", round_to).alias("rate"),
-        F.round(shrunk, round_to).alias("shrunk_rate"),
-        F.round(k, round_to).alias("prior_strength"),
+        F.round("rate", _DIGITS).alias("rate"),
+        F.round(shrunk, _DIGITS).alias("shrunk_rate"),
+        F.round(k, _DIGITS).alias("prior_strength"),
     )
 
 
@@ -1976,7 +1932,6 @@ def qini_curve(
     control,
     treatment,
     n_bins: int = 10,
-    round_to: int = 6,
 ) -> DataFrame:
     """Qini curve — the standard evaluation of an UPLIFT score
     (Radcliffe 2007): rank units by the model's score, and at each
@@ -2071,8 +2026,8 @@ def qini_curve(
         (F.col("cnt") + F.col("cnc")).cast("long").alias("n_cum"),
         F.col("cnt").cast("long").alias("n_treat_cum"),
         F.col("cnc").cast("long").alias("n_ctrl_cum"),
-        F.round(qini, round_to).alias("qini"),
-        F.round(rand, round_to).alias("random_line"),
+        F.round(qini, _DIGITS).alias("qini"),
+        F.round(rand, _DIGITS).alias("random_line"),
     ).orderBy("bin")
 
 
@@ -2081,7 +2036,6 @@ def wilson_ci(
     group_col: str,
     outcome_col: str,
     z: float = 1.959964,
-    round_to: int = 6,
 ) -> DataFrame:
     """Per-group binomial rates with WILSON score intervals — the
     interval every rate dashboard should use instead of the Wald
@@ -2124,12 +2078,12 @@ def wilson_ci(
         F.col("g").alias(group_col),
         F.col("n").cast("long").alias("n"),
         F.col("s").cast("long").alias("s"),
-        F.round(p, round_to).alias("rate"),
+        F.round(p, _DIGITS).alias("rate"),
         F.round(
-            F.greatest(center - half, F.lit(0.0)), round_to
+            F.greatest(center - half, F.lit(0.0)), _DIGITS
         ).alias("ci_low"),
         F.round(
-            F.least(center + half, F.lit(1.0)), round_to
+            F.least(center + half, F.lit(1.0)), _DIGITS
         ).alias("ci_high"),
     )
 
@@ -2140,7 +2094,6 @@ def cliffs_delta(
     group_col: str,
     group_a,
     group_b,
-    round_to: int = 6,
 ) -> DataFrame:
     """Cliff's delta — the nonparametric EFFECT SIZE companion of
     :func:`mann_whitney_u`: with U_a counting (a, b) pairs where a
@@ -2177,6 +2130,6 @@ def cliffs_delta(
     return u.select(
         "n_a",
         "n_b",
-        F.round(delta, round_to).alias("delta"),
+        F.round(delta, _DIGITS).alias("delta"),
         mag.alias("magnitude"),
     )

@@ -32,6 +32,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 
 def kaplan_meier(
     subjects: DataFrame,
@@ -140,7 +144,6 @@ def logrank_test(
     duration: str = "duration",
     event: str = "event",
     group_col: str = "group",
-    round_to: int = 6,
 ) -> DataFrame:
     """Two-group log-rank test (Mantel-Cox): does survival differ
     between cohorts ``group_a`` and ``group_b``? The censoring-aware
@@ -239,14 +242,14 @@ def logrank_test(
         F.col("n_a_subjects").alias("n_a"),
         F.col("n_b_subjects").alias("n_b"),
         F.col("o_a").alias("observed_a"),
-        F.round("e_a", round_to).alias("expected_a"),
+        F.round("e_a", _DIGITS).alias("expected_a"),
         F.col("o_b").alias("observed_b"),
-        F.round("e_b", round_to).alias("expected_b"),
-        F.round("variance", round_to).alias("variance"),
-        F.round(chi2, round_to).alias("chi2"),
+        F.round("e_b", _DIGITS).alias("expected_b"),
+        F.round("variance", _DIGITS).alias("variance"),
+        F.round(chi2, _DIGITS).alias("chi2"),
         F.round(
             F.lit(2.0) * (F.lit(1.0) - normal_cdf(F.sqrt(chi2))),
-            round_to,
+            _DIGITS,
         ).alias("p_value"),
     )
 
@@ -256,7 +259,6 @@ def nelson_aalen(
     duration: str = "duration",
     event: str = "event",
     group_cols: Sequence[str] = (),
-    round_to: int = 6,
 ) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimate — the additive
     companion of :func:`kaplan_meier`'s product-limit survival:
@@ -307,9 +309,9 @@ def nelson_aalen(
             "t",
             "n_at_risk",
             "n_events",
-            F.round("_h", round_to).alias("cum_hazard"),
-            F.round("_v", round_to).alias("hazard_var"),
-            F.round(F.exp(-F.col("_h")), round_to).alias(
+            F.round("_h", _DIGITS).alias("cum_hazard"),
+            F.round("_v", _DIGITS).alias("hazard_var"),
+            F.round(F.exp(-F.col("_h")), _DIGITS).alias(
                 "survival_na"
             ),
         )

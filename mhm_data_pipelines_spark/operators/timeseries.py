@@ -26,6 +26,10 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: Decimals of the rounded output columns. The registry oracles round
+#: to the same, so the two engines' results hash-match.
+_DIGITS = 6
+
 
 def gap_fill_daily(
     df: DataFrame,
@@ -748,7 +752,6 @@ def transition_matrix(
     order_cols: Sequence[str],
     state_col: str,
     keys: Sequence[str] = (),
-    round_to: int = 6,
 ) -> DataFrame:
     """First-order Markov transition matrix over per-entity event
     sequences: P(next_state | state) with exact integer counts — the
@@ -790,7 +793,7 @@ def transition_matrix(
         F.round(
             F.col("n").cast("double")
             / F.sum("n").over(per_state).cast("double"),
-            round_to,
+            _DIGITS,
         ).alias("p"),
     )
 
@@ -801,7 +804,6 @@ def rfm_scores(
     ts_col: str,
     value_col: str,
     n_tiles: int = 3,
-    round_to: int = 6,
 ) -> DataFrame:
     """RFM (recency / frequency / monetary) segmentation: per entity,
     days since last event, event count, and value total, each cut into
@@ -829,7 +831,7 @@ def rfm_scores(
     per_user = base.groupBy(e.alias("entity")).agg(
         F.max(F.unix_micros(F.col(ts_col))).alias("last_us"),
         F.count(F.lit(1)).alias("f"),
-        F.round(F.sum(F.col(value_col).cast("double")), round_to).alias(
+        F.round(F.sum(F.col(value_col).cast("double")), _DIGITS).alias(
             "m"
         ),
     )
@@ -841,7 +843,7 @@ def rfm_scores(
         F.round(
             (F.col("ref_us") - F.col("last_us"))
             / F.lit(86400000000.0),
-            round_to,
+            _DIGITS,
         ).alias("r_days"),
         "f",
         F.coalesce("m", F.lit(0.0)).alias("m"),
@@ -1930,7 +1932,6 @@ def funnel_latencies(
     ts_col: str = "ts",
     type_col: str = "event_type",
     within: str | None = None,
-    round_to: int = 6,
 ) -> DataFrame:
     """Step-transition latency readout over :func:`funnel_progress` —
     the "how long between steps" companion of the reached-count
@@ -1979,12 +1980,12 @@ def funnel_latencies(
         .agg(
             F.count(F.lit(1)).alias("n_converted"),
             F.round(
-                F.expr("percentile(lat_s, 0.5)"), round_to
+                F.expr("percentile(lat_s, 0.5)"), _DIGITS
             ).alias("p50_s"),
             F.round(
-                F.expr("percentile(lat_s, 0.9)"), round_to
+                F.expr("percentile(lat_s, 0.9)"), _DIGITS
             ).alias("p90_s"),
-            F.round(F.avg("lat_s"), round_to).alias("mean_s"),
+            F.round(F.avg("lat_s"), _DIGITS).alias("mean_s"),
         )
         .orderBy("pos")
         .drop("pos")
@@ -1996,7 +1997,6 @@ def fixed_effects_fit(
     y_col: str,
     x_col: str,
     entity_col: str,
-    round_to: int = 6,
 ) -> DataFrame:
     """Bivariate fixed-effects (within) regression — the panel-data
     workhorse: regress y on x with one intercept PER ENTITY absorbed,
@@ -2058,8 +2058,8 @@ def fixed_effects_fit(
     return agg.select(
         "n",
         "n_entities",
-        F.round(beta, round_to).alias("beta"),
-        F.round(r2, round_to).alias("r2_within"),
+        F.round(beta, _DIGITS).alias("beta"),
+        F.round(r2, _DIGITS).alias("r2_within"),
     )
 
 
@@ -2071,7 +2071,6 @@ def holt_backtest(
     train_frac: float = 0.8,
     alpha: float = 0.5,
     beta: float = 0.3,
-    round_to: int = 6,
 ) -> DataFrame:
     """Rolling-origin backtest of :func:`holt_trend` — does the
     smoother actually FORECAST this data? Per entity: the first
@@ -2145,13 +2144,13 @@ def holt_backtest(
             F.count(F.lit(1)).cast("long").alias("n_test"),
             F.round(
                 F.sum(ae).cast("double") / F.count(F.lit(1)),
-                round_to,
+                _DIGITS,
             ).alias("mae"),
             F.round(
                 F.sqrt(
                     F.sum(se).cast("double") / F.count(F.lit(1))
                 ),
-                round_to,
+                _DIGITS,
             ).alias("rmse"),
         )
         .select(

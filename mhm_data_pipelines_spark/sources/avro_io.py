@@ -49,6 +49,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 _MAGIC = b"Obj\x01"
+#: Rows per Avro block when a container is encoded.
+_ROWS_PER_BLOCK = 4096
 
 # ---------------------------------------------------------------- codec
 
@@ -369,7 +371,7 @@ def _parse_header(r: _Reader) -> tuple[dict, str, bytes]:
 
 def encode_container(
     rows, schema: T.StructType, codec: str = "deflate",
-    rows_per_block: int = 4096,
+    rows_per_block: int = _ROWS_PER_BLOCK,
 ) -> bytes:
     """Encode an iterable of dict rows into one complete Avro container
     (header + blocks + sync framing). Memory is block-bounded."""
@@ -431,8 +433,7 @@ def decode_container(buf: bytes) -> tuple[T.StructType, list[dict]]:
 
 
 def write_avro(
-    df: DataFrame, path: str, codec: str = "deflate",
-    rows_per_block: int = 4096,
+    df: DataFrame, path: str, codec: str = "deflate"
 ) -> list[dict]:
     """Distributed Avro container sink: one file per input partition,
     encoded task-side from Arrow batches (one Avro block per batch
@@ -469,8 +470,8 @@ def write_avro(
                 out = open(fname, "wb")
                 out.write(_container_header(avro_schema, codec, sync))
             recs = pdf.to_dict("records")
-            for i in range(0, len(recs), rows_per_block):
-                chunk = recs[i : i + rows_per_block]
+            for i in range(0, len(recs), _ROWS_PER_BLOCK):
+                chunk = recs[i : i + _ROWS_PER_BLOCK]
                 block = io.BytesIO()
                 for row in chunk:
                     enc(block, _clean(row))

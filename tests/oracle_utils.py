@@ -68,6 +68,12 @@ def compare_frames(got: pd.DataFrame, want: pd.DataFrame) -> None:
                 assert str(gv) == str(wv), f"row {i} col {c}: {gv!r} != {wv!r}"
 
 
+#: ``executedPlan().toString()`` of each registry frame that
+#: :func:`check_query` built, by ``(sf_dir, key)`` — test_plan_properties
+#: reads these instead of building every key a second time.
+PLANS: dict[tuple[str, str], str] = {}
+
+
 def check_query(spark, sf_dir: str, name: str) -> None:
     from mhm_data_pipelines_spark.benchmarks.registry import (
         ORACLES,
@@ -75,12 +81,17 @@ def check_query(spark, sf_dir: str, name: str) -> None:
         release_query_resources,
     )
 
+    release_query_resources()  # no earlier build's cache enters the plan
     try:
-        got = QUERIES[name](spark, sf_dir).toPandas()
+        frame = QUERIES[name](spark, sf_dir)
+        # The action below reuses this (lazily planned) physical plan.
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        got = frame.toPandas()
     finally:
         # Frames, scratch dirs and tables the builder registered are
         # only read by the now-materialized result.
         release_query_resources()
+    PLANS[sf_dir, name] = plan
     con = duck_connection(sf_dir)
     want = con.sql(ORACLES[name]).df()
     compare_frames(got, want)

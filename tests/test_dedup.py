@@ -283,16 +283,6 @@ def test_minhash_match_index_finds_cross_split_dups(docs, spark):
     # batch-internal and index-internal pairs never appear
     assert all(a >= 4 and b <= 3 for a, b in pairs)
 
-    # prune_index is a pure optimization: same result without it
-    no_prune = {
-        (r.id_new, r.id_index)
-        for r in minhash_match_index(
-            batch, index_sigs, num_hashes=32, bands=16,
-            threshold=0.5, prune_index=False,
-        ).collect()
-    }
-    assert pairs == no_prune
-
 
 def test_duplicate_ngram_spans_basic(spark):
     from mhm_data_pipelines_spark.operators.dedup import (

@@ -5,6 +5,11 @@ CartesianProduct anywhere, and BroadcastNestedLoopJoin only where the
 broadcast side is a provably tiny scalar aggregate (single-row
 broadcast — the scalar-subquery realization pattern). A new query that
 accidentally plans a cross product fails here before it ever ships.
+
+The plans are the ones test_oracle_parity built and executed at
+``SF`` earlier in the session (``oracle_utils.PLANS``); a key is built
+here only when that run did not record it (this file run on its own,
+or the parity run pointed at another scale).
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ import pytest
 
 from mhm_data_pipelines_spark.benchmarks import registry
 from mhm_data_pipelines_spark.benchmarks.registry import QUERIES
+from tests.oracle_utils import PLANS
 
 SF = "/root/testdata/sf0.001"
 
@@ -150,6 +156,9 @@ def test_allow_list_names_registry_keys():
     assert SINGLE_ROW_BROADCAST_OK <= set(QUERIES), (
         SINGLE_ROW_BROADCAST_OK - set(QUERIES)
     )
+    assert set(PLAN_BUDGETS) <= set(QUERIES), (
+        set(PLAN_BUDGETS) - set(QUERIES)
+    )
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -169,11 +178,12 @@ def test_no_cartesian_or_unexpected_nested_loop(spark, name):
 
 
 def _plan(spark, name: str) -> str:
+    if (SF, name) in PLANS:
+        return PLANS[SF, name]
     # Release builder-owned resources from earlier fingerprints (e.g.
     # q_minhash_incremental's tracked index persist) so a leftover cache
     # is never substituted as InMemoryTableScan into THIS query's plan
-    # and Exchange counts stay deterministic. (The LSH operators
-    # themselves are persist-free since r5 — ADVICE r4.)
+    # and Exchange counts stay deterministic.
     registry.release_query_resources()
     return (
         QUERIES[name](spark, SF)

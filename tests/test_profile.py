@@ -35,12 +35,9 @@ def test_profile_stats_and_top_values(spark, frame):
     assert out["id"].dtype == "bigint" and v.dtype == "double"
 
 
-def test_profile_column_subset_and_approx(spark, frame):
-    out = profile_table(
-        frame, columns=["s"], exact_distinct=False
-    ).collect()
+def test_profile_column_subset(spark, frame):
+    out = profile_table(frame, columns=["s"]).collect()
     assert len(out) == 1 and out[0].column == "s"
-    # HLL on 3 values is exact
     assert out[0].n_distinct == 3
 
 
